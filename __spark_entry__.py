@@ -4142,21 +4142,20 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _psql_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The live-PostgreSQL leg of ``q_stream_upsert_ingest``: each
-    micro-batch stages DISTRIBUTED — every executor partition COPYs in
-    parallel over the raw wire protocol into an UNLOGGED staging table
-    (``PgWireMergeSink``, streaming/pgwire.py), then one transaction runs
-    the DISTINCT ON + ON CONFLICT DO UPDATE merge — the reference's ingest
-    semantics (`fetchers/helpers/dbhelpers.py:34-132`) in the shape a
-    1000-executor cluster actually ships batches (since r6.2; the
-    single-writer psql twin remains parity-pinned in tests and serves DDL
-    + readback here). The returned relation is the resolved state read
-    back FROM Postgres via COPY TO — the correctness row certifies what
-    the database holds, not what Spark sent."""
+    """The live-PostgreSQL leg of ``q_stream_upsert_ingest``: one
+    ``PgWireMergeSink`` (streaming/pgwire.py) creates the table, merges
+    and reads back. Each micro-batch stages DISTRIBUTED — every executor
+    partition COPYs in parallel over the raw wire protocol into an
+    UNLOGGED staging table — then one transaction runs the DISTINCT ON +
+    ON CONFLICT DO UPDATE merge — the reference's ingest semantics
+    (`fetchers/helpers/dbhelpers.py:34-132`) in the shape a 1000-executor
+    cluster actually ships batches. The returned relation is the resolved
+    state read back FROM Postgres via COPY TO — the correctness row
+    certifies what the database holds, not what Spark sent."""
     import hashlib
     import tempfile
 
-    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink, PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
     from coin_for_rich_spark.streaming.pgserver import ephemeral_pg
 
     conninfo = ephemeral_pg()
@@ -4165,21 +4164,18 @@ def _psql_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _staged_stream(spark, sf_dir)
     schema = stream.schema
     table = f"cfr_upsert_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    pk = ("user_id", "event_type")
-    psql = PsqlCopyMergeSink(
-        conninfo, table, pk=pk, mode="upsert", tiebreak_col="ts"
+    sink = PgWireMergeSink(
+        conninfo, table, pk=("user_id", "event_type"), mode="upsert",
+        tiebreak_col="ts",
     )
-    wire = PgWireMergeSink(
-        conninfo, table, pk=pk, mode="upsert", tiebreak_col="ts"
-    )
-    psql.create_table(schema, drop=True)
+    sink.create_table(schema, drop=True)
     run_ingest(
         stream,
-        wire,
+        sink,
         tempfile.mkdtemp(prefix="cfr_ckpt_"),
         state_partitions=_STREAM_STATE_PARTITIONS,
     )
-    return psql.read(spark, schema)
+    return sink.read(spark, schema)
 
 
 def q_stream_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

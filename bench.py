@@ -163,7 +163,9 @@ def main() -> int:
                 "n": n_passes,
                 "loadavg": [load1, load5, load15],
                 "settled_s": settled_s,
-                "cpus": os.cpu_count(),
+                # the parallelism the session really runs with, not the
+                # host's core count (they differ under SPARK_GRAFT_CPUS)
+                "cpus": spark.sparkContext.defaultParallelism,
                 "probe_pre": probe_pre,
                 "probe_post": probe_post,
                 "value_per_shuffle_unit": norm,

@@ -22,10 +22,15 @@ from ..functions.partitioning import ensure_parallelism
 from .dedup import _INTERMEDIATE_CACHES
 from .textstats import tokenize
 
+# ONE default sample geometry for hash_sample and its predicate: the
+# predicate's complement only stays the sample's complement while the two
+# defaults agree
+_DEFAULT_HEX_CHARS: tuple[str, ...] = ("0",)
+
 
 def hash_sample_predicate(
     id_col: str = "doc_id",
-    hex_chars: tuple[str, ...] = ("0",),
+    hex_chars: tuple[str, ...] = _DEFAULT_HEX_CHARS,
 ) -> Column:
     """THE membership predicate behind :func:`hash_sample` — exposed so a
     caller that needs the sample's COMPLEMENT can filter on ``~coalesce(
@@ -39,7 +44,7 @@ def hash_sample_predicate(
 def hash_sample(
     docs: DataFrame,
     id_col: str = "doc_id",
-    hex_chars: tuple[str, ...] = ("0",),
+    hex_chars: tuple[str, ...] = _DEFAULT_HEX_CHARS,
 ) -> DataFrame:
     """Deterministic content-free sampling: keep a row iff the first hex
     character of md5(id) is in ``hex_chars`` — each char selects 1/16 of the

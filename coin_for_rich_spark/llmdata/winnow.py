@@ -319,12 +319,15 @@ def winnow_overlap_pairs(
     # evaluated the md5 selection TWICE per document (two ArrowEvalPython
     # nodes — guide §4.4; measured r16: postings stage 1.30 → 0.55 s).
     id_type = docs.schema[id_col].dataType.simpleString()
+    # backtick-quoted: a DDL string reparses the name, so a space, hyphen or
+    # reserved word in it would otherwise fail to parse
+    id_ddl = "`" + id_col.replace("`", "``") + "`"
     fpd = (
         ensure_parallelism(docs.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), tokenize(text_col).alias("__toks"))
         .mapInPandas(
             _fp_postings_fused(k, w, id_col),
-            f"{id_col} {id_type}, n_fp int, fp bigint",
+            f"{id_ddl} {id_type}, n_fp int, fp bigint",
         )
         .repartition(F.col("fp"))
     )

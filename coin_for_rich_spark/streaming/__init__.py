@@ -16,7 +16,7 @@ from .corpus import (
     streaming_corpus_ingest,
 )
 from .dedupe import exactly_once_dedup
-from .jdbc import JdbcMergeSink, PgWireMergeSink, PsqlCopyMergeSink, upsert_sql
+from .jdbc import PgWireMergeSink, upsert_sql
 from .latest import latest_value_serve
 from .rollup import CONAGG_POLICIES, streaming_ohlcv_rollup
 from .sessions import streaming_sessionize
@@ -26,10 +26,8 @@ from .source import candle_stream, format_wire_candles, stage_stream_chunks, par
 __all__ = [
     "CONAGG_POLICIES",
     "exactly_once_dedup",
-    "JdbcMergeSink",
     "PgWireMergeSink",
     "ParquetMergeSink",
-    "PsqlCopyMergeSink",
     "upsert_sql",
     "candle_stream",
     "latest_value_serve",

@@ -1,46 +1,29 @@
-"""JDBC upsert sink: the TimescaleDB/PostgreSQL north-star backend (S5/S7).
+"""PostgreSQL/TimescaleDB merge sink: the north-star backend (S5/S7).
 
-Reference parity: candle batches land in Postgres via CSV COPY with an
-``INSERT ... ON CONFLICT DO NOTHING | DO UPDATE`` fallback
+Reference parity: candle batches land in Postgres via COPY with an
+``INSERT ... ON CONFLICT DO NOTHING | DO UPDATE`` merge
 (`fetchers/helpers/dbhelpers.py:34-132`, templates
 `fetchers/config/queries.py:4,12-15`). The driver-defined target approach is
 "Structured Streaming + PostgreSQL/TimescaleDB sink" (BASELINE.json), so
-this sink is the production twin of ``ParquetMergeSink``: identical
-``merge(batch, batch_id)`` interface, pluggable into ``run_ingest``.
+``PgWireMergeSink`` is the production twin of ``ParquetMergeSink``:
+identical ``merge(batch, batch_id)`` interface, pluggable into
+``run_ingest``.
 
-Mechanics per micro-batch (the standard scale-out JDBC upsert shape):
-1. executors write the batch to a staging table with Spark's parallel JDBC
-   writer (``batchsize`` rows per round-trip, one connection per partition);
-2. the driver issues ONE set-based ``INSERT ... SELECT ... ON CONFLICT``
-   from staging into the target — the merge runs inside the database, which
-   is the only place it can be transactional for an external store;
-3. staging is truncated for the next batch.
-
-Three concrete sinks share the merge statement:
-
-- ``JdbcMergeSink`` — executors stage the batch over parallel JDBC
-  connections, the driver issues the set-based merge. Needs the PostgreSQL
-  driver jar on the Spark classpath, which this container does not ship,
-  so it stays unit-tested at the SQL layer.
-- ``PsqlCopyMergeSink`` — the reference's own mechanics (CSV COPY + ON
-  CONFLICT, `dbhelpers.py:34-132`) through the ``psql`` client in one
-  transaction per micro-batch. The container ships psql and the server
-  binaries, so THIS twin is integration-tested against a real PostgreSQL
-  end-to-end (tests/test_postgres_sink.py), closing the north-star-sink
-  execution gap at the semantics level. Single-writer by construction.
-- ``PgWireMergeSink`` — the scale-out shape WITHOUT a driver jar: every
-  executor COPYs its own partition in parallel into an UNLOGGED staging
-  table over the raw v3 wire protocol (``streaming/pgwire.py``, pure
-  stdlib), then the driver runs one merge+cleanup transaction. Also
-  integration-tested against the live server, including parity with the
-  single-writer twin.
+One sink, one client. Per micro-batch, executors COPY their partitions in
+parallel into an UNLOGGED staging table over the raw v3 wire protocol
+(``streaming/pgwire.py``, pure stdlib); the driver then issues ONE
+set-based ``INSERT ... SELECT ... ON CONFLICT`` + staging drop in one
+transaction — the merge runs inside the database, the only place it can be
+transactional for an external store. Table DDL (``create_table``) and the
+resolved-state readback (``read``, ``COPY ... TO STDOUT``) go through the
+same client. Integration-tested against a live PostgreSQL
+(tests/test_postgres_sink.py).
 """
 
 from __future__ import annotations
 
 import datetime
 import math
-import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -231,61 +214,6 @@ def pg_dedup_order(
     ]
 
 
-class JdbcMergeSink:
-    """PK-merge sink into a JDBC-reachable PostgreSQL/TimescaleDB table.
-
-    Same contract as ``ParquetMergeSink``: pass ``sink.merge`` to
-    ``writeStream.foreachBatch`` (see streaming.sink.run_ingest). Requires
-    the PostgreSQL JDBC driver on the Spark classpath.
-    """
-
-    def __init__(
-        self,
-        url: str,
-        table: str,
-        pk: tuple[str, ...],
-        mode: str = "ignore",
-        properties: dict[str, str] | None = None,
-        staging_table: str | None = None,
-        batchsize: int = 10_000,
-    ) -> None:
-        upsert_sql(table, "staging", ["_probe"], list(pk), mode)  # validate mode
-        self.url = url
-        self.table = table
-        self.pk = list(pk)
-        self.mode = mode
-        self.properties = {"driver": "org.postgresql.Driver", **(properties or {})}
-        self.staging = staging_table or f"{table}__staging"
-        self.batchsize = batchsize
-
-    def _execute(self, spark, sql: str) -> None:
-        jvm = spark._jvm  # noqa: SLF001 — JDBC DDL/DML needs a raw connection
-        props = jvm.java.util.Properties()
-        for k, v in self.properties.items():
-            props.setProperty(k, v)
-        conn = jvm.java.sql.DriverManager.getConnection(self.url, props)
-        try:
-            st = conn.createStatement()
-            st.execute(sql)
-            st.close()
-        finally:
-            conn.close()
-
-    def merge(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        # 1. parallel staging write (executors, batched round-trips)
-        (
-            batch.write.mode("overwrite")
-            .option("batchsize", str(self.batchsize))
-            .option("truncate", "true")
-            .jdbc(self.url, self.staging, properties=self.properties)
-        )
-        # 2. one transactional set-based merge inside the database
-        self._execute(
-            spark, upsert_sql(self.table, self.staging, batch.columns, self.pk, self.mode)
-        )
-
-
 def _utc_wall_clock(v):
     """Naive/aware datetime → naive UTC wall clock (identity on all other
     values). Applied on whichever host encodes the row — driver or executor
@@ -309,7 +237,7 @@ def pg_text_value(v) -> str:
     Text format (not CSV) is deliberate — it is collision-free by
     construction where the CSV form has three lurking bugs: a string value
     equal to the NULL token reads back as NULL, a quoted value containing a
-    ``\\.`` line ends psql's inline COPY early, and pandas' ``to_csv``
+    ``\\.`` line ends the COPY stream early, and pandas' ``to_csv``
     coerces nullable int columns to float ('5.0' fails integer COPY).
     Escaping makes all of those representable: a literal backslash-dot
     ships as ``\\\\.``, a literal ``\\N`` as ``\\\\N``."""
@@ -335,206 +263,18 @@ def pg_text_value(v) -> str:
         # fails opaquely inside the transaction or silently stores garbage
         # in a text column. Fail loud at the sink boundary instead.
         raise TypeError(
-            "array/map/struct values are not supported by the psql COPY "
+            "array/map/struct values are not supported by the PostgreSQL COPY "
             f"sink (got {type(v).__name__}); serialize the column to a "
             "scalar (e.g. to_json) before the sink"
         )
     return str(v).translate(_PG_TEXT_ESCAPES)
 
 
-class PsqlCopyMergeSink:
-    """PK-merge sink into a real PostgreSQL/TimescaleDB via the ``psql``
-    client — the reference's exact ingest mechanics (COPY into the
-    table with an ``ON CONFLICT`` fallback, `fetchers/helpers/dbhelpers.py:
-    34-132`) with the same ``merge(batch, batch_id)`` contract as
-    ``ParquetMergeSink`` / ``JdbcMergeSink`` (pluggable into
-    ``run_ingest``).
-
-    Per micro-batch, ONE psql invocation runs ONE transaction::
-
-        BEGIN;
-        CREATE TEMP TABLE <stg> (LIKE <target> INCLUDING DEFAULTS)
-            ON COMMIT DROP;
-        COPY <stg> (cols) FROM STDIN;   -- text format, see pg_text_value
-        ...batch rows...
-        \\.
-        INSERT INTO <target> SELECT DISTINCT ON (pk) ...
-            ON CONFLICT (pk) DO NOTHING | DO UPDATE SET ...;
-        COMMIT;
-
-    A failed batch leaves nothing behind (temp staging drops with its
-    transaction); a replayed batch is a no-op ('ignore') or a same-value
-    overwrite ('upsert') — the parquet twin's exactly-once posture, now
-    transactional because the merge runs inside the database. Within-batch
-    duplicate PKs resolve deterministically via ``DISTINCT ON`` over the
-    shared ``within_batch_order`` rule (streaming.sink) — byte-for-byte
-    the ordering ``ParquetMergeSink`` resolves with, pinned by the
-    twin-parity capstone test.
-
-    The batch ships through the driver (collected Rows → COPY text on
-    stdin): a single-writer COPY is the reference writer's own shape and
-    the right one for an external single-endpoint database;
-    ``JdbcMergeSink`` remains the distributed-staging alternative when a
-    driver jar is available. Micro-batches are bounded by the trigger
-    interval, so the driver hop is O(batch), never O(table).
-    """
-
-    def __init__(
-        self,
-        conninfo: list[str],
-        table: str,
-        pk: tuple[str, ...],
-        mode: str = "ignore",
-        tiebreak_col: str | None = None,
-        psql: str = "psql",
-    ) -> None:
-        upsert_sql(table, "_probe_stg", ["_probe"], list(pk), mode)  # validate
-        self.conninfo = list(conninfo)
-        self.table = table
-        self.pk = list(pk)
-        self.mode = mode
-        self.tiebreak_col = tiebreak_col
-        self.psql = psql
-        self.staging = f"_cfr_stage_{table.rsplit('.', 1)[-1]}"
-
-    def _dedup_order(self, columns: list[str]) -> list[str]:
-        return pg_dedup_order(self.mode, self.pk, self.tiebreak_col, columns)
-
-    @staticmethod
-    def _exact_rows(batch: DataFrame):
-        """Exact-typed row iterator for COPY encoding — collected Rows, NOT
-        toPandas (pandas coerces nullable int columns to float64; '5.0'
-        fails integer COPY) and NOT toArrow().to_pylist() (measured ~2×
-        slower warm: materializing 10⁵ session-tz-aware datetime objects
-        costs more than Row pickling saves).
-
-        Timestamps are normalized to the naive UTC wall clock before
-        encoding (Rows carry naive system-local datetimes), so the
-        PostgreSQL ``timestamp`` column stores UTC regardless of the driver
-        host's timezone — the same session contract the rest of the engine
-        pins; ``read`` reverses it."""
-        return (
-            tuple(_utc_wall_clock(v) for v in row) for row in batch.collect()
-        )
-
-    def merge(self, batch: DataFrame, batch_id: int) -> None:
-        columns = batch.columns
-        data = "".join(
-            "\t".join(pg_text_value(v) for v in row) + "\n"
-            for row in self._exact_rows(batch)
-        )
-        if not data:
-            return  # foreachBatch delivers empty batches; nothing to merge
-        merge_stmt = upsert_sql(
-            self.table,
-            self.staging,
-            columns,
-            self.pk,
-            self.mode,
-            dedup_order=self._dedup_order(columns),
-        )
-        script = (
-            "BEGIN;\n"
-            f"CREATE TEMP TABLE {self.staging} "
-            f"(LIKE {self.table} INCLUDING DEFAULTS) ON COMMIT DROP;\n"
-            f"COPY {self.staging} ({', '.join(columns)}) FROM STDIN;\n"
-            f"{data}\\.\n"
-            f"{merge_stmt};\n"
-            "COMMIT;\n"
-        )
-        proc = subprocess.run(
-            [self.psql, "-X", "-q", "-v", "ON_ERROR_STOP=1", *self.conninfo],
-            input=script.encode(),
-            capture_output=True,
-            cwd="/",
-        )
-        if proc.returncode != 0:
-            raise RuntimeError(
-                f"psql merge of batch {batch_id} into {self.table} failed "
-                f"(rc={proc.returncode}): "
-                + proc.stderr.decode(errors="replace").strip()
-            )
-
-    def _run_psql(self, script: str) -> bytes:
-        proc = subprocess.run(
-            [self.psql, "-X", "-q", "-v", "ON_ERROR_STOP=1", *self.conninfo],
-            input=script.encode(),
-            capture_output=True,
-            cwd="/",
-        )
-        if proc.returncode != 0:
-            raise RuntimeError(
-                f"psql against {self.table} failed (rc={proc.returncode}): "
-                + proc.stderr.decode(errors="replace").strip()
-            )
-        return proc.stdout
-
-    def create_table(
-        self, schema, drop: bool = False, hypertable_time_col: str | None = None
-    ) -> None:
-        """Create the target table from a Spark schema with the sink's PK
-        (composite PRIMARY KEY backs ON CONFLICT); ``drop=True`` first
-        drops any previous incarnation — the reset a re-run query wants.
-        ``hypertable_time_col`` additionally runs the guarded TimescaleDB
-        conversion (:func:`hypertable_ddl`) — a no-op unless the extension
-        is INSTALLED in the database, the reference's hypertable where it
-        is."""
-        ddl = pg_ddl(self.table, schema, self.pk)
-        pre = f"DROP TABLE IF EXISTS {self.table};\n" if drop else ""
-        post = (
-            "\n" + hypertable_ddl(self.table, hypertable_time_col, self.pk)
-            if hypertable_time_col
-            else ""
-        )
-        self._run_psql(f"{pre}{ddl};{post}\n")
-
-    def read(self, spark: SparkSession, schema) -> DataFrame:
-        """Resolved table state read back FROM PostgreSQL as a DataFrame —
-        the twin of ``ParquetMergeSink.read``, so a correctness gate can
-        certify what the database actually holds, not what was sent to it.
-
-        Transport is ``COPY ... TO STDOUT`` (text format): the exact
-        inverse of the write path, with ``\\N`` NULLs and backslash
-        escapes, so values round-trip losslessly where psql's tabular
-        output would be ambiguous. ``extra_float_digits = 3`` pins
-        shortest-exact float output; timestamps are µs ISO text both ways.
-        Driver-side O(result) by design: one external single-endpoint
-        database is read by one client, same as the write side.
-        """
-        cols = ", ".join(f.name for f in schema.fields)
-        out = self._run_psql(
-            "SET extra_float_digits = 3;\n"
-            f"COPY (SELECT {cols} FROM {self.table}) TO STDOUT;\n"
-        )
-        utc = datetime.timezone.utc
-
-        def parse(tok: str, dtype):
-            v = pg_text_parse(tok, dtype)
-            # the table stores the UTC wall clock (see _exact_rows); attach
-            # UTC so createDataFrame's interpretation is system-tz
-            # independent, mirroring the write-side normalization
-            if isinstance(v, datetime.datetime) and isinstance(
-                dtype, T.TimestampType
-            ):
-                return v.replace(tzinfo=utc)
-            return v
-
-        rows = [
-            tuple(
-                parse(tok, f.dataType)
-                for tok, f in zip(line.split("\t"), schema.fields)
-            )
-            for line in out.decode().split("\n")
-            if line
-        ]
-        return spark.createDataFrame(rows, schema)
-
-
 class PgWireMergeSink:
     """Distributed-staging PK-merge into PostgreSQL over the raw wire
-    protocol (``streaming/pgwire.py``) — the scale-out twin of
-    ``PsqlCopyMergeSink`` with the same ``merge(batch, batch_id)`` contract
-    and the same within-batch winner rule.
+    protocol (``streaming/pgwire.py``), with the same ``merge(batch,
+    batch_id)`` contract and within-batch winner rule as
+    ``ParquetMergeSink``.
 
     Per micro-batch:
 
@@ -542,10 +282,9 @@ class PgWireMergeSink:
        UNLOGGED skips WAL (the data is transient by design and a crash
        truncates it, which is exactly the semantics staging wants);
     2. executors: ``foreachPartition`` — each non-empty partition opens one
-       wire connection and COPYs its rows (text format, identical
-       ``pg_text_value`` encoding and UTC wall-clock normalization as the
-       psql twin). N partitions stage in parallel; the driver never sees a
-       row;
+       wire connection and COPYs its rows (text format, ``pg_text_value``
+       encoding of the UTC wall clock). N partitions stage in parallel; the
+       driver never sees a row;
     3. driver: ONE transaction — ``INSERT ... SELECT DISTINCT ON (pk) ...
        ON CONFLICT`` + ``DROP`` of staging. The merge is atomic; a failure
        anywhere leaves the target untouched and the next attempt recreates
@@ -554,13 +293,14 @@ class PgWireMergeSink:
     Task-retry safety: a retried partition re-COPYs the same rows, so
     staging may hold EXACT duplicates; ``DISTINCT ON`` collapses them (ties
     between identical rows are indistinguishable), so the merged result is
-    retry-invariant. Batch replay is idempotent exactly as in the twins.
+    retry-invariant. Batch replay is idempotent: a no-op for 'ignore', a
+    same-value overwrite for 'upsert'.
 
     Concurrency contract: ONE writer per target table at a time — the
     staging name is derived from the target, so two queries merging into
     the same table concurrently would trample each other's staging
     (foreachBatch serializes batches within a query, which is the intended
-    deployment; the psql twin's TEMP staging is session-scoped and immune).
+    deployment).
     Crash leftovers are handled by the ``DROP TABLE IF EXISTS`` that opens
     every merge.
     """
@@ -707,3 +447,66 @@ class PgWireMergeSink:
             c.query(
                 f"BEGIN; {merge_stmt}; DROP TABLE {staging}; COMMIT;"
             )
+
+    def create_table(
+        self, schema, drop: bool = False, hypertable_time_col: str | None = None
+    ) -> None:
+        """Create the target table from a Spark schema with the sink's PK
+        (composite PRIMARY KEY backs ON CONFLICT); ``drop=True`` first
+        drops any previous incarnation — the reset a re-run query wants.
+        ``hypertable_time_col`` additionally runs the guarded TimescaleDB
+        conversion (:func:`hypertable_ddl`) — a no-op unless the extension
+        is INSTALLED in the database, the reference's hypertable where it
+        is. One simple-query message, so the statements apply atomically."""
+        from .pgwire import PgWireClient
+
+        pre = f"DROP TABLE IF EXISTS {self.table}; " if drop else ""
+        post = (
+            "; " + hypertable_ddl(self.table, hypertable_time_col, self.pk)
+            if hypertable_time_col
+            else ""
+        )
+        with PgWireClient(**self.params) as c:
+            c.query(f"{pre}{pg_ddl(self.table, schema, self.pk)}{post}")
+
+    def read(self, spark: SparkSession, schema) -> DataFrame:
+        """Resolved table state read back FROM PostgreSQL as a DataFrame —
+        the twin of ``ParquetMergeSink.read``, so a correctness gate can
+        certify what the database actually holds, not what was sent to it.
+
+        Transport is ``COPY ... TO STDOUT`` (text format): the exact
+        inverse of the write path, with ``\\N`` NULLs and backslash
+        escapes, so values round-trip losslessly. ``extra_float_digits = 3``
+        pins shortest-exact float output; timestamps are µs ISO text both
+        ways. Driver-side O(result) by design: a correctness readback, not
+        a serving path.
+        """
+        from .pgwire import PgWireClient
+
+        cols = ", ".join(f.name for f in schema.fields)
+        with PgWireClient(**self.params) as c:
+            c.query("SET extra_float_digits = 3")
+            out = c.copy_out(f"COPY (SELECT {cols} FROM {self.table}) TO STDOUT")
+        utc = datetime.timezone.utc
+
+        def parse(tok: str, dtype):
+            v = pg_text_parse(tok, dtype)
+            # the table stores the UTC wall clock (see _utc_wall_clock);
+            # attach UTC so createDataFrame's interpretation is system-tz
+            # independent, mirroring the write-side normalization
+            if isinstance(v, datetime.datetime) and isinstance(
+                dtype, T.TimestampType
+            ):
+                return v.replace(tzinfo=utc)
+            return v
+
+        rows = [
+            tuple(
+                parse(tok, f.dataType)
+                for tok, f in zip(line.split("\t"), schema.fields)
+            )
+            # every row ends in a newline; [:-1] drops only the tail, so a
+            # row that is one empty string still reads back
+            for line in out.decode().split("\n")[:-1]
+        ]
+        return spark.createDataFrame(rows, schema)

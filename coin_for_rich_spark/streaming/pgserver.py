@@ -1,4 +1,4 @@
-"""Ephemeral single-node PostgreSQL for the psql COPY merge sink.
+"""Ephemeral single-node PostgreSQL for the wire-protocol merge sink.
 
 The reference's production sink is PostgreSQL/TimescaleDB; this module lets
 the engine EXECUTE that sink wherever a server can run, instead of only
@@ -42,8 +42,9 @@ def _pg_binary(name: str) -> str | None:
 
 def pg_runnable() -> bool:
     """True iff this environment can boot a scratch PostgreSQL: root (to
-    runuser down to ``postgres``), client + server binaries present, and a
-    ``postgres`` system user to own the data directory."""
+    runuser down to ``postgres``), client + server binaries present (the
+    test suites' SQL helpers drive ``psql``), and a ``postgres`` system
+    user to own the data directory."""
     if os.geteuid() != 0:
         return False
     if not (shutil.which("runuser") and shutil.which("psql")):

@@ -1,16 +1,14 @@
 """Minimal PostgreSQL v3 wire-protocol client — pure stdlib, no driver.
 
-Exists for ONE reason: distributed staging. The ``psql``-subprocess sink
-(`jdbc.PsqlCopyMergeSink`) is a single writer by construction — the batch
-funnels through the driver. At ingest rates where that hop matters, the
-right shape is the one every production Spark→PostgreSQL pipeline uses:
-every executor COPYs its own partition into an UNLOGGED staging table in
-parallel, then the driver runs ONE set-based merge transaction. No JDBC
-driver jar ships in this environment and executors can't usefully shell out
-to psql per partition, so the sink speaks the wire protocol directly: the
-startup handshake, the simple-query cycle, and COPY-IN streaming are ~200
-lines of framing (public protocol, documented in the PostgreSQL manual,
-"Frontend/Backend Protocol").
+The engine's one PostgreSQL transport: ``PgWireMergeSink`` stages, merges,
+creates its table and reads it back through this client. Staging is
+distributed — every executor COPYs its own partition into an UNLOGGED
+staging table in parallel, then the driver runs ONE set-based merge
+transaction — so the transport has to work from inside executor tasks with
+no JDBC driver jar and no client binary. It speaks the wire protocol
+directly: the startup handshake, the simple-query cycle, and COPY-IN /
+COPY-OUT streaming are ~200 lines of framing (public protocol, documented
+in the PostgreSQL manual, "Frontend/Backend Protocol").
 
 Scope, honestly: trust authentication only (password/SASL raise — the
 ephemeral in-repo server and typical CI sidecars run trust; a production
@@ -34,11 +32,10 @@ def conninfo_params(conninfo: list[str]) -> dict[str, str]:
     argument convention the engine's sinks share into wire-client kwargs.
 
     Long-form flags (``--host=x``) and one positional dbname (psql accepts
-    it, so the subprocess twin would) are understood too; anything ELSE is
-    a hard error — a silently-dropped ``--user=ingest`` would make the
-    wire sink merge into ``postgres``/``postgres`` while the psql twin
-    writes where the caller intended, a data-placement divergence no error
-    message ever surfaces."""
+    it) are understood too; anything ELSE is a hard error — a
+    silently-dropped ``--user=ingest`` would make the sink merge into
+    ``postgres``/``postgres`` instead of where the caller intended, a
+    data-placement error no message ever surfaces."""
     out: dict[str, str] = {}
     flags = {"-h": "host", "-U": "user", "-d": "database", "-p": "port"}
     long_flags = {
@@ -199,7 +196,8 @@ class PgWireClient:
                 # (G) or silently return zero rows (H) — fail fast and
                 # loudly toward the right entry point
                 raise PgError(
-                    "COPY statements must go through copy_in(), not query()"
+                    "COPY statements must go through copy_in() or "
+                    "copy_out(), not query()"
                 )
             elif typ == b"Z":
                 if err is not None:
@@ -259,6 +257,29 @@ class PgWireClient:
                 if err is not None:
                     raise PgError(err) from data_exc
                 return tag
+
+    def copy_out(self, copy_sql: str) -> bytes:
+        """``COPY ... TO STDOUT``; returns the concatenated text-format
+        payload. Errors drain to ReadyForQuery before raising, as in
+        ``copy_in``, so the connection stays usable."""
+        self._send(b"Q", copy_sql.encode() + b"\x00")
+        out = bytearray()
+        err: str | None = None
+        while True:
+            typ, body = self._read_message()
+            if typ == b"d":
+                out += body
+            elif typ == b"G":
+                # a COPY FROM STDIN sent here: refuse the data phase so the
+                # server answers with an error instead of waiting forever
+                self._send(b"f", b"copy_out() cannot feed COPY FROM STDIN\x00")
+            elif typ == b"E":
+                err = self._error_fields(body)
+            elif typ == b"Z":
+                if err is not None:
+                    raise PgError(err)
+                return bytes(out)
+            # 'H' CopyOutResponse, 'c' CopyDone, 'C' tag, 'N' notices: skipped
 
     def close(self) -> None:
         try:

@@ -47,7 +47,7 @@ def within_batch_order(
     wins), then the remaining non-PK columns ascending by name, so rows
     tied on the tiebreak resolve identically on every backend and every
     read. ONE definition on purpose: ParquetMergeSink's merge-on-read
-    window and PsqlCopyMergeSink's DISTINCT ON must stay twins, and two
+    window and PgWireMergeSink's DISTINCT ON must stay twins, and two
     hand-kept copies of this rule would silently diverge."""
     asc = mode == "ignore"
     order: list[tuple[str, bool]] = []

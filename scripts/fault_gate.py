@@ -35,7 +35,9 @@ Scenarios:
   duplicates; the merge's ``DISTINCT ON`` must collapse them and the
   final PostgreSQL table must be row-identical to a clean ingest into a
   separate table. Attempt markers prove the first attempt completed its
-  COPY before dying (the duplicate really was staged).
+  COPY before dying (the duplicate really was staged). Here and in
+  ``foreachbatch_replay`` one wire sink per leg creates the table, merges,
+  and reads the final state back over ``COPY ... TO STDOUT``.
 - ``foreachbatch_replay`` — the OTHER at-least-once seam: the driver
   crashes AFTER a micro-batch's merge transaction committed to
   PostgreSQL but BEFORE Spark records the batch's offset commit (a
@@ -173,10 +175,7 @@ def scenario_fetch_mapinpandas(spark, sf_dir: str) -> dict:
 
 
 def scenario_pgwire_copy_retry(spark, sf_dir: str) -> dict:
-    from coin_for_rich_spark.streaming.jdbc import (
-        PgWireMergeSink,
-        PsqlCopyMergeSink,
-    )
+    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
     from coin_for_rich_spark.streaming.pgserver import ephemeral_pg
     from coin_for_rich_spark.streaming.sink import run_ingest
 
@@ -189,14 +188,11 @@ def scenario_pgwire_copy_retry(spark, sf_dir: str) -> dict:
     pk = ("user_id", "event_type")
     results = {}
     for leg, fault in (("clean", False), ("faulted", True)):
-        table = f"cfr_fault_{leg}"
-        ddl = PsqlCopyMergeSink(
-            conninfo, table, pk=pk, mode="upsert", tiebreak_col="ts"
-        )
-        ddl.create_table(schema, drop=True)
         sink = PgWireMergeSink(
-            conninfo, table, pk=pk, mode="upsert", tiebreak_col="ts"
+            conninfo, f"cfr_fault_{leg}", pk=pk, mode="upsert",
+            tiebreak_col="ts",
         )
+        sink.create_table(schema, drop=True)
         if fault:
             # post-COPY: the task dies AFTER its staging rows committed,
             # so the retry re-COPYs and staging holds exact duplicates
@@ -209,7 +205,7 @@ def scenario_pgwire_copy_retry(spark, sf_dir: str) -> dict:
             tempfile.mkdtemp(prefix="cfr_fault_ckpt_"),
             state_partitions=entry_mod._STREAM_STATE_PARTITIONS,
         )
-        results[leg] = ddl.read(spark, schema)
+        results[leg] = sink.read(spark, schema)
     out = _verdict("pgwire_copy_retry", results["clean"], results["faulted"])
     # the duplicate really was staged: attempt 0 wrote its marker (i.e. its
     # COPY had already committed) before raising, and attempt >= 1 ran
@@ -221,10 +217,7 @@ def scenario_pgwire_copy_retry(spark, sf_dir: str) -> dict:
 def scenario_foreachbatch_replay(spark, sf_dir: str) -> dict:
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from coin_for_rich_spark.streaming.jdbc import (
-        PgWireMergeSink,
-        PsqlCopyMergeSink,
-    )
+    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
     from coin_for_rich_spark.streaming.pgserver import ephemeral_pg
     from coin_for_rich_spark.streaming.sink import run_ingest
 
@@ -259,14 +252,11 @@ def scenario_foreachbatch_replay(spark, sf_dir: str) -> dict:
     results = {}
     replay_proof = {}
     for leg in ("clean", "replayed"):
-        table = f"cfr_replay_{leg}"
-        ddl = PsqlCopyMergeSink(
-            conninfo, table, pk=pk, mode="upsert", tiebreak_col="ts"
-        )
-        ddl.create_table(schema, drop=True)
         sink = PgWireMergeSink(
-            conninfo, table, pk=pk, mode="upsert", tiebreak_col="ts"
+            conninfo, f"cfr_replay_{leg}", pk=pk, mode="upsert",
+            tiebreak_col="ts",
         )
+        sink.create_table(schema, drop=True)
         ckpt = tempfile.mkdtemp(prefix=f"cfr_replay_ckpt_{leg}_")
         if leg == "clean":
             run_ingest(
@@ -299,7 +289,7 @@ def scenario_foreachbatch_replay(spark, sf_dir: str) -> dict:
                 "merged_batch_ids": wrapper.merged_batches,
                 "batch_1_merged_twice": wrapper.merged_batches.count(1) == 2,
             }
-        results[leg] = ddl.read(spark, schema)
+        results[leg] = sink.read(spark, schema)
     out = _verdict("foreachbatch_replay", results["clean"], results["replayed"])
     out.update(replay_proof)
     out["match"] = out["match"] and replay_proof.get("batch_1_merged_twice", False)

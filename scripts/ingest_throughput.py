@@ -3,14 +3,15 @@ engine's distributed staging, on the same live PostgreSQL.
 
 The reference ingests through ONE process and ONE connection per fetcher —
 CSV COPY into the table with an ON CONFLICT fallback
-(`fetchers/helpers/dbhelpers.py:34-132`). The engine ships the same merge
-semantics two ways:
+(`fetchers/helpers/dbhelpers.py:34-132`). The engine's one sink,
+``PgWireMergeSink``, runs in both postures with identical merge semantics:
 
-- ``PsqlCopyMergeSink`` — the reference's own shape: rows through the
-  driver, one COPY, one transaction (the parity twin);
-- ``PgWireMergeSink`` — the scale-out shape: every executor partition
-  COPYs in parallel over the raw wire protocol into UNLOGGED staging,
-  then one set-based DISTINCT ON + ON CONFLICT merge.
+- single writer — the reference's shape: the batch coalesced to one
+  partition and ``stage_parallelism=1``, so one connection COPYs every
+  row into staging before the one merge transaction;
+- distributed — the scale-out shape: every executor partition COPYs in
+  parallel over the raw wire protocol into UNLOGGED staging, then one
+  set-based DISTINCT ON + ON CONFLICT merge.
 
 This script measures both on identical batches (the events→candles
 projection at sf0.1 = 100k rows and sf1 = 1M rows), in the two postures
@@ -49,10 +50,8 @@ sys.path.insert(0, REPO)
 
 from coin_for_rich_spark.session import get_spark  # noqa: E402
 from coin_for_rich_spark.sources import candles_view  # noqa: E402
-from coin_for_rich_spark.streaming.jdbc import (  # noqa: E402
-    PgWireMergeSink,
-    PsqlCopyMergeSink,
-)
+from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink  # noqa: E402
+from coin_for_rich_spark.streaming.pgwire import PgWireClient  # noqa: E402
 from coin_for_rich_spark.streaming.pgserver import ephemeral_pg  # noqa: E402
 from scripts.host_probe import probe  # noqa: E402
 from scripts.measure import settle  # noqa: E402
@@ -63,15 +62,12 @@ PK = ("event_id",)
 MODE = "ignore"  # the reference's dominant path: INSERT ... DO NOTHING
 
 
-def _row_count(psql: PsqlCopyMergeSink) -> int:
-    """COPY-framed count — independent of psql's human table formatting."""
-    out = psql._run_psql(
-        f"COPY (SELECT count(*) FROM {psql.table}) TO STDOUT;"
-    )
-    return int(out.strip())
+def _sql(sink: PgWireMergeSink, sql: str) -> list[list[str | None]]:
+    with PgWireClient(**sink.params) as c:
+        return c.query(sql)[0]
 
 
-def bench_leg(sink, batch, psql: PsqlCopyMergeSink, label: str) -> dict:
+def bench_leg(sink: PgWireMergeSink, batch, label: str) -> dict:
     """min-of-2 full cycles, each: settle → truncate → fresh merge into an
     empty table → identical replay. Both sinks get the SAME protocol — an
     asymmetric methodology would let one load burst fabricate the
@@ -80,14 +76,16 @@ def bench_leg(sink, batch, psql: PsqlCopyMergeSink, label: str) -> dict:
     for _ in range(2):
         settle(max_load=2.0, timeout_s=120.0)
         out["loadavg_pre"].append(round(os.getloadavg()[0], 2))
-        psql._run_psql(f"TRUNCATE {psql.table};")
+        _sql(sink, f"TRUNCATE {sink.table}")
         for posture in ("fresh", "replay"):
             t0 = time.perf_counter()
             sink.merge(batch, 0)
             t = round(time.perf_counter() - t0, 3)
             if out[posture] is None or t < out[posture]:
                 out[posture] = t
-    out["rows_in_table"] = _row_count(psql)
+    out["rows_in_table"] = int(
+        _sql(sink, f"SELECT count(*) FROM {sink.table}")[0][0]
+    )
     print(json.dumps({label: out}), file=sys.stderr)
     return out
 
@@ -109,12 +107,15 @@ def main() -> int:
         batch = candles_view(spark, sf_dir).persist()
         n_rows = batch.count()
         table = f"cfr_tput_{sf_label.replace('.', '_')}"
-        psql = PsqlCopyMergeSink(conninfo, table, pk=PK, mode=MODE)
+        single = PgWireMergeSink(
+            conninfo, table, pk=PK, mode=MODE, stage_parallelism=1
+        )
         wire = PgWireMergeSink(conninfo, table, pk=PK, mode=MODE)
-        psql.create_table(batch.schema, drop=True)
+        wire.create_table(batch.schema, drop=True)
+        narrow = batch.coalesce(1)
         legs: dict[str, dict] = {}
-        legs["single_writer"] = bench_leg(psql, batch, psql, f"{sf_label}/single")
-        legs["distributed"] = bench_leg(wire, batch, psql, f"{sf_label}/wire")
+        legs["single_writer"] = bench_leg(single, narrow, f"{sf_label}/single")
+        legs["distributed"] = bench_leg(wire, batch, f"{sf_label}/wire")
         batch.unpersist()
         best_single = legs["single_writer"]["fresh"]
         results[sf_label] = {

@@ -81,6 +81,19 @@ def test_hash_sample_is_deterministic_subset(spark, sf_dir):
     assert not (s1 & s3)
 
 
+def test_hash_sample_and_predicate_share_one_default():
+    """hash_sample and hash_sample_predicate must read their default
+    geometry from ONE constant: the predicate's complement is only the
+    sample's complement while the two defaults agree."""
+    import inspect
+
+    from coin_for_rich_spark.llmdata import pipeline
+
+    for fn in (pipeline.hash_sample, pipeline.hash_sample_predicate):
+        default = inspect.signature(fn).parameters["hex_chars"].default
+        assert default is pipeline._DEFAULT_HEX_CHARS, fn.__name__
+
+
 def test_normalize_text_canonical_form(spark):
     df = spark.createDataFrame([Row(doc_id=1, text="  Hello\x00\tWorld  THERE ")])
     r = normalize_text(df).first()

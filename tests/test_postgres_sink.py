@@ -1,16 +1,19 @@
-"""End-to-end integration of the psql COPY + ON CONFLICT merge sink against
-a REAL PostgreSQL server — the north-star sink semantics
-(`fetchers/helpers/dbhelpers.py:34-132`, `fetchers/config/queries.py:4,12-15`)
-executed inside the actual target engine, not just asserted as SQL strings.
+"""End-to-end integration of the COPY + ON CONFLICT merge sink
+(``PgWireMergeSink``) against a REAL PostgreSQL server — the north-star sink
+semantics (`fetchers/helpers/dbhelpers.py:34-132`,
+`fetchers/config/queries.py:4,12-15`) executed inside the actual target
+engine, not just asserted as SQL strings.
 
 The module boots a throwaway cluster (initdb + pg_ctl under the `postgres`
 user, unix socket only, trust auth) and tears it down afterwards; it skips
 cleanly when the environment has no runnable server. The capstone test
 drives the SAME staged micro-batch stream through ``ParquetMergeSink`` and
-``PsqlCopyMergeSink`` and requires the resolved states to be value-identical
-— the two backends are twins by construction, so this pins that the psql
+``PgWireMergeSink`` and requires the resolved states to be value-identical
+— the two backends are twins by construction, so this pins that the
 COPY/DISTINCT ON/ON CONFLICT path implements exactly the merge semantics the
 oracle-checked `stream_upsert_ingest` query verifies for the parquet twin.
+Table state is mostly checked through ``psql``, a client independent of the
+sink's own wire client.
 """
 
 from __future__ import annotations
@@ -20,6 +23,8 @@ import subprocess
 import tempfile
 
 import pytest
+from pyspark.sql import Row
+from pyspark.sql import types as T
 
 from coin_for_rich_spark.streaming.pgserver import pg_runnable, start_cluster
 
@@ -66,12 +71,12 @@ def _fetch(conninfo: list[str], query: str) -> list[list[str]]:
 
 
 def test_psql_merge_ignore_first_writer_wins_and_replay_is_noop(spark, pg):
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_ign;"
              "CREATE TABLE t_ign (k text PRIMARY KEY, seq int, v double precision)")
-    sink = PsqlCopyMergeSink(pg, "t_ign", pk=("k",), mode="ignore",
-                             tiebreak_col="seq")
+    sink = PgWireMergeSink(pg, "t_ign", pk=("k",), mode="ignore",
+                           tiebreak_col="seq")
     b1 = spark.createDataFrame(
         [("a", 1, 10.0), ("a", 2, 11.0), ("b", 3, 20.0)],
         "k string, seq int, v double",
@@ -92,12 +97,12 @@ def test_psql_merge_ignore_first_writer_wins_and_replay_is_noop(spark, pg):
 
 
 def test_psql_merge_upsert_newest_wins(spark, pg):
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_ups;"
              "CREATE TABLE t_ups (k text PRIMARY KEY, seq int, v double precision)")
-    sink = PsqlCopyMergeSink(pg, "t_ups", pk=("k",), mode="upsert",
-                             tiebreak_col="seq")
+    sink = PgWireMergeSink(pg, "t_ups", pk=("k",), mode="upsert",
+                           tiebreak_col="seq")
     b1 = spark.createDataFrame(
         [("a", 1, 10.0), ("b", 2, 20.0)], "k string, seq int, v double"
     )
@@ -116,11 +121,11 @@ def test_psql_merge_upsert_newest_wins(spark, pg):
 
 
 def test_psql_merge_null_round_trip(spark, pg):
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_null;"
              "CREATE TABLE t_null (k text PRIMARY KEY, v double precision)")
-    sink = PsqlCopyMergeSink(pg, "t_null", pk=("k",), mode="ignore")
+    sink = PgWireMergeSink(pg, "t_null", pk=("k",), mode="ignore")
     sink.merge(
         spark.createDataFrame([("a", None), ("b", 1.5)], "k string, v double"), 0
     )
@@ -132,11 +137,12 @@ def test_psql_merge_text_format_survives_adversarial_values(spark, pg):
     """The COPY hop must be collision-free: a literal '\\N' string, a line
     consisting of '\\.', embedded tabs/newlines/backslashes, and a NULL in a
     BIGINT column (which coerces every other value in that column to float
-    under pandas) all have to round-trip exactly — each of these corrupted
-    or aborted the naive CSV encoding."""
+    under pandas) all have to land exactly — each of these corrupted or
+    aborted the naive CSV encoding. Checked through psql's md5, not the
+    sink's own readback."""
     import hashlib
 
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_esc;"
              "CREATE TABLE t_esc (k text PRIMARY KEY, s text, n bigint)")
@@ -146,7 +152,7 @@ def test_psql_merge_text_format_survives_adversarial_values(spark, pg):
         ("tabs", "x\ty\\z\rw", 2),          # delimiter + backslash + CR
         ("snull", None, 9_007_199_254_740_993),  # NULL text, 2^53+1 bigint
     ]
-    sink = PsqlCopyMergeSink(pg, "t_esc", pk=("k",), mode="ignore")
+    sink = PgWireMergeSink(pg, "t_esc", pk=("k",), mode="ignore")
     sink.merge(spark.createDataFrame(rows, "k string, s string, n long"), 0)
     got = {
         r[0]: (r[1], r[2])
@@ -169,36 +175,42 @@ def test_psql_merge_text_format_survives_adversarial_values(spark, pg):
 def test_psql_merge_empty_batch_is_a_cheap_noop(spark, pg):
     """foreachBatch delivers empty micro-batches (idle trigger fires); the
     sink must no-op without touching the database."""
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_empty;"
              "CREATE TABLE t_empty (k text PRIMARY KEY, v double precision)")
-    sink = PsqlCopyMergeSink(pg, "t_empty", pk=("k",), mode="upsert",
-                             psql="/nonexistent/psql")  # proves no subprocess
+    # a socket directory that does not exist: any connection would raise
+    sink = PgWireMergeSink(["-h", "/nonexistent", "-p", "5432"], "t_empty",
+                           pk=("k",), mode="upsert")
     sink.merge(spark.createDataFrame([], "k string, v double"), 0)
     assert _fetch(pg, "SELECT count(*) FROM t_empty") == [["0"]]
 
 
 def test_psql_merge_failed_batch_leaves_nothing_behind(spark, pg):
-    """Atomicity claim from the docstring: COPY + merge run in ONE
-    transaction, so a batch that fails mid-merge (here: a NOT NULL
-    violation) must leave the target untouched and raise with the database
-    error attached — no partial rows, no leftover staging."""
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    """Atomicity: the merge into the target runs in ONE transaction after
+    every partition's COPY, so a batch that fails in the COPY (here: a NOT
+    NULL violation — staging is ``LIKE target``) must leave the target
+    untouched, even of the batch's valid rows, and raise with the database
+    error attached. The staging table it leaves is dropped by the next
+    merge, which commits normally."""
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_atomic;"
              "CREATE TABLE t_atomic (k text PRIMARY KEY,"
              " v double precision NOT NULL)")
-    sink = PsqlCopyMergeSink(pg, "t_atomic", pk=("k",), mode="ignore")
+    sink = PgWireMergeSink(pg, "t_atomic", pk=("k",), mode="ignore")
     sink.merge(spark.createDataFrame([("a", 1.0)], "k string, v double"), 0)
     bad = spark.createDataFrame([("b", 2.0), ("c", None)], "k string, v double")
-    with pytest.raises(RuntimeError, match="t_atomic"):
+    with pytest.raises(Exception, match="t_atomic"):
         sink.merge(bad, 1)
-    got = _fetch(pg, "SELECT k, v FROM t_atomic ORDER BY k")
-    assert got == [["a", "1"]]
-    # the temp staging table died with its transaction
-    assert _fetch(pg, "SELECT count(*) FROM pg_tables"
-                      " WHERE tablename LIKE '_cfr_stage%'") == [["0"]]
+    assert _fetch(pg, "SELECT k, v FROM t_atomic ORDER BY k") == [["a", "1"]]
+    sink.merge(spark.createDataFrame([("d", 4.0)], "k string, v double"), 2)
+    assert _fetch(pg, "SELECT k, v FROM t_atomic ORDER BY k") == [
+        ["a", "1"], ["d", "4"]
+    ]
+    # the next batch's merge dropped the failed batch's staging table
+    assert _fetch(pg, "SELECT count(*) FROM pg_tables WHERE tablename = "
+                      f"'{sink.staging}'") == [["0"]]
 
 
 def test_psql_sink_matches_parquet_twin_on_a_real_stream(spark, sf_dir, tmp_path, pg):
@@ -209,7 +221,7 @@ def test_psql_sink_matches_parquet_twin_on_a_real_stream(spark, sf_dir, tmp_path
     from coin_for_rich_spark.sources import load_table
     from coin_for_rich_spark.streaming import (
         ParquetMergeSink,
-        PsqlCopyMergeSink,
+        PgWireMergeSink,
         run_ingest,
     )
     from coin_for_rich_spark.streaming.source import (
@@ -231,7 +243,7 @@ def test_psql_sink_matches_parquet_twin_on_a_real_stream(spark, sf_dir, tmp_path
              "CREATE TABLE events_ing (event_id bigint, ts timestamp,"
              " event_type text, user_id bigint, value double precision,"
              " PRIMARY KEY (user_id, event_type))")
-    ps_sink = PsqlCopyMergeSink(
+    ps_sink = PgWireMergeSink(
         pg, "events_ing", pk=("user_id", "event_type"), mode="upsert",
         tiebreak_col="ts",
     )
@@ -273,8 +285,6 @@ def test_psql_sink_matches_parquet_twin_on_a_real_stream(spark, sf_dir, tmp_path
 
 
 def test_pg_ddl_maps_schema_and_rejects_composites():
-    from pyspark.sql import types as T
-
     from coin_for_rich_spark.streaming.jdbc import pg_ddl
 
     schema = T.StructType(
@@ -318,9 +328,7 @@ def test_create_table_with_hypertable_on_plain_postgres(spark, pg):
     """On a server WITHOUT timescaledb the guarded conversion is a no-op:
     the table comes up as a plain PK table and the merge path is unchanged
     — the exact degradation contract the DDL promises."""
-    from pyspark.sql import types as T
-
-    from coin_for_rich_spark.streaming.jdbc import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
 
     schema = T.StructType(
         [
@@ -329,7 +337,7 @@ def test_create_table_with_hypertable_on_plain_postgres(spark, pg):
             T.StructField("v", T.DoubleType()),
         ]
     )
-    sink = PsqlCopyMergeSink(pg, "hyper_t", ("k", "ts"), mode="upsert")
+    sink = PgWireMergeSink(pg, "hyper_t", ("k", "ts"), mode="upsert")
     sink.create_table(schema, drop=True, hypertable_time_col="ts")
     import datetime
 
@@ -341,21 +349,114 @@ def test_create_table_with_hypertable_on_plain_postgres(spark, pg):
     assert rows == [["a", "1.5"]]
 
 
-def test_pg_text_parse_inverts_pg_text_value():
-    """Escape→unescape must be the identity on adversarial strings — in
-    particular a literal backslash-t must NOT come back as a tab (the
-    chained-str.replace bug this parser exists to avoid)."""
-    from pyspark.sql import types as T
+_UTC = dt.timezone.utc
+_IST = dt.timezone(dt.timedelta(hours=5, minutes=30))
 
-    from coin_for_rich_spark.streaming.jdbc import pg_text_parse, pg_text_value
+# The COPY-text contract of the sink's per-value encoding, one row per
+# case: (id, value, Spark type, value decoded back). The sink stores
+# ``pg_text_value(_utc_wall_clock(value))``; ``pg_text_parse`` must give
+# back the last field. ``TypeError`` there marks a value the encoder must
+# reject at the sink boundary.
+PG_TEXT_CASES = [
+    ("null", None, T.StringType(), None),
+    ("literal-backslash-N", "\\N", T.StringType(), "\\N"),
+    ("end-of-copy-marker", "\\.", T.StringType(), "\\."),
+    ("marker-line", "a\n\\.\nb", T.StringType(), "a\n\\.\nb"),
+    ("tab", "x\ty", T.StringType(), "x\ty"),
+    ("newline", "nl\nnl", T.StringType(), "nl\nnl"),
+    ("cr", "a\rb", T.StringType(), "a\rb"),
+    ("backslash", "back\\slash", T.StringType(), "back\\slash"),
+    # a literal backslash-t must NOT come back as a tab
+    ("backslash-t", "a\\tb", T.StringType(), "a\\tb"),
+    ("double-backslash", "\\\\", T.StringType(), "\\\\"),
+    # COPY TO escapes these on the way out though the write side does not
+    ("server-escaped-controls", "a\x0bb\x08c\x0cd", T.StringType(),
+     "a\x0bb\x08c\x0cd"),
+    ("empty-string", "", T.StringType(), ""),
+    ("nan", float("nan"), T.DoubleType(), float("nan")),
+    ("inf", float("inf"), T.DoubleType(), float("inf")),
+    ("-inf", float("-inf"), T.DoubleType(), float("-inf")),
+    ("negative-zero", -0.0, T.DoubleType(), -0.0),
+    ("point-one", 0.1, T.DoubleType(), 0.1),
+    ("2**53+1", 2**53 + 1, T.LongType(), 2**53 + 1),
+    ("bool", True, T.BooleanType(), True),
+    ("date", dt.date(2024, 2, 29), T.DateType(), dt.date(2024, 2, 29)),
+    ("utc-timestamp-us", dt.datetime(2024, 1, 2, 3, 4, 5, 678901, _UTC),
+     T.TimestampType(), dt.datetime(2024, 1, 2, 3, 4, 5, 678901)),
+    # an aware non-UTC value is stored as its UTC wall clock
+    ("aware-non-utc-timestamp", dt.datetime(2024, 1, 2, 3, 4, 5, 6, _IST),
+     T.TimestampType(), dt.datetime(2024, 1, 1, 21, 34, 5, 6)),
+    ("bytea", b"\x00\x01\\\xff", T.BinaryType(), b"\x00\x01\\\xff"),
+    ("reject-list", [1, 2], T.ArrayType(T.LongType()), TypeError),
+    ("reject-tuple", (1, 2), T.ArrayType(T.LongType()), TypeError),
+    ("reject-set", {1, 2}, T.ArrayType(T.LongType()), TypeError),
+    ("reject-dict", {"k": 1}, T.MapType(T.StringType(), T.LongType()),
+     TypeError),
+    ("reject-row", Row(a=1), T.StructType([T.StructField("a", T.LongType())]),
+     TypeError),
+]
 
-    for s in ["a\\tb", "x\ty", "nl\nnl", "\\N", "\\.", "plain", "\r", "\\\\"]:
-        assert pg_text_parse(pg_text_value(s), T.StringType()) == s, repr(s)
-    assert pg_text_parse("\\N", T.StringType()) is None
-    assert pg_text_parse(pg_text_value(2**53 + 1), T.LongType()) == 2**53 + 1
-    assert pg_text_parse(pg_text_value(0.1), T.DoubleType()) == 0.1
-    t = dt.datetime(2024, 1, 2, 3, 4, 5, 678901)
-    assert pg_text_parse(pg_text_value(t), T.TimestampType()) == t
+
+def _same(got, expected) -> bool:
+    if isinstance(got, float) and isinstance(expected, float):
+        return repr(got) == repr(expected)  # NaN is itself; -0.0 is not 0.0
+    return got == expected
+
+
+@pytest.mark.parametrize(
+    "value, dtype, expected",
+    [c[1:] for c in PG_TEXT_CASES],
+    ids=[c[0] for c in PG_TEXT_CASES],
+)
+def test_pg_text_parse_inverts_pg_text_value(value, dtype, expected):
+    from coin_for_rich_spark.streaming.jdbc import (
+        _utc_wall_clock,
+        pg_text_parse,
+        pg_text_value,
+    )
+
+    if expected is TypeError:
+        # str(v) would ship Python repr, which is not COPY text for these
+        with pytest.raises(TypeError, match="PostgreSQL COPY"):
+            pg_text_value(value)
+        return
+    got = pg_text_parse(pg_text_value(_utc_wall_clock(value)), dtype)
+    assert _same(got, expected), (got, expected)
+
+
+def test_pg_text_table_round_trips_through_live_merge_and_read(spark, pg):
+    """The whole COPY-text table through the server: every accepted case,
+    one row each (its value in its type's column, NULL in the others),
+    merged by PgWireMergeSink from executors and read back over COPY TO,
+    must decode to the table's expected value."""
+    from coin_for_rich_spark.streaming import PgWireMergeSink
+    from coin_for_rich_spark.streaming.jdbc import _utc_wall_clock
+
+    cases = [c for c in PG_TEXT_CASES if c[3] is not TypeError]
+    types = {}
+    for _, _, dtype, _ in cases:
+        types.setdefault(dtype.simpleString(), dtype)
+    cols = {name: f"c{i}" for i, name in enumerate(types)}
+    schema = T.StructType(
+        [T.StructField("k", T.StringType())]
+        + [T.StructField(cols[name], t) for name, t in types.items()]
+    )
+    rows = []
+    for cid, value, dtype, _ in cases:
+        row = {c: None for c in cols.values()}
+        row[cols[dtype.simpleString()]] = value
+        rows.append((cid, *row.values()))
+    sink = PgWireMergeSink(pg, "t_text_table", pk=("k",), mode="ignore")
+    sink.create_table(schema, drop=True)
+    sink.merge(spark.createDataFrame(rows, schema).repartition(3), 0)
+    got = {r["k"]: r.asDict() for r in sink.read(spark, schema).collect()}
+    assert set(got) == {c[0] for c in cases}
+    for cid, _, dtype, expected in cases:
+        v = got[cid].pop(cols[dtype.simpleString()])
+        if isinstance(v, dt.datetime):
+            v = _utc_wall_clock(v)  # collect() yields the host-local clock
+        assert _same(v, expected), (cid, v, expected)
+        assert all(x is None for c, x in got[cid].items() if c != "k"), cid
 
 
 def test_psql_read_back_matches_merged_state(spark, pg):
@@ -363,7 +464,7 @@ def test_psql_read_back_matches_merged_state(spark, pg):
     NULLs, adversarial strings, large ints, and µs timestamps included —
     as typed Spark rows (this is the transport the declared
     stream_upsert_ingest row certifies)."""
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_rb;"
              "CREATE TABLE t_rb (k text PRIMARY KEY, s text, n bigint,"
@@ -374,7 +475,7 @@ def test_psql_read_back_matches_merged_state(spark, pg):
         ("c", "\\N", -7, 6.55, dt.datetime(2024, 6, 30, 23, 59, 59, 999999)),
     ]
     schema = "k string, s string, n long, v double, ts timestamp"
-    sink = PsqlCopyMergeSink(pg, "t_rb", pk=("k",), mode="ignore")
+    sink = PgWireMergeSink(pg, "t_rb", pk=("k",), mode="ignore")
     batch = spark.createDataFrame(rows, schema)
     sink.merge(batch, 0)
     got = sorted(tuple(r) for r in sink.read(spark, batch.schema).collect())
@@ -401,8 +502,8 @@ def test_declared_query_psql_leg_matches_parquet_twin(spark, sf_dir, monkeypatch
 
 
 # ---------------------------------------------------------------------------
-# Wire-protocol client + distributed-staging sink (streaming/pgwire.py,
-# jdbc.PgWireMergeSink) — the scale-out twin, against the same live server.
+# Wire-protocol client (streaming/pgwire.py) and the sink's distributed
+# staging, against the same live server.
 # ---------------------------------------------------------------------------
 
 
@@ -444,9 +545,9 @@ def test_ephemeral_cluster_pins_c_collation(pg):
 
 def test_conninfo_parsing_strict_and_complete():
     """Silently-dropped conninfo arguments are a data-placement hazard (the
-    wire sink would merge into postgres/postgres while the psql twin writes
-    where the caller said) — unknown tokens must ERROR, and the shapes psql
-    itself accepts (long flags, positional dbname) must parse."""
+    sink would merge into postgres/postgres instead of where the caller
+    said) — unknown tokens must ERROR, and the shapes psql itself accepts
+    (long flags, positional dbname) must parse."""
     from coin_for_rich_spark.streaming.pgwire import conninfo_params
 
     assert conninfo_params(["-h", "/tmp/s", "-U", "u", "-d", "db"]) == {
@@ -473,8 +574,30 @@ def test_pgwire_copy_through_query_fails_fast(pg):
 
     with PgWireClient(**conninfo_params(pg)) as c:
         c.query("CREATE TABLE IF NOT EXISTS qcopy_t (a int)")
-        with pytest.raises(PgError, match="copy_in"):
+        with pytest.raises(PgError, match=r"copy_in\(\) or copy_out\(\)"):
             c.query("COPY qcopy_t FROM STDIN")
+
+
+def test_pgwire_copy_out_streams_and_drains_errors(pg):
+    """copy_out returns the COPY TO payload byte-exact; a server error and a
+    COPY FROM STDIN sent to it both raise PgError and leave the connection
+    usable."""
+    from coin_for_rich_spark.streaming.pgwire import (
+        PgError,
+        PgWireClient,
+        conninfo_params,
+    )
+
+    with PgWireClient(**conninfo_params(pg)) as c:
+        c.query("DROP TABLE IF EXISTS co_t; CREATE TABLE co_t (k text, v int)")
+        c.copy_in("COPY co_t FROM STDIN", [b"a\\tb\t1\n", b"z\t\\N\n"])
+        assert c.copy_out("COPY co_t TO STDOUT") == b"a\\tb\t1\nz\t\\N\n"
+        assert c.copy_out("COPY (SELECT 1 WHERE false) TO STDOUT") == b""
+        with pytest.raises(PgError, match="does not exist"):
+            c.copy_out("COPY no_such_t TO STDOUT")
+        with pytest.raises(PgError, match="copy_out"):
+            c.copy_out("COPY co_t FROM STDIN")
+        assert c.query("SELECT count(*) FROM co_t")[0] == [["2"]]
 
 
 def test_pgwire_distributed_sink_stages_partitions_in_parallel(spark, pg):
@@ -503,50 +626,30 @@ def test_pgwire_distributed_sink_stages_partitions_in_parallel(spark, pg):
     assert _fetch(pg, "SELECT count(*) FROM pg_tables WHERE tablename LIKE '_cfr_wstage%'")[0][0] == "0"
 
 
-def test_pgwire_sink_matches_psql_twin(spark, pg):
-    """Parity capstone: the distributed-staging sink and the single-writer
-    psql sink must resolve the SAME batches to value-identical states."""
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
-    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
-
-    for t in ("t_tw_a", "t_tw_b"):
-        _sql(pg, f"DROP TABLE IF EXISTS {t};"
-                 f"CREATE TABLE {t} (k text PRIMARY KEY, seq int,"
-                 " v double precision, ts timestamp)")
-    a = PsqlCopyMergeSink(pg, "t_tw_a", pk=("k",), mode="upsert", tiebreak_col="seq")
-    b = PgWireMergeSink(pg, "t_tw_b", pk=("k",), mode="upsert", tiebreak_col="seq")
-    batches = [
-        [("a", 1, 1.5, dt.datetime(2024, 1, 1)), ("b", 2, None, None),
-         ("a", 3, 9.25, dt.datetime(2024, 3, 1))],
-        [("c", 4, 0.1, dt.datetime(2024, 2, 2, 3, 4, 5, 678901)),
-         ("b", 5, -2.0, dt.datetime(2024, 5, 5))],
-    ]
-    schema = "k string, seq int, v double, ts timestamp"
-    for i, data in enumerate(batches):
-        df = spark.createDataFrame(data, schema).repartition(4)
-        a.merge(df, i)
-        b.merge(df, i)
-    qa = _fetch(pg, "SELECT * FROM t_tw_a ORDER BY k")
-    qb = _fetch(pg, "SELECT * FROM t_tw_b ORDER BY k")
-    assert qa == qb and len(qa) == 3
-
-
 def test_pgwire_sink_failed_merge_leaves_target_untouched(spark, pg):
-    from coin_for_rich_spark.streaming.pgwire import PgError
+    """Atomicity: a batch that fails inside the executors' COPY — a value
+    out of the column's range, or a NOT NULL violation (staging is
+    ``LIKE target``, so it carries the constraint) — raises with the
+    database error attached and leaves the target in its previous state;
+    the next batch recreates staging and merges normally."""
     from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_wf;"
-             "CREATE TABLE t_wf (k text PRIMARY KEY, n int)")
+             "CREATE TABLE t_wf (k text PRIMARY KEY, n int NOT NULL)")
     sink = PgWireMergeSink(pg, "t_wf", pk=("k",), mode="ignore")
-    ok = spark.createDataFrame([("a", 1)], "k string, n int")
-    sink.merge(ok, 0)
-    # a batch whose value cannot COPY into the target's column type fails
-    # inside the executors' COPY — the Spark action raises and the target
-    # keeps its previous state
-    bad = spark.createDataFrame([("b", 2**40)], "k string, n long")
-    with pytest.raises(Exception):
-        sink.merge(bad, 1)
-    assert _fetch(pg, "SELECT k, n FROM t_wf") == [["a", "1"]]
+    schema = "k string, n long"
+    sink.merge(spark.createDataFrame([("a", 1)], schema), 0)
+    for bad, error in (
+        ([("b", 2**40)], "out of range"),
+        ([("b", 2), ("c", None)], "not-null constraint"),
+    ):
+        with pytest.raises(Exception, match=error):
+            sink.merge(spark.createDataFrame(bad, schema), 1)
+        assert _fetch(pg, "SELECT k, n FROM t_wf") == [["a", "1"]]
+    sink.merge(spark.createDataFrame([("d", 4)], schema), 2)
+    assert _fetch(pg, "SELECT k, n FROM t_wf ORDER BY k") == [
+        ["a", "1"], ["d", "4"]
+    ]
 
 
 def test_pgwire_client_over_tcp(spark):
@@ -586,11 +689,10 @@ def test_pgwire_client_over_tcp(spark):
 
 
 def test_pgwire_sink_adversarial_values_round_trip(spark, pg):
-    """The wire COPY path must survive the same adversarial payloads the
-    psql twin is pinned on: embedded tabs/newlines/backslashes, the literal
-    NULL token, end-of-copy marker lookalikes, NaN/inf floats, and µs
-    timestamps — staged from executors, read back typed."""
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    """The wire COPY path must survive adversarial payloads: embedded
+    tabs/newlines/backslashes, the literal NULL token, end-of-copy marker
+    lookalikes, NaN/inf floats, and µs timestamps — staged from
+    executors, read back typed."""
     from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_wa;"
@@ -604,10 +706,9 @@ def test_pgwire_sink_adversarial_values_round_trip(spark, pg):
     ]
     schema = "k string, s string, v double, ts timestamp"
     sink = PgWireMergeSink(pg, "t_wa", pk=("k",), mode="ignore")
-    sink.merge(spark.createDataFrame(rows, schema).repartition(3), 0)
-    reader = PsqlCopyMergeSink(pg, "t_wa", pk=("k",), mode="ignore")
     batch = spark.createDataFrame(rows, schema)
-    got = {r["k"]: tuple(r) for r in reader.read(spark, batch.schema).collect()}
+    sink.merge(batch.repartition(3), 0)
+    got = {r["k"]: tuple(r) for r in sink.read(spark, batch.schema).collect()}
     import math
 
     for k, s, v, ts in rows:
@@ -624,13 +725,13 @@ def test_pg_readback_unescapes_server_control_chars(spark, pg):
     """COPY TO escapes \\b \\f \\v (beyond the \\t \\n \\r the write side
     produces); the readback parser must undo all of them — a stored
     vertical tab must not come back as the letter 'v'."""
-    from coin_for_rich_spark.streaming import PsqlCopyMergeSink
+    from coin_for_rich_spark.streaming import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_ctl;"
              "CREATE TABLE t_ctl (k text PRIMARY KEY, s text)")
     rows = [("vt", "a\x0bb"), ("bsp", "x\x08y"), ("ff", "p\x0cq")]
     schema = "k string, s string"
-    sink = PsqlCopyMergeSink(pg, "t_ctl", pk=("k",), mode="ignore")
+    sink = PgWireMergeSink(pg, "t_ctl", pk=("k",), mode="ignore")
     batch = spark.createDataFrame(rows, schema)
     sink.merge(batch, 0)
     got = {r["k"]: r["s"] for r in sink.read(spark, batch.schema).collect()}
@@ -639,11 +740,10 @@ def test_pg_readback_unescapes_server_control_chars(spark, pg):
 
 def test_null_tiebreak_parity_with_parquet_twin(spark, pg, tmp_path):
     """A NULL tiebreak value must resolve to the SAME winner in the
-    database legs as in the parquet twin: Spark desc() is nulls-LAST,
+    database as in the parquet twin: Spark desc() is nulls-LAST,
     PostgreSQL's bare DESC is nulls-FIRST, so the rendered ORDER BY pins
     NULLS LAST explicitly."""
-    from coin_for_rich_spark.streaming import ParquetMergeSink, PsqlCopyMergeSink
-    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
+    from coin_for_rich_spark.streaming import ParquetMergeSink, PgWireMergeSink
 
     rows = [("k1", None, 1.0), ("k1", dt.datetime(2024, 1, 1), 2.0)]
     schema = "k string, ts timestamp, v double"
@@ -655,14 +755,14 @@ def test_null_tiebreak_parity_with_parquet_twin(spark, pg, tmp_path):
     pq.merge(batch, 0)
     pq_v = pq.read(spark).collect()[0]["v"]
 
-    for name, cls in (("t_nt_a", PsqlCopyMergeSink), ("t_nt_b", PgWireMergeSink)):
-        _sql(pg, f"DROP TABLE IF EXISTS {name};"
-                 f"CREATE TABLE {name} (k text PRIMARY KEY, ts timestamp,"
-                 " v double precision)")
-        sink = cls(pg, name, pk=("k",), mode="upsert", tiebreak_col="ts")
-        sink.merge(batch, 0)
-        got = _fetch(pg, f"SELECT v FROM {name}")[0][0]
-        assert float(got) == pq_v, (name, got, pq_v)
+    _sql(pg, "DROP TABLE IF EXISTS t_nt;"
+             "CREATE TABLE t_nt (k text PRIMARY KEY, ts timestamp,"
+             " v double precision)")
+    sink = PgWireMergeSink(pg, "t_nt", pk=("k",), mode="upsert",
+                           tiebreak_col="ts")
+    sink.merge(batch, 0)
+    got = _fetch(pg, "SELECT v FROM t_nt")[0][0]
+    assert float(got) == pq_v, (got, pq_v)
 
 
 def test_stage_source_widens_narrow_batches_only(spark):

@@ -212,22 +212,6 @@ def test_jdbc_upsert_sql_shapes():
     assert "SELECT DISTINCT ON (a) a FROM s ORDER BY a" in dd0
 
 
-def test_pg_text_value_rejects_composite_types():
-    """array/map/struct values must fail loud at the sink boundary — str(v)
-    would ship Python repr, which is not valid COPY text for those types."""
-    import pytest as _pytest
-    from pyspark.sql import Row
-
-    from coin_for_rich_spark.streaming.jdbc import pg_text_value
-
-    for bad in ([1, 2], {"k": 1}, (1, 2), {1, 2}, Row(a=1)):
-        with _pytest.raises(TypeError, match="psql COPY"):
-            pg_text_value(bad)
-    # scalars still encode
-    assert pg_text_value(None) == "\\N"
-    assert pg_text_value("a\tb") == "a\\tb"
-
-
 def test_merge_sink_compact_preserves_state_and_semantics(spark, tmp_path):
     from coin_for_rich_spark.streaming import ParquetMergeSink
 

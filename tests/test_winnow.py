@@ -162,6 +162,23 @@ def test_winnow_overlap_max_df_guard(spark):
     assert len(pairs_open) == 7 * 6 // 2  # all pairs survive
 
 
+def test_winnow_overlap_accepts_non_identifier_id_column(spark):
+    """The postings schema is a DDL string that reparses the id column
+    name; an id column named ``doc id`` must give the same pairs as
+    ``doc_id``."""
+    boiler = " ".join(f"b{i}" for i in range(12))
+    rows = [(i, boiler) for i in range(1, 4)] + [(9, "x y z w v u t s r")]
+    plain = winnow_overlap_pairs(_docs(spark, rows), k=4, t=8, min_shared=1)
+    spaced = winnow_overlap_pairs(
+        spark.createDataFrame(rows, "`doc id` bigint, text string"),
+        id_col="doc id", k=4, t=8, min_shared=1,
+    )
+    assert sorted(map(tuple, spaced.collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+    assert spaced.count() == 3
+
+
 def test_winnow_invalid_params(spark):
     with pytest.raises(ValueError):
         winnow_fingerprints(_docs(spark, [(1, "a b c")]), k=5, t=4)
