@@ -41,14 +41,12 @@ from coin_for_rich_spark.operators import (
 )
 from coin_for_rich_spark.llmdata import (
     ann_index_knn,
-    attach_fake_media,
     attach_real_media,
     attach_real_video,
     demux_video_frames,
     sample_real_frames,
     cross_corpus_contamination,
     decode_media_stats,
-    resample_media,
     cosine_knn,
     knn_join,
     dedup_clusters,
@@ -56,11 +54,9 @@ from coin_for_rich_spark.llmdata import (
     train_char_lm,
     embedding_neardup_pairs,
     doc_profile,
-    chunk_documents,
     exact_dedup,
     explode_token_segments,
     line_dedup,
-    extract_media_features,
     hash_sample,
     hash_sample_predicate,
     repeated_span_dedup,
@@ -75,11 +71,8 @@ from coin_for_rich_spark.llmdata import (
     ngram_jaccard_pairs,
     normalize_text,
     pack_sequences,
-    resize_plan,
-    sample_frames,
     simhash_pairs,
     domain_mix_sample,
-    token_quantiles,
     train_bpe,
     encode_bpe,
     build_dedup_index,
@@ -89,11 +82,8 @@ from coin_for_rich_spark.llmdata import (
     cross_split_pairs,
 )
 from coin_for_rich_spark.llmdata.textstats import LANG_MARKERS, STOPWORDS
-from coin_for_rich_spark.functions.partitioning import (
-    ensure_parallelism,
-    scoped_shuffle_partitions,
-)
-from coin_for_rich_spark.plans import read_ohlcvs, serialize_candles
+from coin_for_rich_spark.functions.partitioning import ensure_parallelism
+from coin_for_rich_spark.plans import read_ohlcvs
 from coin_for_rich_spark.sources import (
     build_fetch_plan,
     candles_view,
@@ -103,7 +93,6 @@ from coin_for_rich_spark.sources import (
 from coin_for_rich_spark.streaming import (
     ParquetMergeSink,
     candle_stream,
-    exactly_once_dedup,
     format_wire_candles,
     latest_value_serve,
     parse_wire_candles,
@@ -315,15 +304,15 @@ def q_candles_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cascade_rollup_multi(base, list(_ALL_RESOLUTIONS))
 
 
-def _promote_staged_dir(built: str, final: str, expect: str) -> None:
+def _promote_staged_dir(built: str, final: str) -> None:
     """Atomically promote a staged build directory to its final path.
 
     The rename's OSError is swallowed ONLY when it means a concurrent build
     already promoted a complete copy (EEXIST / ENOTEMPTY on the target);
-    any other failure — permissions, a cross-device TMPDIR, a partial
-    target — re-raises at the root cause instead of surfacing later as an
-    unrelated FileNotFoundError. ``expect`` (a path inside ``final``) must
-    exist afterwards either way, else we fail loud with context."""
+    any other failure — permissions, a cross-device TMPDIR — re-raises at
+    the root cause instead of surfacing later as an unrelated
+    FileNotFoundError. ``final`` must exist afterwards either way, else we
+    fail loud with context."""
     import errno
     import os
 
@@ -332,11 +321,57 @@ def _promote_staged_dir(built: str, final: str, expect: str) -> None:
     except OSError as exc:
         if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
             raise
-    if not os.path.exists(expect):
+    if not os.path.isdir(final):
         raise RuntimeError(
             f"staged promotion to {final!r} completed without error but "
-            f"{expect!r} is absent — the index/store on disk is incomplete"
+            "the directory is absent"
         )
+
+
+# gate-artifact paths memoized per (artifact name, sf_dir)
+_BUILT_ONCE: dict[tuple[str, str], str] = {}
+
+
+def _build_once(
+    sf_dir: str, table: str, name: str, tag: str, build: Callable[[str], None]
+) -> str:
+    """Build-or-reuse the gate artifact ``name`` over ``{sf_dir}/{table}``.
+
+    Rollup store, dedup index, IVF-PQ index and stream replays are built
+    once per source identity and reused across processes — the correctness
+    gate runs each query in its OWN process. The artifact lives at
+    ``$TMPDIR/cfr_{name}_{key}``; ``key`` hashes the source file's path,
+    size and mtime with ``tag``, which names everything else that shapes
+    the bytes (loaded schema, build constants, layout version). So a
+    regenerated testdata dir or a changed build can never serve a stale
+    artifact — a layout change MUST change the tag. A missing artifact is
+    built by ``build(path)`` in a staging dir and promoted by one atomic
+    rename, so a reader never sees a half-built one; the staging dir is
+    removed whether the build succeeds or raises."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    memo = (name, sf_dir)
+    if memo not in _BUILT_ONCE:
+        try:
+            st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+            ident = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
+        except OSError:
+            ident = sf_dir
+        key = hashlib.md5(f"{ident}|{tag}".encode()).hexdigest()[:12]
+        final = os.path.join(tempfile.gettempdir(), f"cfr_{name}_{key}")
+        if not os.path.isdir(final):
+            stage = tempfile.mkdtemp(prefix=f"cfr_{name}_stage_")
+            try:
+                built = os.path.join(stage, name)
+                build(built)
+                _promote_staged_dir(built, final)
+            finally:
+                shutil.rmtree(stage, ignore_errors=True)
+        _BUILT_ONCE[memo] = final
+    return _BUILT_ONCE[memo]
 
 
 def _point_symlink(target: str, link: str) -> None:
@@ -402,50 +437,31 @@ def _gate_store_path(link_name: str) -> str:
     return os.path.join(tempfile.gettempdir(), link_name)
 
 
-# materialized rollup-family paths keyed on sf_dir (M4): materialize once
-# per session, serve every materialized-route read from the sink tables.
-# Like the staged stream replay, the store also lives at a deterministic
-# disk path keyed on the source file's identity, built in a temp dir and
-# atomically renamed — the driver's per-process gate reuses it instead of
-# re-materializing all 8 resolutions every invocation, and a regenerated
-# testdata dir can never serve a stale store.
-_ROLLUP_STORE_CACHE: dict[str, dict[str, str]] = {}
-
-
-def _rollup_store(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    import hashlib
+def _rollup_store(cv: DataFrame, sf_dir: str) -> dict[str, str]:
+    """M4 — the materialized rollup family over ``cv`` (the candle view of
+    ``sf_dir``) as {resolution: table path}: materialized once per source
+    identity, every materialized-route read is served from the sink
+    tables."""
     import os
-    import shutil
-    import tempfile
 
     from coin_for_rich_spark.sources.store import materialize_rollups
 
-    if sf_dir not in _ROLLUP_STORE_CACHE:
-        cv = candles_view(spark, sf_dir)
-        try:
-            st = os.stat(os.path.join(sf_dir, "events.parquet"))
-            ident = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
-        except OSError:
-            ident = sf_dir
-        # schema fingerprint: a loader type-normalization change re-stages;
-        # bucketing-version tag: a semantic change to time_bucket (e.g. the
-        # r7 Monday week-origin fix) must rebuild the store, or a stale 7D
-        # table would keep serving Thursday-aligned candles
-        ident += "|" + cv.schema.simpleString() + "|bkt-mon1"
-        key = hashlib.md5(ident.encode()).hexdigest()[:12]
-        final = os.path.join(tempfile.gettempdir(), f"cfr_rollups_{key}")
-        if not os.path.isdir(final):
-            tmp = tempfile.mkdtemp(prefix="cfr_rollups_stage_")
-            built = os.path.join(tmp, "store")
-            materialize_rollups(cv, built)
-            _promote_staged_dir(built, final, expect=final)
-            shutil.rmtree(tmp, ignore_errors=True)
-        _ROLLUP_STORE_CACHE[sf_dir] = {
-            name.removeprefix("candles_"): os.path.join(final, name)
-            for name in os.listdir(final)
-            if name.startswith("candles_")
-        }
-    return _ROLLUP_STORE_CACHE[sf_dir]
+    # schema fingerprint: a loader type-normalization change re-stages;
+    # bucketing-version tag: a semantic change to time_bucket (e.g. the
+    # r7 Monday week-origin fix) must rebuild the store, or a stale 7D
+    # table would keep serving Thursday-aligned candles
+    store = _build_once(
+        sf_dir,
+        "events",
+        "rollups",
+        cv.schema.simpleString() + "|bkt-mon1",
+        lambda path: materialize_rollups(cv, path),
+    )
+    return {
+        name.removeprefix("candles_"): os.path.join(store, name)
+        for name in os.listdir(store)
+        if name.startswith("candles_")
+    }
 
 
 def q_chart_read_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,7 +486,7 @@ def q_chart_read_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     kwargs = dict(start="2024-01-03 00:00:00", end="2024-01-29 00:00:00",
                   limit=500)
     direct = read_ohlcvs(cv, "purchase", "1h", **kwargs)
-    rollups = load_rollups(spark, _rollup_store(spark, sf_dir))
+    rollups = load_rollups(spark, _rollup_store(cv, sf_dir))
     mat = read_ohlcvs(cv, "purchase", "1h", **kwargs, rollups=rollups)
     return direct.withColumn("route", F.lit("direct")).unionByName(
         mat.withColumn("route", F.lit("materialized"))
@@ -795,14 +811,6 @@ def q_web_preprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r7
-    # swapped for `corpus_ingest` (COVERAGE.md): the scrub+chunk pipeline
-    # component stays gate-covered by `doc_scrub`, and chunk_documents keeps
-    # its value-checked rows in tests/test_pipeline.py
-    """Overlapping 128-token context chunks at stride 64."""
-    return chunk_documents(load_table(spark, sf_dir, "documents"))
-
-
 def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r15
     """A7 — count distinct tuple (select_queries.sql:215-218) per group, with
     the 100 TB fast path declared alongside as an oracle-checkable accuracy
@@ -976,21 +984,6 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("bucket", "symbol", "close", "ma")
 
 
-def q_serve_payload(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r10
-    # swapped for `quality_score` (VERDICT r8 ask #4; mapping in
-    # COVERAGE.md): the round-10 serve adversarial pass left this thin
-    # scalar row's semantics pinned by 11 dedicated pytest cases
-    # (tests/test_serve.py — ms/s conversion, round-4, NULL serialization,
-    # limit contracts), and epoch-ms serialization still executes inside
-    # the oracle-checked chart rows; the char-LM quality scorer was the
-    # largest operator family with no hash-gate row at all
-    """M6 — serve serialization (parsers.py:9-40): chart read → epoch-ms
-    time + 4-decimal OHLCV, the API's wire contract."""
-    cv = candles_view(spark, sf_dir)
-    chart = read_ohlcvs(cv, "purchase", "1h", limit=500)
-    return serialize_candles(chart, results_mls=True)
-
-
 #: quality-score gate geometry: the classic char-trigram model with
 #: alpha=0.5 smoothing, trained on the doc_id % 4 == 1 reference split
 _QUALITY_GATE_ORDER = 3
@@ -1145,9 +1138,9 @@ def _exact_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _reset_bench_caches() -> None:
     """Drop memoized QUERY RESULTS so bench's min-of-N passes measure the
-    plan, not a cache hit (the staged-stream chunks and materialized rollup
-    store are deliberately NOT dropped — they are amortized infrastructure,
-    not the measured query's own work). Called by bench.py between passes."""
+    plan, not a cache hit (the ``_build_once`` gate artifacts are
+    deliberately NOT dropped — they are amortized infrastructure, not the
+    measured query's own work). Called by bench.py between passes."""
     for df in _NGRAM_PAIRS_CACHE.values():
         try:
             df.unpersist()
@@ -1244,36 +1237,23 @@ def _dedup_index_gate(spark: SparkSession, sf_dir: str) -> str:
     are a pure function of the corpus, so the dump is bit-identical to what
     ``incremental_dedup`` derives internally)."""
     import os
-    import shutil
     import tempfile
 
-    import hashlib
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        ident = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|idx4v2"
-    except OSError:
-        ident = f"{sf_dir}|idx4v2"
-    # per-source-identity store + fixed symlink for the oracle: concurrent
-    # gates over different sources build disjoint directories (see
-    # _point_symlink)
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"cfr_dedupidx_{hashlib.md5(ident.encode()).hexdigest()[:12]}",
-    )
-    marker = os.path.join(store, "_ident.txt")
-    if not os.path.isfile(marker):
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         history = docs.filter(F.col("doc_id") % 4 != 0)
         batch = _dedup_probe_batch(docs)
-        tmp = tempfile.mkdtemp(prefix="cfr_dedupidx_stage_")
-        built = os.path.join(tmp, "gate")
-        build_dedup_index(history, os.path.join(built, "index"), **_DEDUP_GATE_GEOMETRY)
-        build_dedup_index(batch, os.path.join(built, "probe"), **_DEDUP_GATE_GEOMETRY)
-        with open(os.path.join(built, "_ident.txt"), "w") as fh:
-            fh.write(ident)
-        _promote_staged_dir(built, store, expect=marker)
-        shutil.rmtree(tmp, ignore_errors=True)
+        build_dedup_index(history, os.path.join(path, "index"), **_DEDUP_GATE_GEOMETRY)
+        build_dedup_index(batch, os.path.join(path, "probe"), **_DEDUP_GATE_GEOMETRY)
+        # part of the store's layout: older versions of this module reuse
+        # a store only when this marker is present
+        with open(os.path.join(path, "_ident.txt"), "w") as fh:
+            fh.write("idx4v2")
+
+    store = _build_once(sf_dir, "documents", "dedupidx", "idx4v2", build)
+    # per-source-identity store + fixed symlink for the oracle: concurrent
+    # gates over different sources build disjoint directories (see
+    # _point_symlink)
     _point_symlink(store, os.path.join(tempfile.gettempdir(), "cfr_dedupidx_gate"))
     return store
 
@@ -1614,18 +1594,6 @@ def q_domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r8
-    # swapped for `range_join` (VERDICT r7 ask #2; mapping in COVERAGE.md):
-    # the sketch-vs-exact contract stays value-pinned in tests/test_pipeline
-    # and the percentile_approx path stays exercised by `doc_profile`'s
-    # length tiers; range_join's relational edge semantics need the hash
-    # gate more than a property row whose contract pytest already pins
-    """Token-length distribution: exact interpolated p50/p90/p99 (value-
-    checked vs quantile_cont) + the percentile_approx sketch pinned within
-    10% of exact (the one-pass bounded-memory 100 TB path)."""
-    return token_quantiles(load_table(spark, sf_dir, "documents"))
-
-
 #: gate BPE shape (declared r8): small enough that the DuckDB twin re-trains
 #: the merge table itself in chained materialized CTEs, large enough that
 #: multi-round merge interactions (merged symbols re-pairing) occur
@@ -1682,21 +1650,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 around the vec_id=0 embedding.
-
-    UNDECLARED since r7 (swapped for ``epoch_shuffle``): exact brute-force
-    cosine ranking stays certified by ``embed_knn_join`` (top-k for EVERY
-    row vs the full DuckDB pairwise oracle — a gate row r7-r13,
-    pytest-twin-pinned since the r14 rotation), and cosine_knn itself
-    keeps executing inside the declared ``embed_ann_lsh`` /
-    ``embed_ann_ivf`` rows as their recall truth set; value-checked in
-    tests/test_llmdata.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return cosine_knn(emb, qv, k=10)
-
-
 def q_embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table LSH approximate top-10, declared as an oracle-checkable
     recall property: with 8 tables × 8 planes + Hamming-1 multiprobe the ANN
@@ -1719,51 +1672,35 @@ def q_embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the materialized IVF-PQ index is ingest-time infrastructure (like the
-# rollup store): built once per (source identity, loaded schema) at a
-# deterministic disk path, atomically renamed, reused across invocations.
-_ANN_INDEX_CACHE: dict[str, tuple[str, list, list]] = {}
-
-
-def _ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, list, list]:
-    """Build-or-reuse the on-disk IVF-PQ index over `embeddings`:
-    16 kmeans-refined coarse cells as PARTITION directories (a probe is a
-    partition-pruned read), PQ codes (m=8 sub-spaces × 16 centroids) stored
-    with every row for ADC scoring. Centroids + codebooks (index metadata,
-    a few KB) ride along in ``_meta.json`` — underscore-prefixed, so Spark's
-    parquet reader ignores it."""
-    import hashlib
+def _ann_index(emb: DataFrame, sf_dir: str) -> tuple[str, list, list]:
+    """Build-or-reuse the on-disk IVF-PQ index over ``emb`` (the
+    `embeddings` table of ``sf_dir``) — ingest-time infrastructure like the
+    rollup store: 16 kmeans-refined coarse cells as PARTITION directories
+    (a probe is a partition-pruned read), PQ codes (m=8 sub-spaces × 16
+    centroids) stored with every row for ADC scoring. Centroids +
+    codebooks (index metadata, a few KB) ride along in ``_meta.json`` —
+    underscore-prefixed, so Spark's parquet reader ignores it."""
     import json
     import os
-    import shutil
-    import tempfile
 
-    if sf_dir not in _ANN_INDEX_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        try:
-            st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-            ident = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
-        except OSError:
-            ident = sf_dir
-        ident += "|" + emb.schema.simpleString() + "|ivf16pq8x16"
-        key = hashlib.md5(ident.encode()).hexdigest()[:12]
-        final = os.path.join(tempfile.gettempdir(), f"cfr_annidx_{key}")
-        meta_path = os.path.join(final, "_meta.json")
-        if not os.path.isfile(meta_path):
-            tmp = tempfile.mkdtemp(prefix="cfr_annidx_stage_")
-            built = os.path.join(tmp, "index")
-            books = pq_train(emb, m=8, k=16, n_iter=2)
-            cents = materialize_ann_index(
-                emb, built, n_centroids=16, n_iter=3, pq_codebooks=books
-            )
-            with open(os.path.join(built, "_meta.json"), "w") as fh:
-                json.dump({"centroids": cents, "codebooks": books}, fh)
-            _promote_staged_dir(built, final, expect=meta_path)
-            shutil.rmtree(tmp, ignore_errors=True)
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        _ANN_INDEX_CACHE[sf_dir] = (final, meta["centroids"], meta["codebooks"])
-    return _ANN_INDEX_CACHE[sf_dir]
+    def build(path: str) -> None:
+        books = pq_train(emb, m=8, k=16, n_iter=2)
+        cents = materialize_ann_index(
+            emb, path, n_centroids=16, n_iter=3, pq_codebooks=books
+        )
+        with open(os.path.join(path, "_meta.json"), "w") as fh:
+            json.dump({"centroids": cents, "codebooks": books}, fh)
+
+    index = _build_once(
+        sf_dir,
+        "embeddings",
+        "annidx",
+        emb.schema.simpleString() + "|ivf16pq8x16",
+        build,
+    )
+    with open(os.path.join(index, "_meta.json")) as fh:
+        meta = json.load(fh)
+    return index, meta["centroids"], meta["codebooks"]
 
 
 def q_embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1777,7 +1714,7 @@ def q_embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-filter plan guard are pinned in tests/test_llmdata.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    path, cents, books = _ann_index(spark, sf_dir)
+    path, cents, books = _ann_index(emb, sf_dir)
     ann = ann_index_knn(
         spark, path, cents, qv, k=10, n_probe=6, pq_codebooks=books, rerank=100
     ).select("vec_id")
@@ -1823,21 +1760,6 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_neardup_pairs(
         codes, threshold=0.4, method="exact", int_exact=True
     )
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload column → Arrow-batched
-    mapInPandas feature extraction (deterministic fake decoder); the
-    metadata/digest columns are oracle-checked.
-
-    UNDECLARED since r7 (swapped for ``dedup_index_probe``): the fake-
-    decoder tier is superseded by the REAL ``media_decode`` /
-    ``media_resample`` / ``frame_sample`` rows, which exercise the same
-    attach→mapInPandas→stats plumbing through genuine codec bytes; this
-    query stays unit-tested in tests/test_llmdata.py."""
-    media = attach_fake_media(load_table(spark, sf_dir, "documents"))
-    feats = extract_media_features(media, fake=True)
-    return feats.select("media_id", "mime", "n_bytes", "sha256")
 
 
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3647,17 +3569,6 @@ def _sft_render_oracle_sql() -> str:
     """
 
 
-def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize targets for image rows (declarative dims).
-
-    UNDECLARED since the r6 continuation (swapped for `embed_knn_join`):
-    the resize-dim arithmetic this exercised stays oracle-covered inside
-    `media_resample` (its target_w/target_h columns come from the same
-    formula over real decoded PNGs) and unit-tested in test_llmdata."""
-    media = attach_fake_media(load_table(spark, sf_dir, "documents"))
-    return resize_plan(media, max_w=256, max_h=256)
-
-
 def q_embed_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r14
     # swapped for `video_keyframes` (COVERAGE.md): the every-row exact-kNN
     # oracle stays pinned hash-exact by tests/test_llmdata.py::
@@ -3699,19 +3610,6 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED
     return decode_media_stats(media)
 
 
-def q_media_resample(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r8
-    # swapped for `bpe_encode` (VERDICT r7 ask #3; mapping in COVERAGE.md):
-    # the per-pixel NN contract stays fully value-pinned in tests/test_llmdata
-    # and the codec round trip it rides on keeps its gate row (`media_decode`)
-    """REAL pixel resample, oracle-checked: real PNGs decoded, NN-downscaled
-    (aspect-preserving, the resize_plan arithmetic), re-encoded, re-decoded,
-    reduced to integer stats. The oracle predicts every output pixel from
-    the generation formulas + the NN index map ((x*w)//tw, (y*h)//th) — the
-    codec never runs in the oracle, yet the values must agree exactly."""
-    media = attach_real_media(load_table(spark, sf_dir, "documents"))
-    return resample_media(media, max_w=16, max_h=12)
-
-
 # ---------------------------------------------------------------------------
 # backfill fetch plan (S1/S2 — the REST work queue as a distributed relation)
 # ---------------------------------------------------------------------------
@@ -3749,32 +3647,19 @@ def q_fetch_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# staged replay dirs keyed on sf_dir: staging `events` into time-ordered
-# chunks costs a full scan + write, and every stream_* query needs the same
-# chunks. Cached at two levels: in-process (this dict) and on disk at a
-# deterministic path — the driver's correctness gate runs each query in its
-# OWN process, so without the disk level all five stream_* queries re-stage
-# the identical chunks. The staged dir only ever appears at its final path
-# fully built (stage into a temp dir, then one atomic rename), so a reader
-# can never observe a half-staged replay.
-_STREAM_STAGE_CACHE: dict[str, tuple[str, object]] = {}
 _STREAM_N_CHUNKS = 4
 
-# state stores are per shuffle partition and commit every micro-batch; the
-# replay keyspace is a handful of symbols / ~150 users, so the state store
-# count is sized to the keyspace instead of inheriting the batch-wide 32
-# (which pays 32 commits x 4 batches of pure overhead). At production scale
-# this knob goes UP with the keyspace — sized, not defaulted.
 # state-store partitions for the stream gate rows, sized to the KEYSPACE
-# (5 symbols / (user, event_type) pairs — see scoped_shuffle_partitions'
-# rationale: every partition commits per micro-batch regardless of data,
-# so the floor cost is partitions × commits). r15 set 8 → 4 on a −9%
-# same-session A/B, but the r15 driver run contradicted it (stream tier
-# +19%); the r16 exonerate-or-revert A/B (scripts/r16_ab.py, 3 alternating
-# rounds of all six rows) read a WASH on per-row mins (24.43 s at 4 vs
-# 24.26 s at 8) with the worst row (stream_upsert_ingest: more parallel
-# COPY legs) favoring 8 — reverted to the r14 value, since the burden of
-# proof sits on the change. At production keyspaces this knob goes UP.
+# (a handful of symbols / ~150 users) instead of inheriting the
+# batch-wide 32: every partition commits per micro-batch regardless of
+# data, so the floor cost is partitions × commits (see
+# scoped_shuffle_partitions). r15 set 8 → 4 on a −9% same-session A/B,
+# but the r15 round bench contradicted it (stream tier +19%); the r16
+# exonerate-or-revert A/B (OPTIMIZATION_r16.md, 3 alternating rounds of
+# all six rows) read a WASH on per-row mins (24.43 s at 4 vs 24.26 s at
+# 8) with the worst row (stream_upsert_ingest: more parallel COPY legs)
+# favoring 8 — reverted to the r14 value, since the burden of proof sits
+# on the change. At production keyspaces this knob goes UP.
 _STREAM_STATE_PARTITIONS = 8
 
 
@@ -3782,46 +3667,23 @@ def _staged_stream(spark: SparkSession, sf_dir: str):
     """Replay `events` as a 4-batch time-ordered file stream (S3 stand-in).
 
     4 micro-batches: enough to exercise cross-batch state/watermark logic;
-    replay semantics are chunk-count-invariant (tests use 6).
+    replay semantics are chunk-count-invariant (tests use 6). Staging costs
+    a full scan + write and every stream_* row replays the same chunks, so
+    they are a build-once artifact; the key carries the loader-normalized
+    schema, so a loader type-normalization change (e.g. NTZ -> TIMESTAMP)
+    re-stages.
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from coin_for_rich_spark.streaming.source import read_file_stream
 
-    if sf_dir not in _STREAM_STAGE_CACHE:
-        # the key includes the source file's identity (size + mtime) AND the
-        # loader-normalized schema, so neither a regenerated testdata dir nor
-        # a loader type-normalization change (e.g. NTZ -> TIMESTAMP) can serve
-        # a stale staged replay
-        ev = load_table(spark, sf_dir, "events")
-        try:
-            st = os.stat(os.path.join(sf_dir, "events.parquet"))
-            ident = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
-        except OSError:
-            ident = sf_dir
-        ident += "|" + ev.schema.simpleString()
-        key = hashlib.md5(ident.encode()).hexdigest()[:12]
-        final = os.path.join(
-            tempfile.gettempdir(),
-            f"cfr_stream_{key}_{_STREAM_N_CHUNKS}",
-            "events",
-        )
-        if not os.path.isdir(final):
-            tmp_parent = tempfile.mkdtemp(prefix="cfr_stream_stage_")
-            tmp = os.path.join(tmp_parent, "events")
-            stage_stream_chunks(ev, tmp, n_chunks=_STREAM_N_CHUNKS)
-            os.makedirs(os.path.dirname(final), exist_ok=True)
-            _promote_staged_dir(tmp, final, expect=final)
-            shutil.rmtree(tmp_parent, ignore_errors=True)
-        _STREAM_STAGE_CACHE[sf_dir] = (final, ev.schema)
-    path, schema = _STREAM_STAGE_CACHE[sf_dir]
-    return read_file_stream(spark, path, schema)
-
-
-_LATECORR_STAGE_CACHE: dict[str, tuple[str, object]] = {}
+    ev = load_table(spark, sf_dir, "events")
+    staged = _build_once(
+        sf_dir,
+        "events",
+        "stream",
+        ev.schema.simpleString() + f"|n={_STREAM_N_CHUNKS}",
+        lambda path: stage_stream_chunks(ev, path, n_chunks=_STREAM_N_CHUNKS),
+    )
+    return read_file_stream(spark, staged, ev.schema)
 
 
 def _late_correction_stream(spark: SparkSession, sf_dir: str):
@@ -3839,73 +3701,53 @@ def _late_correction_stream(spark: SparkSession, sf_dir: str):
     is staged as one file with an mtime strictly after every original
     chunk, so the file source replays it as the final micro-batch —
     arriving at the hold-back collector long after those minutes were
-    emitted and at the merge sink after their rows landed.
-
-    Identity-cached on disk like ``_staged_stream`` (same staged-promote
-    protocol), keyed separately so the two replays never collide."""
-    import hashlib
+    emitted and at the merge sink after their rows landed."""
     import os
-    import shutil
-    import tempfile
 
     from coin_for_rich_spark.streaming.source import read_file_stream
 
-    if sf_dir not in _LATECORR_STAGE_CACHE:
-        ev = load_table(spark, sf_dir, "events")
-        try:
-            st = os.stat(os.path.join(sf_dir, "events.parquet"))
-            ident = f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
-        except OSError:
-            ident = sf_dir
-        # the ident embeds EVERY constant that shapes the staged bytes —
-        # chunk count and the correction transform (%7==3, +0.5) — so
-        # changing any of them can never serve a stale staged replay from
-        # $TMPDIR (the chunk count lives in _staged_stream's dir NAME; here
-        # it must live in the hash because the dir name carries only `key`)
-        ident += (
-            "|" + ev.schema.simpleString()
-            + f"|latecorr1|n={_STREAM_N_CHUNKS}|minute%7==3|value+0.5"
+    ev = load_table(spark, sf_dir, "events")
+
+    def build(path: str) -> None:
+        stage_stream_chunks(ev, path, n_chunks=_STREAM_N_CHUNKS)
+        evm = ev.withColumn(
+            "_m", F.floor(F.unix_micros("ts") / F.lit(60_000_000))
         )
-        key = hashlib.md5(ident.encode()).hexdigest()[:12]
-        final = os.path.join(
-            tempfile.gettempdir(), f"cfr_latecorr_{key}", "events"
+        mx = evm.groupBy("event_type").agg(F.max("_m").alias("_max_m"))
+        corr = (
+            evm.join(mx, "event_type")
+            .filter((F.col("_m") % 7 == 3) & (F.col("_m") < F.col("_max_m")))
+            .withColumn("value", F.col("value") + F.lit(0.5))
+            .select(*ev.columns)
         )
-        if not os.path.isdir(final):
-            tmp_parent = tempfile.mkdtemp(prefix="cfr_latecorr_stage_")
-            tmp = os.path.join(tmp_parent, "events")
-            stage_stream_chunks(ev, tmp, n_chunks=_STREAM_N_CHUNKS)
-            evm = ev.withColumn(
-                "_m", F.floor(F.unix_micros("ts") / F.lit(60_000_000))
-            )
-            mx = evm.groupBy("event_type").agg(F.max("_m").alias("_max_m"))
-            corr = (
-                evm.join(mx, "event_type")
-                .filter((F.col("_m") % 7 == 3) & (F.col("_m") < F.col("_max_m")))
-                .withColumn("value", F.col("value") + F.lit(0.5))
-                .select(*ev.columns)
-            )
-            sub = os.path.join(tmp_parent, "corr")
-            corr.coalesce(1).write.mode("overwrite").parquet(sub)
-            part = next(
-                f
-                for f in os.listdir(sub)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            last = max(
-                os.stat(os.path.join(tmp, f)).st_mtime
-                for f in os.listdir(tmp)
-                if f.endswith(".parquet")
-            )
-            dest = os.path.join(tmp, "zz-late-corrections.parquet")
-            os.replace(os.path.join(sub, part), dest)
-            os.utime(dest, (last + 10.0,) * 2)
-            shutil.rmtree(sub, ignore_errors=True)
-            os.makedirs(os.path.dirname(final), exist_ok=True)
-            _promote_staged_dir(tmp, final, expect=final)
-            shutil.rmtree(tmp_parent, ignore_errors=True)
-        _LATECORR_STAGE_CACHE[sf_dir] = (final, ev.schema)
-    path, schema = _LATECORR_STAGE_CACHE[sf_dir]
-    return read_file_stream(spark, path, schema)
+        sub = path + "_corr"
+        corr.coalesce(1).write.mode("overwrite").parquet(sub)
+        part = next(
+            f
+            for f in os.listdir(sub)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
+        last = max(
+            os.stat(os.path.join(path, f)).st_mtime
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+        dest = os.path.join(path, "zz-late-corrections.parquet")
+        os.replace(os.path.join(sub, part), dest)
+        os.utime(dest, (last + 10.0,) * 2)
+
+    # the tag embeds EVERY constant that shapes the staged bytes — chunk
+    # count and the correction transform (%7==3, +0.5) — so changing any
+    # of them can never serve a stale staged replay
+    staged = _build_once(
+        sf_dir,
+        "events",
+        "latecorr",
+        ev.schema.simpleString()
+        + f"|latecorr2|n={_STREAM_N_CHUNKS}|minute%7==3|value+0.5",
+        build,
+    )
+    return read_file_stream(spark, staged, ev.schema)
 
 
 def q_stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3947,18 +3789,11 @@ def q_stream_rollup_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     publication and can never drop a row). Replaces ``stream_dedup``
     (COVERAGE.md): exactly-once dedup stays pinned by
     tests/test_streaming.py's duplicate-delivery suite and the PK-dedup
-    contract by the declared ``dedup_pk``/``stream_upsert_ingest`` rows."""
-    import uuid
+    contract by the declared ``dedup_pk``/``stream_upsert_ingest`` rows.
 
-    from coin_for_rich_spark.streaming.rollup import run_rollup_to_memory
-
-    stream = candle_stream(_staged_stream(spark, sf_dir))
-    rolled = streaming_ohlcv_rollup(stream, "5m", watermark=None)
-    return run_rollup_to_memory(
-        rolled,
-        f"stream_rollup_5m_{uuid.uuid4().hex}",
-        state_partitions=_STREAM_STATE_PARTITIONS,
-    )
+    Thin wrapper over the parameterized ``q_stream_rollup``, like
+    ``q_stream_rollup_1d``."""
+    return q_stream_rollup(spark, sf_dir, "5m")
 
 
 def q_stream_rollup_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4012,7 +3847,6 @@ def q_stream_late_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
     nesting (proven in tests/test_properties.py), and volume stays on the
     decimal accumulator through both cascade steps."""
     import tempfile
-    import uuid
 
     from coin_for_rich_spark.operators.candles import cascade_rollup
     from coin_for_rich_spark.streaming.stateful import hold_back_collector
@@ -4093,52 +3927,16 @@ def q_stream_hold_back(spark: SparkSession, sf_dir: str) -> DataFrame:
     same key arrives; each key's newest candle is withheld."""
     import uuid
 
+    from coin_for_rich_spark.streaming.rollup import run_to_memory
     from coin_for_rich_spark.streaming.stateful import hold_back_collector
 
     stream = candle_stream(_staged_stream(spark, sf_dir))
-    name = f"stream_hold_back_{uuid.uuid4().hex}"
-    with scoped_shuffle_partitions(spark, _STREAM_STATE_PARTITIONS):
-        q = (
-            hold_back_collector(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
-def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 streaming twin — exactly-once dedup under duplicate delivery: the
-    replay stream unioned with itself (every event delivered twice, the
-    reconnect-replay failure mode) must land each event exactly once via
-    dropDuplicatesWithinWatermark keyed state.
-
-    UNDECLARED since r10 (swapped for ``stream_rollup_5m``): the
-    duplicate-delivery contract stays pinned by
-    tests/test_streaming.py::test_exactly_once_dedup_under_duplicate_delivery
-    and the PK-dedup semantics by the declared ``dedup_pk`` /
-    ``stream_upsert_ingest`` rows."""
-    import uuid
-
-    stream = _staged_stream(spark, sf_dir)
-    doubled = stream.union(stream)
-    deduped = exactly_once_dedup(
-        doubled, ["event_id"], time_col="ts", watermark="1 hour"
+    return run_to_memory(
+        hold_back_collector(stream),
+        f"stream_hold_back_{uuid.uuid4().hex}",
+        "append",
+        state_partitions=_STREAM_STATE_PARTITIONS,
     )
-    name = f"stream_dedup_{uuid.uuid4().hex}"
-    with scoped_shuffle_partitions(spark, _STREAM_STATE_PARTITIONS):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def _psql_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

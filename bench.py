@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -33,6 +34,19 @@ def run_query(spark, fn, sf_dir: str) -> float:
     df = fn(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
+
+
+def latest_bench_anchor(root: str) -> str | None:
+    """File name of the newest committed round bench under ``root``: the
+    ``BENCH_r<N>.json`` with the largest integer N. Variants such as
+    ``BENCH_r16_c8.json`` (a rerun at another core count) are not
+    anchors."""
+    runs = {
+        int(m.group(1)): name
+        for name in os.listdir(root)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))
+    }
+    return runs[max(runs)] if runs else None
 
 
 def main() -> int:
@@ -89,25 +103,6 @@ def main() -> int:
         probe_pre["spark_shuffle_s"] + probe_post["spark_shuffle_s"]
     ) / 2.0
     norm = round(total / shuffle_ref, 2) if shuffle_ref > 0 else None
-    # HEADLINE round-over-round number (r14 VERDICT ask #6): the ratio of
-    # THIS run's probe-normalized value to the r14 driver bench's 77.0
-    # (BENCH_r14.json value_per_shuffle_unit). Ratios of the normalized
-    # number subtract host drift, so a move here is a plan change, not a
-    # co-tenant burst. Update the constant each round from the driver's
-    # recorded BENCH_r{N}.json.
-    R14_VALUE_PER_SHUFFLE_UNIT = 77.0
-    norm_ratio_vs_r14 = (
-        round(norm / R14_VALUE_PER_SHUFFLE_UNIT, 3) if norm else None
-    )
-    # r16 refresh (r15 VERDICT ask #9): the same trend ratio against the
-    # LATEST driver run's recorded normalization (BENCH_r15.json:
-    # value_per_shuffle_unit 72.18, nonstream_per_shuffle_unit_min 55.68).
-    # ADDITIVE — the r14-anchored fields above keep their definition for
-    # cross-round continuity.
-    R15_VALUE_PER_SHUFFLE_UNIT = 72.18
-    norm_ratio_vs_r15 = (
-        round(norm / R15_VALUE_PER_SHUFFLE_UNIT, 3) if norm else None
-    )
     # r15 instrument hardening. Two measured defects in the mean-probe
     # normalization, both visible in .scale/HOST_PROBE.jsonl (10 same-day
     # rows: shuffle-probe CV 19%, larger than the bench sum's own spread):
@@ -120,8 +115,7 @@ def main() -> int:
     #      fast probe inflates the ratio with no plan change. The
     #      breakdown below normalizes only the host-speed-sensitive part.
     # Both fields are ADDITIVE — value_per_shuffle_unit keeps its r14
-    # definition for continuity; r14 constants below are recomputed from
-    # BENCH_r14.json under the SAME min-probe rule (93.53 / 65.46).
+    # definition for continuity.
     shuffle_ref_min = min(
         probe_pre["spark_shuffle_s"], probe_post["spark_shuffle_s"]
     )
@@ -133,18 +127,20 @@ def main() -> int:
     ns_norm_min = (
         round(nonstream / shuffle_ref_min, 2) if shuffle_ref_min > 0 else None
     )
-    R14_NONSTREAM_PER_SHUFFLE_UNIT_MIN = 65.46
-    ns_ratio_vs_r14 = (
-        round(ns_norm_min / R14_NONSTREAM_PER_SHUFFLE_UNIT_MIN, 3)
-        if ns_norm_min
-        else None
-    )
-    R15_NONSTREAM_PER_SHUFFLE_UNIT_MIN = 55.68
-    ns_ratio_vs_r15 = (
-        round(ns_norm_min / R15_NONSTREAM_PER_SHUFFLE_UNIT_MIN, 3)
-        if ns_norm_min
-        else None
-    )
+    # HEADLINE round-over-round numbers: this run's normalizations as
+    # ratios of the newest committed round bench's (latest_bench_anchor).
+    # Ratios of normalized numbers subtract host drift, so a move here is
+    # a plan change, not a co-tenant burst.
+    repo = os.path.dirname(os.path.abspath(__file__))
+    anchor = latest_bench_anchor(repo)
+    ref: dict = {}
+    if anchor:
+        with open(os.path.join(repo, anchor)) as fh:
+            ref = json.load(fh).get("parsed") or {}
+
+    def vs_anchor(x: float | None, key: str) -> float | None:
+        return round(x / ref[key], 3) if x and ref.get(key) else None
+
     # self-describing environment: host load at measurement time, so a
     # round-over-round comparison can tell plan regressions from co-tenant
     # noise without a controlled re-run (the r6 adjudication cost)
@@ -169,14 +165,15 @@ def main() -> int:
                 "probe_pre": probe_pre,
                 "probe_post": probe_post,
                 "value_per_shuffle_unit": norm,
-                "norm_ratio_vs_r14": norm_ratio_vs_r14,
-                "norm_ratio_vs_r15": norm_ratio_vs_r15,
+                "anchor": anchor,
+                "norm_ratio_vs_anchor": vs_anchor(norm, "value_per_shuffle_unit"),
                 "stream_fixed_s": stream_fixed,
                 "nonstream_s": nonstream,
                 "shuffle_ref_min_s": round(shuffle_ref_min, 3),
                 "nonstream_per_shuffle_unit_min": ns_norm_min,
-                "nonstream_ratio_vs_r14": ns_ratio_vs_r14,
-                "nonstream_ratio_vs_r15": ns_ratio_vs_r15,
+                "nonstream_ratio_vs_anchor": vs_anchor(
+                    ns_norm_min, "nonstream_per_shuffle_unit_min"
+                ),
             }
         )
     )

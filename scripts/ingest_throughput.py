@@ -130,7 +130,7 @@ def main() -> int:
     out = {
         "pk": list(PK),
         "mode": MODE,
-        "cpus": os.cpu_count(),
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg": [round(x, 2) for x in os.getloadavg()],
         "probe_pre": probe_pre,
         "probe_post": probe(spark, tag="ingest_tput_post"),

@@ -201,7 +201,7 @@ def main() -> int:
         "sf_dir": target_dir,
         "oracle_timeout_s": ORACLE_TIMEOUT_S,
         "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
-        "cpus": os.cpu_count(),
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "n_pass": n_pass,
         "n_fail": n_fail,

@@ -103,7 +103,7 @@ def main() -> int:
         "base_dir": SF01,
         "target_dir": SF1,
         "replicas": REPLICAS,
-        "cpus": os.cpu_count(),
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "probe_pre": probe_pre,
         "probe_post": probe(spark, tag="scale_smoke_post"),

@@ -211,7 +211,7 @@ def main() -> int:
             "hot source domain) — skew_data.py's documents leg at 100x "
             "the committed skew gate's scale"
         ),
-        "cpus": os.cpu_count(),
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "probe_pre": probe_pre,
         "probe_post": probe(spark, tag="sf10_skew_post"),
