@@ -9,13 +9,15 @@ Reference parity: candle batches land in Postgres via COPY with an
 identical ``merge(batch, batch_id)`` interface, pluggable into
 ``run_ingest``.
 
-One sink, one client. Per micro-batch, executors COPY their partitions in
+One sink, one client. Per micro-batch, executors stage their partitions in
 parallel into an UNLOGGED staging table over the raw v3 wire protocol
-(``streaming/pgwire.py``, pure stdlib); the driver then issues ONE
-set-based ``INSERT ... SELECT ... ON CONFLICT`` + staging drop in one
-transaction — the merge runs inside the database, the only place it can be
-transactional for an external store. Table DDL (``create_table``) and the
-resolved-state readback (``read``, ``COPY ... TO STDOUT``) go through the
+(``streaming/pgwire.py``, pure stdlib): each task encodes whole Arrow record
+batches (``mapInArrow``) into binary COPY tuples with pyarrow/numpy, no
+per-row Python. The driver then issues ONE set-based
+``INSERT ... SELECT ... ON CONFLICT`` + staging drop in one transaction —
+the merge runs inside the database, the only place it can be transactional
+for an external store. Table DDL (``create_table``) and the resolved-state
+readback (``read``, ``COPY ... TO STDOUT`` in text format) go through the
 same client. Integration-tested against a live PostgreSQL
 (tests/test_postgres_sink.py).
 """
@@ -28,21 +30,48 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# Spark type -> PostgreSQL column type, for creating a target table from a
-# stream's schema. Deliberately scalar-only: composite Spark types must be
-# serialized upstream (pg_text_value fails loud on them anyway).
-_PG_TYPES: dict[type, str] = {
-    T.LongType: "bigint",
-    T.IntegerType: "integer",
-    T.ShortType: "smallint",
-    T.DoubleType: "double precision",
-    T.FloatType: "real",
-    T.StringType: "text",
-    T.BooleanType: "boolean",
-    T.TimestampType: "timestamp",
-    T.DateType: "date",
-    T.BinaryType: "bytea",
+# Spark type -> (PostgreSQL column type, binary COPY value dtype). The dtype
+# is the native numpy storage of a fixed-width value, shipped big-endian;
+# None marks a length-prefixed byte string (UTF-8 text, raw bytea).
+# Deliberately scalar-only: composite Spark types must be serialized
+# upstream, and every other type is refused before a connection opens.
+_PG_TYPES: dict[type, tuple[str, str | None]] = {
+    T.LongType: ("bigint", "i8"),
+    T.IntegerType: ("integer", "i4"),
+    T.ShortType: ("smallint", "i2"),
+    T.DoubleType: ("double precision", "f8"),
+    T.FloatType: ("real", "f4"),
+    T.StringType: ("text", None),
+    T.BooleanType: ("boolean", "u1"),
+    T.TimestampType: ("timestamp", "i8"),
+    T.DateType: ("date", "i4"),
+    T.BinaryType: ("bytea", None),
 }
+
+# PostgreSQL's binary epoch is 2000-01-01, Arrow's 1970-01-01: timestamps
+# shift by that many µs, dates by that many days
+_PG_EPOCH_SHIFT = {T.TimestampType: 946_684_800_000_000, T.DateType: 10_957}
+
+# binary COPY framing: signature, flags and header-extension length (both
+# zero), and the int16 -1 that ends the stream
+_PG_COPY_HEADER = b"PGCOPY\n\xff\r\n\x00" + bytes(8)
+_PG_COPY_TRAILER = b"\xff\xff"
+
+
+def _pg_type(field: T.StructField) -> tuple[str, str | None]:
+    pg = _PG_TYPES.get(type(field.dataType))
+    if pg is None:
+        raise TypeError(
+            f"column {field.name!r}: no PostgreSQL mapping for Spark type "
+            f"{field.dataType.simpleString()}; serialize it to a scalar first"
+        )
+    return pg
+
+
+def _pg_columns(schema: T.StructType) -> str:
+    """``name type, ...`` column list for ``schema``; raises TypeError
+    naming the first column with no PostgreSQL mapping."""
+    return ", ".join(f"{f.name} {_pg_type(f)[0]}" for f in schema.fields)
 
 
 def pg_ddl(table: str, schema: T.StructType, pk: list[str]) -> str:
@@ -50,19 +79,73 @@ def pg_ddl(table: str, schema: T.StructType, pk: list[str]) -> str:
     the unique index ``ON CONFLICT (pk)`` requires. TimescaleDB would add
     ``SELECT create_hypertable(...)`` after this; the merge semantics are
     identical either way (`scripts/database/init/create.sql:12-22`)."""
-    cols = []
-    for f in schema.fields:
-        pg_type = _PG_TYPES.get(type(f.dataType))
-        if pg_type is None:
-            raise TypeError(
-                f"column {f.name!r}: no PostgreSQL mapping for Spark type "
-                f"{f.dataType.simpleString()}; serialize it to a scalar first"
-            )
-        cols.append(f"{f.name} {pg_type}")
     return (
-        f"CREATE TABLE {table} ({', '.join(cols)}, "
+        f"CREATE TABLE {table} ({_pg_columns(schema)}, "
         f"PRIMARY KEY ({', '.join(pk)}))"
     )
+
+
+def _copy_binary_plan(schema: T.StructType) -> list[tuple[str | None, int]]:
+    """Per-column encoder plan for :func:`_copy_binary_tuples`: the value
+    dtype and the epoch shift of each field. Built on the driver, so a
+    column with no PostgreSQL mapping (array, map, struct, decimal,
+    TimestampNTZ) raises TypeError naming it before any connection opens."""
+    return [
+        (_pg_type(f)[1], _PG_EPOCH_SHIFT.get(type(f.dataType), 0))
+        for f in schema.fields
+    ]
+
+
+def _copy_binary_tuples(batch, plan: list[tuple[str | None, int]]):
+    """One Arrow record batch as PostgreSQL binary COPY tuples (the data
+    between :data:`_PG_COPY_HEADER` and :data:`_PG_COPY_TRAILER`), returned as
+    a ``pyarrow.Buffer``. Per tuple: an int16 field count, then per field an
+    int32 length (-1 for NULL) and the big-endian value.
+
+    Vectorized: each field becomes one or two binary columns (length word
+    and value bytes) and one ``binary_join_element_wise`` lays them out row
+    by row. Values ship as exact bits — NaN, ±Infinity and -0.0 need no text
+    rules — and Spark's UTC µs minus the epoch shift is exactly the UTC wall
+    clock :func:`_utc_wall_clock` gives the text format."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = batch.num_rows
+
+    def binary(data: bytes, sizes) -> pa.Array:
+        offsets = np.zeros(n + 1, np.int64)
+        np.cumsum(sizes, out=offsets[1:])
+        return pa.LargeBinaryArray.from_buffers(
+            pa.large_binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+        )
+
+    parts = [binary(np.full(n, len(plan), ">i2").tobytes(), np.full(n, 2))]
+    for col, (dtype, shift) in zip(batch.columns, plan):
+        valid = (
+            np.ones(n, bool) if col.null_count == 0
+            else col.is_valid().to_numpy(zero_copy_only=False)
+        )
+        if dtype is None:
+            value = col.cast(pa.large_binary()).fill_null(b"")
+            size = np.where(valid, pc.binary_length(value).to_numpy(), -1)
+            parts += [binary(size.astype(">i4").tobytes(), np.full(n, 4)), value]
+            continue
+        vals = col.cast(pa.from_numpy_dtype(np.dtype(dtype))).fill_null(0).to_numpy()
+        if shift:
+            vals = vals - shift
+        be = np.dtype(dtype).newbyteorder(">")
+        field = np.empty(n, [("size", ">i4"), ("value", be)])
+        field["size"] = np.where(valid, be.itemsize, -1)
+        field["value"] = vals
+        size = np.where(valid, field.itemsize, 4)
+        data = field.view(np.uint8).reshape(n, -1)
+        if col.null_count:  # a NULL keeps only its length word
+            data = data[np.arange(field.itemsize) < size[:, None]]
+        parts.append(binary(data.tobytes(), size))
+    rows = pc.binary_join_element_wise(*parts, pa.scalar(b"", pa.large_binary()))
+    end = np.frombuffer(rows.buffers()[1], np.int64)[n]  # a fresh array: offset 0
+    return rows.buffers()[2][:end]
 
 
 def hypertable_ddl(table: str, time_col: str, pk: list[str]) -> str:
@@ -103,7 +186,7 @@ def hypertable_ddl(table: str, time_col: str, pk: list[str]) -> str:
 
 
 # Every escape COPY TO text emits (\b \f \v included — the server escapes
-# more control chars than pg_text_value ever produces on the write side).
+# more control chars than pg_text_value ever produces).
 _PG_TEXT_UNESCAPES = {
     "t": "\t", "n": "\n", "r": "\r",
     "b": "\b", "f": "\f", "v": "\v",
@@ -216,9 +299,11 @@ def pg_dedup_order(
 
 def _utc_wall_clock(v):
     """Naive/aware datetime → naive UTC wall clock (identity on all other
-    values). Applied on whichever host encodes the row — driver or executor
-    — so the stored ``timestamp`` is UTC regardless of that host's local
-    timezone."""
+    values): what the sink stores in a ``timestamp`` column, whatever the
+    encoding host's local timezone. The sink's binary COPY gets the same
+    clock from Spark's UTC µs (:func:`_copy_binary_tuples`); this function
+    is kept as the text-format reference that the COPY-text table in
+    tests/test_postgres_sink.py pins, and that ``read`` mirrors."""
     if isinstance(v, datetime.datetime):
         aware = v if v.tzinfo is not None else v.astimezone()
         return aware.astimezone(datetime.timezone.utc).replace(tzinfo=None)
@@ -232,7 +317,10 @@ _PG_TEXT_ESCAPES = str.maketrans(
 
 def pg_text_value(v) -> str:
     """One value in PostgreSQL COPY *text* format: ``\\N`` for NULL,
-    backslash escapes for delimiter/newline/backslash in strings.
+    backslash escapes for delimiter/newline/backslash in strings. The sink
+    writes binary COPY (:func:`_copy_binary_tuples`) and reads text; this is
+    the text-format reference :func:`pg_text_parse` inverts, pinned by the
+    COPY-text table in tests/test_postgres_sink.py.
 
     Text format (not CSV) is deliberate — it is collision-free by
     construction where the CSV form has three lurking bugs: a string value
@@ -278,17 +366,23 @@ class PgWireMergeSink:
 
     Per micro-batch:
 
-    1. driver: recreate an UNLOGGED staging table ``(LIKE target)`` —
-       UNLOGGED skips WAL (the data is transient by design and a crash
-       truncates it, which is exactly the semantics staging wants);
-    2. executors: ``foreachPartition`` — each non-empty partition opens one
-       wire connection and COPYs its rows (text format, ``pg_text_value``
-       encoding of the UTC wall clock). N partitions stage in parallel; the
-       driver never sees a row;
+    1. driver: recreate an UNLOGGED staging table typed from the batch's
+       Spark schema (``_PG_TYPES``) — UNLOGGED skips WAL (the data is
+       transient by design and a crash truncates it, which is exactly the
+       semantics staging wants). Binary COPY needs exact type widths, so
+       staging mirrors the batch, not the target;
+    2. executors: binary COPY of Arrow batches — ``mapInArrow``; each
+       non-empty partition opens one wire connection and streams its record
+       batches as ``COPY ... (FORMAT binary)`` tuples
+       (:func:`_copy_binary_tuples`, the UTC wall clock for timestamps), then
+       yields its staged row count. N partitions stage in parallel; the
+       driver sees only the counts;
     3. driver: ONE transaction — ``INSERT ... SELECT DISTINCT ON (pk) ...
-       ON CONFLICT`` + ``DROP`` of staging. The merge is atomic; a failure
-       anywhere leaves the target untouched and the next attempt recreates
-       staging from scratch.
+       ON CONFLICT`` + ``DROP`` of staging. The INSERT's assignment casts
+       and the target's constraints apply here (a ``bigint`` out of an
+       ``integer`` column's range, a NULL in a NOT NULL column), so the
+       merge is atomic: a failure anywhere leaves the target untouched and
+       the next attempt recreates staging from scratch.
 
     Task-retry safety: a retried partition re-COPYs the same rows, so
     staging may hold EXACT duplicates; ``DISTINCT ON`` collapses them (ties
@@ -312,7 +406,6 @@ class PgWireMergeSink:
         pk: tuple[str, ...],
         mode: str = "ignore",
         tiebreak_col: str | None = None,
-        copy_chunk_bytes: int = 1 << 20,
         socket_timeout: float = 600.0,
         stage_parallelism: int = 16,
     ) -> None:
@@ -330,10 +423,12 @@ class PgWireMergeSink:
         self.pk = list(pk)
         self.mode = mode
         self.tiebreak_col = tiebreak_col
-        self.copy_chunk_bytes = int(copy_chunk_bytes)
         # cap on concurrent staging connections when a NARROW batch is
-        # widened before the COPY stage (see _merge_persisted) — also the
-        # widening target, clamped to the cluster's default parallelism
+        # widened before the COPY stage (see _stage_source) — also the
+        # widening target, clamped to the cluster's default parallelism.
+        # Each non-empty staged partition opens one connection, so a
+        # widened batch opens up to this many, plus one for the staging
+        # DDL and one for the merge transaction
         self.stage_parallelism = int(stage_parallelism)
         # FULL qualified name, sanitized — keying on the bare table name
         # would let a.t and b.t trample each other's staging
@@ -352,9 +447,10 @@ class PgWireMergeSink:
     def _stage_source(self, batch: DataFrame) -> DataFrame:
         """The COPY stage's parallelism is the batch's partition count, and
         a micro-batch that arrives as one small file scans as ONE
-        partition — serializing the whole per-row text encode onto a single
-        core (the exact opposite of this sink's distributed-staging design;
-        measured r16: ~1.3 s/batch serial at sf0.1, −45% on the declared
+        partition — serializing the whole COPY encode and stream onto a
+        single core and connection (the exact opposite of this sink's
+        distributed-staging design; measured r16 with the former per-row
+        text encode: ~1.3 s/batch serial at sf0.1, −45% on the declared
         row once widened). Widen narrow batches to min(stage_parallelism,
         defaultParallelism) before staging; batches that already arrive
         wide (the production stream shape) pass through untouched.
@@ -371,9 +467,7 @@ class PgWireMergeSink:
         return batch
 
     def merge(self, batch: DataFrame, batch_id: int) -> None:
-        from .pgwire import PgWireClient
-
-        # two actions follow (isEmpty probe + the staging foreachPartition);
+        # two actions follow (isEmpty probe + the staging mapInArrow);
         # inside foreachBatch the batch is a plan, so without persist the
         # upstream micro-batch computation would execute twice per batch
         batch.persist()
@@ -385,55 +479,43 @@ class PgWireMergeSink:
     def _merge_persisted(self, batch: DataFrame, batch_id: int) -> None:
         from .pgwire import PgWireClient
 
+        plan = _copy_binary_plan(batch.schema)  # unsupported types: no connection
         if batch.isEmpty():
             return  # idle-trigger batches: skip DDL + connections entirely
         columns = batch.columns
         params = dict(self.params)
         staging = self.staging
-        chunk_bytes = self.copy_chunk_bytes
-        copy_sql = f"COPY {staging} ({', '.join(columns)}) FROM STDIN"
+        copy_sql = (
+            f"COPY {staging} ({', '.join(columns)}) FROM STDIN (FORMAT binary)"
+        )
         post_copy_fault = self._post_copy_fault
 
         with PgWireClient(**params) as c:
             c.query(
                 f"DROP TABLE IF EXISTS {staging}; "
-                f"CREATE UNLOGGED TABLE {staging} "
-                f"(LIKE {self.table} INCLUDING DEFAULTS)"
+                f"CREATE UNLOGGED TABLE {staging} ({_pg_columns(batch.schema)})"
             )
 
-        def copy_partition(rows) -> None:
-            it = iter(rows)
-            try:
-                first = next(it)
-            except StopIteration:
-                return  # empty partition: no connection at all
+        def copy_partition(batches):
+            from itertools import chain
 
-            def chunks():
-                from itertools import chain
+            import pyarrow as pa
 
-                buf: list[str] = []
-                size = 0
-                for row in chain([first], it):
-                    line = (
-                        "\t".join(
-                            pg_text_value(_utc_wall_clock(v)) for v in row
-                        )
-                        + "\n"
+            tuples = (_copy_binary_tuples(b, plan) for b in batches if b.num_rows)
+            first = next(tuples, None)
+            staged = 0
+            if first is not None:  # empty partition: no connection at all
+                with PgWireClient(**params) as conn:
+                    tag = conn.copy_in(
+                        copy_sql,
+                        chain([_PG_COPY_HEADER, first], tuples, [_PG_COPY_TRAILER]),
                     )
-                    buf.append(line)
-                    size += len(line)
-                    if size >= chunk_bytes:
-                        yield "".join(buf).encode()
-                        buf, size = [], 0
-                if buf:
-                    yield "".join(buf).encode()
+                staged = int(tag.split()[-1])
+                if post_copy_fault is not None:
+                    post_copy_fault()  # test seam — see __init__
+            yield pa.RecordBatch.from_arrays([pa.array([staged], pa.int64())], ["n"])
 
-            with PgWireClient(**params) as conn:
-                conn.copy_in(copy_sql, chunks())
-            if post_copy_fault is not None:
-                post_copy_fault()  # test seam — see __init__
-
-        self._stage_source(batch).foreachPartition(copy_partition)
+        self._stage_source(batch).mapInArrow(copy_partition, "n long").collect()
 
         merge_stmt = upsert_sql(
             self.table,

@@ -12,8 +12,10 @@ in the PostgreSQL manual, "Frontend/Backend Protocol").
 
 Scope, honestly: trust authentication only (password/SASL raise — the
 ephemeral in-repo server and typical CI sidecars run trust; a production
-deployment with md5/SCRAM wants a real driver), text-format COPY, simple
-query protocol. Errors surface as ``PgError`` with the server's message.
+deployment with md5/SCRAM wants a real driver), COPY payloads in binary or
+text format on write and text on read (the client frames the bytes; the
+caller encodes them), simple query protocol. Errors surface as
+``PgError`` with the server's message.
 """
 
 from __future__ import annotations
@@ -206,8 +208,11 @@ class PgWireClient:
             # 'T' row description, 'N' notices, 'I' empty query: skipped
 
     def copy_in(self, copy_sql: str, data: Iterable[bytes]) -> str:
-        """``COPY ... FROM STDIN`` with streamed text-format chunks; returns
-        the COPY command tag (e.g. ``COPY 42``). The whole cycle is one
+        """``COPY ... FROM STDIN`` with streamed chunks of bytes-like data,
+        each sent as one CopyData message; returns the COPY command tag
+        (e.g. ``COPY 42``). The chunks are the payload of whatever format
+        ``copy_sql`` names — text, or ``(FORMAT binary)`` with its header
+        and trailer included — split anywhere. The whole cycle is one
         implicit transaction unless wrapped by the caller."""
         self._send(b"Q", copy_sql.encode() + b"\x00")
         err: str | None = None

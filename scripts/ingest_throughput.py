@@ -22,7 +22,7 @@ that bracket real ingest:
   crash-replay / late-data posture — ON CONFLICT DO NOTHING all the way).
 
 Same table DDL, same PK (event_id), same 'ignore' mode (the reference's
-``PSQL_INSERT_IGNOREDUP_QUERY`` posture), same text encoding. The input
+``PSQL_INSERT_IGNOREDUP_QUERY`` posture), same binary COPY encoding. The input
 DataFrame is persisted and counted before any timing, so both legs pay
 only their own transport + merge. Both legs run the SAME min-of-2
 settle-guarded cycle protocol — symmetric methodology, so a co-tenant

@@ -21,6 +21,7 @@ from __future__ import annotations
 import datetime as dt
 import subprocess
 import tempfile
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import Row
@@ -188,10 +189,10 @@ def test_psql_merge_empty_batch_is_a_cheap_noop(spark, pg):
 
 def test_psql_merge_failed_batch_leaves_nothing_behind(spark, pg):
     """Atomicity: the merge into the target runs in ONE transaction after
-    every partition's COPY, so a batch that fails in the COPY (here: a NOT
-    NULL violation — staging is ``LIKE target``) must leave the target
-    untouched, even of the batch's valid rows, and raise with the database
-    error attached. The staging table it leaves is dropped by the next
+    every partition's COPY, so a batch that fails (here: a NOT NULL
+    violation, raised by the merge's INSERT into the target) must leave the
+    target untouched, even of the batch's valid rows, and raise with the
+    database error attached. The staging table it leaves is dropped by the next
     merge, which commits normally."""
     from coin_for_rich_spark.streaming import PgWireMergeSink
 
@@ -352,11 +353,13 @@ def test_create_table_with_hypertable_on_plain_postgres(spark, pg):
 _UTC = dt.timezone.utc
 _IST = dt.timezone(dt.timedelta(hours=5, minutes=30))
 
-# The COPY-text contract of the sink's per-value encoding, one row per
-# case: (id, value, Spark type, value decoded back). The sink stores
-# ``pg_text_value(_utc_wall_clock(value))``; ``pg_text_parse`` must give
-# back the last field. ``TypeError`` there marks a value the encoder must
-# reject at the sink boundary.
+# The COPY contract of the sink's per-value encoding, one row per case:
+# (id, value, Spark type, value decoded back). The text-format reference
+# stores ``pg_text_value(_utc_wall_clock(value))`` and ``pg_text_parse``
+# must give back the last field; the live round trip below sends every
+# accepted row through the sink's binary COPY and must read back the same.
+# ``TypeError`` marks a value the text encoder must reject at the sink
+# boundary.
 PG_TEXT_CASES = [
     ("null", None, T.StringType(), None),
     ("literal-backslash-N", "\\N", T.StringType(), "\\N"),
@@ -373,16 +376,28 @@ PG_TEXT_CASES = [
     ("server-escaped-controls", "a\x0bb\x08c\x0cd", T.StringType(),
      "a\x0bb\x08c\x0cd"),
     ("empty-string", "", T.StringType(), ""),
+    # byte length != character length
+    ("multi-byte-utf8", "Zürich ₿ 𝄞", T.StringType(), "Zürich ₿ 𝄞"),
     ("nan", float("nan"), T.DoubleType(), float("nan")),
     ("inf", float("inf"), T.DoubleType(), float("inf")),
     ("-inf", float("-inf"), T.DoubleType(), float("-inf")),
     ("negative-zero", -0.0, T.DoubleType(), -0.0),
     ("point-one", 0.1, T.DoubleType(), 0.1),
     ("2**53+1", 2**53 + 1, T.LongType(), 2**53 + 1),
+    ("max-long", 2**63 - 1, T.LongType(), 2**63 - 1),
+    ("min-long", -(2**63), T.LongType(), -(2**63)),
     ("bool", True, T.BooleanType(), True),
     ("date", dt.date(2024, 2, 29), T.DateType(), dt.date(2024, 2, 29)),
+    # before PostgreSQL's 2000-01-01 epoch: a negative binary day count
+    ("pre-2000-date", dt.date(1999, 12, 31), T.DateType(), dt.date(1999, 12, 31)),
     ("utc-timestamp-us", dt.datetime(2024, 1, 2, 3, 4, 5, 678901, _UTC),
      T.TimestampType(), dt.datetime(2024, 1, 2, 3, 4, 5, 678901)),
+    # before PostgreSQL's 2000 epoch (negative binary µs), then also before
+    # Spark's 1970 epoch (negative µs on both sides)
+    ("pre-2000-utc-timestamp", dt.datetime(1999, 12, 31, 23, 59, 59, 999999, _UTC),
+     T.TimestampType(), dt.datetime(1999, 12, 31, 23, 59, 59, 999999)),
+    ("pre-1970-utc-timestamp", dt.datetime(1969, 7, 20, 20, 17, 40, 1, _UTC),
+     T.TimestampType(), dt.datetime(1969, 7, 20, 20, 17, 40, 1)),
     # an aware non-UTC value is stored as its UTC wall clock
     ("aware-non-utc-timestamp", dt.datetime(2024, 1, 2, 3, 4, 5, 6, _IST),
      T.TimestampType(), dt.datetime(2024, 1, 1, 21, 34, 5, 6)),
@@ -627,11 +642,12 @@ def test_pgwire_distributed_sink_stages_partitions_in_parallel(spark, pg):
 
 
 def test_pgwire_sink_failed_merge_leaves_target_untouched(spark, pg):
-    """Atomicity: a batch that fails inside the executors' COPY — a value
-    out of the column's range, or a NOT NULL violation (staging is
-    ``LIKE target``, so it carries the constraint) — raises with the
-    database error attached and leaves the target in its previous state;
-    the next batch recreates staging and merges normally."""
+    """Atomicity: a batch that fails in the merge transaction — a Spark
+    ``long`` out of the target's ``integer`` range (staging is typed from
+    the batch, so the INSERT's assignment cast raises), or a NOT NULL
+    violation — raises with the database error attached and leaves the
+    target in its previous state; the next batch recreates staging and
+    merges normally."""
     from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
 
     _sql(pg, "DROP TABLE IF EXISTS t_wf;"
@@ -650,6 +666,68 @@ def test_pgwire_sink_failed_merge_leaves_target_untouched(spark, pg):
     assert _fetch(pg, "SELECT k, n FROM t_wf ORDER BY k") == [
         ["a", "1"], ["d", "4"]
     ]
+
+
+@pytest.mark.parametrize(
+    "ddl, row",
+    [
+        ("k string, tags array<long>", ("a", [1, 2])),
+        ("k string, price decimal(18,2)", ("a", Decimal("1.50"))),
+        ("k string, seen timestamp_ntz", ("a", dt.datetime(2024, 1, 1))),
+    ],
+    ids=["array", "decimal", "timestamp_ntz"],
+)
+def test_pgwire_sink_rejects_unmapped_types_before_connecting(spark, ddl, row):
+    """A column with no binary COPY encoding raises TypeError naming it on
+    the driver, before any connection: the socket dir does not exist, so
+    connecting first would raise a connection error instead."""
+    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
+
+    sink = PgWireMergeSink(["-h", "/nonexistent", "-p", "5432"], "t_types",
+                           pk=("k",), mode="upsert")
+    batch = spark.createDataFrame([row], ddl)
+    column = batch.columns[1]
+    with pytest.raises(TypeError, match=f"column '{column}'"):
+        sink.merge(batch, 0)
+
+
+def test_pgwire_sink_stages_many_arrow_batches_from_one_partition(spark, pg):
+    """A 25,000-row single-partition batch reaches its one staging task as
+    three Arrow record batches (default maxRecordsPerBatch 10,000), COPYed
+    over one connection: the count and per-column sums read back through
+    ``read()`` equal the batch's own, NULLs and both epochs' signs
+    included."""
+    from pyspark.sql import functions as F
+
+    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
+
+    pg_epoch_us = 946_684_800 * 10**6
+    batch = spark.range(25_000).select(
+        F.format_string("k%05d", "id").alias("k"),
+        (F.col("id") - 12_500).alias("n"),
+        F.when(F.col("id") % 7 != 0, F.col("id") * 0.5).alias("v"),
+        # one hour and 3 µs apart, straddling PostgreSQL's 2000 epoch
+        F.timestamp_micros(F.col("id") * 3_600_000_003 + pg_epoch_us - 10**13)
+        .alias("ts"),
+        F.date_add(F.lit("1969-12-01").cast("date"), F.col("id").cast("int"))
+        .alias("d"),
+        (F.col("id") % 3 == 0).alias("flag"),
+    ).coalesce(1)
+    assert int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")) < 25_000
+    sink = PgWireMergeSink(pg, "t_arrow_batches", pk=("k",), mode="ignore",
+                           stage_parallelism=1)
+    sink.create_table(batch.schema, drop=True)
+    sink.merge(batch, 0)
+
+    def sums(df):
+        return tuple(df.agg(
+            F.count("*"), F.sum("n"), F.count("v"), F.sum("v"),
+            F.sum(F.unix_micros("ts").cast("decimal(38,0)")),
+            F.sum(F.unix_date("d")), F.sum(F.col("flag").cast("int")),
+            F.sum(F.length("k")),
+        ).first())
+
+    assert sums(sink.read(spark, batch.schema)) == sums(batch)
 
 
 def test_pgwire_client_over_tcp(spark):
@@ -768,7 +846,7 @@ def test_null_tiebreak_parity_with_parquet_twin(spark, pg, tmp_path):
 def test_stage_source_widens_narrow_batches_only(spark):
     """The COPY stage's parallelism is the batch's partition count; a
     single-file micro-batch scans as ONE partition and would serialize the
-    whole per-row text encode onto one core. _stage_source must widen a
+    whole COPY encode and stream onto one core. _stage_source must widen a
     narrow batch to min(stage_parallelism, defaultParallelism) and leave an
     already-wide batch untouched (the production stream shape — no extra
     exchange)."""
