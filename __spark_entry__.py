@@ -3942,12 +3942,13 @@ def q_stream_hold_back(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _psql_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The live-PostgreSQL leg of ``q_stream_upsert_ingest``: one
     ``PgWireMergeSink`` (streaming/pgwire.py) creates the table, merges
-    and reads back. Each micro-batch stages DISTRIBUTED — every executor
-    partition COPYs in parallel over the raw wire protocol into an
-    UNLOGGED staging table — then one transaction runs the DISTINCT ON +
-    ON CONFLICT DO UPDATE merge — the reference's ingest semantics
-    (`fetchers/helpers/dbhelpers.py:34-132`) in the shape a 1000-executor
-    cluster actually ships batches. The returned relation is the resolved
+    and reads back. Each micro-batch stages as it arrives — every
+    non-empty partition the stream hands ``foreachBatch`` COPYs from its
+    own executor task over the raw wire protocol into an UNLOGGED staging
+    table — then one transaction runs the DISTINCT ON + ON CONFLICT DO
+    UPDATE merge — the reference's ingest semantics
+    (`fetchers/helpers/dbhelpers.py:34-132`): COPY each batch as it
+    arrives, then merge. The returned relation is the resolved
     state read back FROM Postgres via COPY TO — the correctness row
     certifies what the database holds, not what Spark sent."""
     import hashlib

@@ -375,8 +375,9 @@ class PgWireMergeSink:
        non-empty partition opens one wire connection and streams its record
        batches as ``COPY ... (FORMAT binary)`` tuples
        (:func:`_copy_binary_tuples`, the UTC wall clock for timestamps), then
-       yields its staged row count. N partitions stage in parallel; the
-       driver sees only the counts;
+       yields its staged row count. Each non-empty partition of the batch
+       as it arrives stages in parallel (a caller that wants wider staging
+       partitions upstream); the driver sees only the counts;
     3. driver: ONE transaction — ``INSERT ... SELECT DISTINCT ON (pk) ...
        ON CONFLICT`` + ``DROP`` of staging. The INSERT's assignment casts
        and the target's constraints apply here (a ``bigint`` out of an
@@ -407,7 +408,6 @@ class PgWireMergeSink:
         mode: str = "ignore",
         tiebreak_col: str | None = None,
         socket_timeout: float = 600.0,
-        stage_parallelism: int = 16,
     ) -> None:
         from .pgwire import conninfo_params
 
@@ -423,13 +423,6 @@ class PgWireMergeSink:
         self.pk = list(pk)
         self.mode = mode
         self.tiebreak_col = tiebreak_col
-        # cap on concurrent staging connections when a NARROW batch is
-        # widened before the COPY stage (see _stage_source) — also the
-        # widening target, clamped to the cluster's default parallelism.
-        # Each non-empty staged partition opens one connection, so a
-        # widened batch opens up to this many, plus one for the staging
-        # DDL and one for the merge transaction
-        self.stage_parallelism = int(stage_parallelism)
         # FULL qualified name, sanitized — keying on the bare table name
         # would let a.t and b.t trample each other's staging
         self.staging = "_cfr_wstage_" + table.replace(".", "__")
@@ -443,28 +436,6 @@ class PgWireMergeSink:
 
     def _dedup_order(self, columns: list[str]) -> list[str]:
         return pg_dedup_order(self.mode, self.pk, self.tiebreak_col, columns)
-
-    def _stage_source(self, batch: DataFrame) -> DataFrame:
-        """The COPY stage's parallelism is the batch's partition count, and
-        a micro-batch that arrives as one small file scans as ONE
-        partition — serializing the whole COPY encode and stream onto a
-        single core and connection (the exact opposite of this sink's
-        distributed-staging design; measured r16 with the former per-row
-        text encode: ~1.3 s/batch serial at sf0.1, −45% on the declared
-        row once widened). Widen narrow batches to min(stage_parallelism,
-        defaultParallelism) before staging; batches that already arrive
-        wide (the production stream shape) pass through untouched.
-        Result-invariant: the merge's DISTINCT ON order is a TOTAL order
-        (tiebreak + every non-PK column, within_batch_order), so staging
-        row placement cannot change the kept row; retried round-robin
-        tasks re-produce the same assignment (Spark sorts before
-        round-robin repartition), and exact duplicates from a retry still
-        collapse."""
-        sc = batch.sparkSession.sparkContext
-        target = min(self.stage_parallelism, sc.defaultParallelism)
-        if target > 1 and batch.rdd.getNumPartitions() < target:
-            return batch.repartition(target)
-        return batch
 
     def merge(self, batch: DataFrame, batch_id: int) -> None:
         # two actions follow (isEmpty probe + the staging mapInArrow);
@@ -515,7 +486,7 @@ class PgWireMergeSink:
                     post_copy_fault()  # test seam — see __init__
             yield pa.RecordBatch.from_arrays([pa.array([staged], pa.int64())], ["n"])
 
-        self._stage_source(batch).mapInArrow(copy_partition, "n long").collect()
+        batch.mapInArrow(copy_partition, "n long").collect()
 
         merge_stmt = upsert_sql(
             self.table,

@@ -1,14 +1,15 @@
 """Minimal PostgreSQL v3 wire-protocol client — pure stdlib, no driver.
 
 The engine's one PostgreSQL transport: ``PgWireMergeSink`` stages, merges,
-creates its table and reads it back through this client. Staging is
-distributed — every executor COPYs its own partition into an UNLOGGED
-staging table in parallel, then the driver runs ONE set-based merge
-transaction — so the transport has to work from inside executor tasks with
-no JDBC driver jar and no client binary. It speaks the wire protocol
-directly: the startup handshake, the simple-query cycle, and COPY-IN /
-COPY-OUT streaming are ~200 lines of framing (public protocol, documented
-in the PostgreSQL manual, "Frontend/Backend Protocol").
+creates its table and reads it back through this client. Staging runs on
+the executors — each non-empty partition of a micro-batch, as it arrives,
+COPYs into an UNLOGGED staging table from its own task, then the driver
+runs ONE set-based merge transaction — so the transport has to work from
+inside executor tasks with no JDBC driver jar and no client binary. It
+speaks the wire protocol directly: the startup handshake, the simple-query
+cycle, and COPY-IN / COPY-OUT streaming are ~200 lines of framing (public
+protocol, documented in the PostgreSQL manual, "Frontend/Backend
+Protocol").
 
 Scope, honestly: trust authentication only (password/SASL raise — the
 ephemeral in-repo server and typical CI sidecars run trust; a production

@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -232,14 +233,22 @@ class ParquetMergeSink:
         swap_directory(self.path, staged, token)
 
 
+class MergeSink(Protocol):
+    """What ``run_ingest`` needs of a sink: ``ParquetMergeSink`` and
+    ``streaming.jdbc.PgWireMergeSink`` both have it."""
+
+    def merge(self, batch: DataFrame, batch_id: int) -> None: ...
+
+
 def run_ingest(
     stream: DataFrame,
-    sink: ParquetMergeSink,
+    sink: MergeSink,
     checkpoint_dir: str,
     trigger: dict | None = None,
     state_partitions: int | None = None,
 ) -> None:
-    """The micro-batch collector (S4): drive a stream into a merge sink.
+    """The micro-batch collector (S4): drive a stream into a merge sink,
+    each micro-batch handed to ``sink.merge`` as the engine partitioned it.
 
     Production trigger is ``{"processingTime": "10 seconds"}`` — the
     updater's drain cadence (`fetchers/ws/updater.py:29`); tests use

@@ -172,6 +172,37 @@ def _emit_frame(key: tuple, emitted: list) -> pd.DataFrame:
     )
 
 
+# a bucket's running aggregates, named as their STATE_SCHEMA arrays
+_BUCKET_FIELDS = tuple(STATE_SCHEMA.fieldNames()[1:-1])
+
+
+def _load_state(
+    state: GroupState,
+) -> tuple[dict[int, dict[str, Any]], int | None]:
+    """Decode ``STATE_SCHEMA`` into the open-bucket dict (minute → running
+    aggregates) and the emit-once watermark (None when never set)."""
+    if not state.exists:
+        return {}, None
+    minutes, *arrays, emitted_max = state.get
+    open_buckets = {
+        m: dict(zip(_BUCKET_FIELDS, vals)) for m, *vals in zip(minutes, *arrays)
+    }
+    return open_buckets, emitted_max
+
+
+def _store_state(
+    state: GroupState, held: dict[int, dict[str, Any]], emitted_max: int | None
+) -> None:
+    """Encode the held buckets and the watermark back as ``STATE_SCHEMA``."""
+    state.update(
+        (
+            list(held),
+            *([b[f] for b in held.values()] for f in _BUCKET_FIELDS),
+            emitted_max,
+        )
+    )
+
+
 def _flush_fn_emit(
     key: tuple,
     pdfs: Iterator[pd.DataFrame],
@@ -206,14 +237,7 @@ def _flush_fn_emit(
     import time as _time
 
     now_ms_fn = now_ms_fn or (lambda: int(_time.time() * 1000))
-    open_buckets: dict[int, dict[str, Any]] = {}
-    if state.exists:
-        (minutes, o_ts, o_v, hi, lo, c_ts, c_v, vc, n, _emax) = state.get
-        for i, m in enumerate(minutes):
-            open_buckets[m] = dict(
-                open_ts=o_ts[i], open_v=o_v[i], high=hi[i], low=lo[i],
-                close_ts=c_ts[i], close_v=c_v[i], vol_cents=vc[i], n=n[i],
-            )
+    open_buckets, _ = _load_state(state)
 
     if not state.hasTimedOut:
         rows = pd.concat(list(pdfs), ignore_index=True)
@@ -234,20 +258,7 @@ def _flush_fn_emit(
             open_buckets = {}
 
     if open_buckets:
-        state.update(
-            (
-                list(open_buckets),
-                [b["open_ts"] for b in open_buckets.values()],
-                [b["open_v"] for b in open_buckets.values()],
-                [b["high"] for b in open_buckets.values()],
-                [b["low"] for b in open_buckets.values()],
-                [b["close_ts"] for b in open_buckets.values()],
-                [b["close_v"] for b in open_buckets.values()],
-                [b["vol_cents"] for b in open_buckets.values()],
-                [b["n"] for b in open_buckets.values()],
-                None,
-            )
-        )
+        _store_state(state, open_buckets, None)
         if stale_ms is not None:
             state.setTimeoutDuration(stale_ms)
     elif state.exists:
@@ -268,33 +279,7 @@ def _flush_fn(
     if late_policy == "emit":
         yield from _flush_fn_emit(key, pdfs, state, stale_ms, now_ms_fn)
         return
-    # rebuild the open-bucket dict (+ the emit-once watermark) from state
-    open_buckets: dict[int, dict[str, Any]] = {}
-    emitted_max: int | None = None
-    if state.exists:
-        (minutes, o_ts, o_v, hi, lo, c_ts, c_v, vc, n, emax) = state.get
-        emitted_max = emax
-        for i, m in enumerate(minutes):
-            open_buckets[m] = dict(
-                open_ts=o_ts[i], open_v=o_v[i], high=hi[i], low=lo[i],
-                close_ts=c_ts[i], close_v=c_v[i], vol_cents=vc[i], n=n[i],
-            )
-
-    def _write_state(held: dict[int, dict[str, Any]], emax: int | None) -> None:
-        state.update(
-            (
-                list(held),
-                [b["open_ts"] for b in held.values()],
-                [b["open_v"] for b in held.values()],
-                [b["high"] for b in held.values()],
-                [b["low"] for b in held.values()],
-                [b["close_ts"] for b in held.values()],
-                [b["close_v"] for b in held.values()],
-                [b["vol_cents"] for b in held.values()],
-                [b["n"] for b in held.values()],
-                emax,
-            )
-        )
+    open_buckets, emitted_max = _load_state(state)
 
     if state.hasTimedOut:
         # stale flush: emit everything held; keep only the watermark
@@ -306,7 +291,7 @@ def _flush_fn(
             emitted_max = max(
                 m for m, _ in emitted
             ) if emitted_max is None else max(emitted_max, emitted[-1][0])
-            _write_state({}, emitted_max)
+            _store_state(state, {}, emitted_max)
             if stale_ms is not None:
                 state.setTimeoutDuration(stale_ms * _TOMBSTONE_TTL_FACTOR)
         elif emitted_max is not None:
@@ -344,7 +329,7 @@ def _flush_fn(
         else:
             emitted = []
             held = {}
-        _write_state(held, emitted_max)
+        _store_state(state, held, emitted_max)
         if not held and stale_ms is not None:
             # tombstone-only write (every row late-dropped): arm the long
             # TTL, not the stale flush — there is nothing left to flush,

@@ -4,14 +4,18 @@ engine's distributed staging, on the same live PostgreSQL.
 The reference ingests through ONE process and ONE connection per fetcher —
 CSV COPY into the table with an ON CONFLICT fallback
 (`fetchers/helpers/dbhelpers.py:34-132`). The engine's one sink,
-``PgWireMergeSink``, runs in both postures with identical merge semantics:
+``PgWireMergeSink``, stages each non-empty partition of a batch as it
+arrives from its own task, so ONE sink runs both postures with identical
+merge semantics; the legs differ only in the batch's partitioning, which
+the caller owns:
 
 - single writer — the reference's shape: the batch coalesced to one
-  partition and ``stage_parallelism=1``, so one connection COPYs every
-  row into staging before the one merge transaction;
-- distributed — the scale-out shape: every executor partition COPYs in
-  parallel over the raw wire protocol into UNLOGGED staging, then one
-  set-based DISTINCT ON + ON CONFLICT merge.
+  partition, so one connection COPYs every row into staging before the
+  one merge transaction;
+- distributed — the scale-out shape: the batch repartitioned to the
+  cluster's default parallelism, so every partition COPYs in parallel
+  over the raw wire protocol into UNLOGGED staging, then one set-based
+  DISTINCT ON + ON CONFLICT merge.
 
 This script measures both on identical batches (the events→candles
 projection at sf0.1 = 100k rows and sf1 = 1M rows), in the two postures
@@ -69,7 +73,7 @@ def _sql(sink: PgWireMergeSink, sql: str) -> list[list[str | None]]:
 
 def bench_leg(sink: PgWireMergeSink, batch, label: str) -> dict:
     """min-of-2 full cycles, each: settle → truncate → fresh merge into an
-    empty table → identical replay. Both sinks get the SAME protocol — an
+    empty table → identical replay. Both legs get the SAME protocol — an
     asymmetric methodology would let one load burst fabricate the
     speedup."""
     out: dict = {"fresh": None, "replay": None, "loadavg_pre": []}
@@ -107,15 +111,13 @@ def main() -> int:
         batch = candles_view(spark, sf_dir).persist()
         n_rows = batch.count()
         table = f"cfr_tput_{sf_label.replace('.', '_')}"
-        single = PgWireMergeSink(
-            conninfo, table, pk=PK, mode=MODE, stage_parallelism=1
-        )
-        wire = PgWireMergeSink(conninfo, table, pk=PK, mode=MODE)
-        wire.create_table(batch.schema, drop=True)
+        sink = PgWireMergeSink(conninfo, table, pk=PK, mode=MODE)
+        sink.create_table(batch.schema, drop=True)
         narrow = batch.coalesce(1)
+        wide = batch.repartition(spark.sparkContext.defaultParallelism)
         legs: dict[str, dict] = {}
-        legs["single_writer"] = bench_leg(single, narrow, f"{sf_label}/single")
-        legs["distributed"] = bench_leg(wire, batch, f"{sf_label}/wire")
+        legs["single_writer"] = bench_leg(sink, narrow, f"{sf_label}/single")
+        legs["distributed"] = bench_leg(sink, wide, f"{sf_label}/wire")
         batch.unpersist()
         best_single = legs["single_writer"]["fresh"]
         results[sf_label] = {

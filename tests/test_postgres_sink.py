@@ -714,8 +714,7 @@ def test_pgwire_sink_stages_many_arrow_batches_from_one_partition(spark, pg):
         (F.col("id") % 3 == 0).alias("flag"),
     ).coalesce(1)
     assert int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")) < 25_000
-    sink = PgWireMergeSink(pg, "t_arrow_batches", pk=("k",), mode="ignore",
-                           stage_parallelism=1)
+    sink = PgWireMergeSink(pg, "t_arrow_batches", pk=("k",), mode="ignore")
     sink.create_table(batch.schema, drop=True)
     sink.merge(batch, 0)
 
@@ -843,32 +842,43 @@ def test_null_tiebreak_parity_with_parquet_twin(spark, pg, tmp_path):
     assert float(got) == pq_v, (got, pq_v)
 
 
-def test_stage_source_widens_narrow_batches_only(spark):
-    """The COPY stage's parallelism is the batch's partition count; a
-    single-file micro-batch scans as ONE partition and would serialize the
-    whole COPY encode and stream onto one core. _stage_source must widen a
-    narrow batch to min(stage_parallelism, defaultParallelism) and leave an
-    already-wide batch untouched (the production stream shape — no extra
-    exchange)."""
+def test_pgwire_sink_stages_one_task_per_nonempty_partition(spark, pg, tmp_path):
+    """The sink stages each micro-batch as it arrives: one COPY per
+    non-empty partition of the batch, no repartition of its own. A
+    1-partition batch stages through exactly one COPY, the same rows in 4
+    partitions through exactly 4, and both merge to the same state."""
+    import os
+    import uuid
+
     from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
 
-    sink = PgWireMergeSink(
-        ["-h", "/nonexistent", "-p", "5432"], "t_sp", pk=("k",),
-        mode="upsert", tiebreak_col="seq", stage_parallelism=4,
-    )
-    dp = spark.sparkContext.defaultParallelism
-    narrow = spark.createDataFrame(
-        [(f"k{i}", i, float(i)) for i in range(100)],
-        "k string, seq int, v double",
-    ).coalesce(1)
-    widened = sink._stage_source(narrow)
-    assert widened.rdd.getNumPartitions() == min(4, dp)
-    wide = narrow.repartition(8)
-    assert sink._stage_source(wide) is wide
+    rows = [(f"k{i % 40}", i, float(i)) for i in range(400)]
+    schema = "k string, seq int, v double"
+    states = {}
+    for nparts in (1, 4):
+        t = f"t_copies{nparts}"
+        marks = tmp_path / t
+        marks.mkdir()
+        _sql(pg, f"DROP TABLE IF EXISTS {t};"
+                 f"CREATE TABLE {t} (k text PRIMARY KEY, seq int,"
+                 " v double precision)")
+        sink = PgWireMergeSink(pg, t, pk=("k",), mode="upsert",
+                               tiebreak_col="seq")
+        marks_dir = str(marks)
+        # runs on the executor after each partition's COPY commits
+        sink._post_copy_fault = lambda: open(
+            os.path.join(marks_dir, uuid.uuid4().hex), "w"
+        ).close()
+        batch = spark.createDataFrame(rows, schema)
+        batch = batch.coalesce(1) if nparts == 1 else batch.repartition(4)
+        sink.merge(batch, 0)
+        assert len(os.listdir(marks)) == nparts
+        states[nparts] = sorted(_fetch(pg, f"SELECT * FROM {t}"))
+    assert states[1] == states[4] and len(states[1]) == 40
 
 
 def test_pgwire_sink_single_partition_batch_merges_identically(spark, pg):
-    """End-to-end through the widened staging path: a 1-partition batch
+    """End-to-end through one staging task: a 1-partition batch
     (the local micro-batch shape) must merge to the same state as the
     8-partition batch of the same rows."""
     from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
