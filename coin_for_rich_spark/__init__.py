@@ -22,3 +22,43 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+import os as _os
+import zipimport as _zipimport
+
+
+def _stat_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_mtime_ns, st_size)`` changed since that importer last read it.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (``pyspark/worker_util.py`` ``setup_spark_files``). Up to
+    CPython 3.12 each cached ``zipimporter`` then re-reads its archive's
+    whole central directory at once, and a worker caches 14-16 of them over
+    ``pyspark.zip`` (1,328 entries), the py4j zip and the spark-core jar:
+    83-95 ms of every Python task on an idle core, most of a no-op
+    ``mapInArrow`` task. Engine UDFs pickle engine functions by reference,
+    so a worker's first engine task imports this package; from then on a
+    task's invalidation costs one ``stat`` per importer. A changed or
+    replaced archive (``addPyFile``, a new content-addressed package zip) is
+    still re-read, and an archive that cannot be stat'ed takes the original
+    path. On 3.13+ the original only drops the cache, so this is harmless.
+    """
+    original = _zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = _os.stat(self.archive)
+        except OSError:
+            self.__dict__.pop("_read_stamp", None)
+            original(self)
+            return
+        stamp = (st.st_mtime_ns, st.st_size)
+        if self.__dict__.get("_read_stamp") != stamp:
+            original(self)
+            self._read_stamp = stamp
+
+    _zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_stat_checked_zip_invalidation()

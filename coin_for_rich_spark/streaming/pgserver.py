@@ -25,6 +25,7 @@ import pwd
 import shutil
 import subprocess
 import tempfile
+import warnings
 from typing import Callable
 
 # the sandbox installs server binaries here, off PATH; client `psql` is on
@@ -150,8 +151,9 @@ _CACHED: dict[str, object] = {}
 
 def ephemeral_pg() -> list[str] | None:
     """Process-cached scratch cluster: conninfo args, or None when this
-    environment cannot run a server (or the boot failed — remembered, so a
-    broken environment probes once, not per query)."""
+    environment cannot run a server (or the boot failed — warned once with
+    the cause and remembered, so a broken environment probes once, not per
+    query)."""
     if "conninfo" in _CACHED:
         return _CACHED["conninfo"]  # type: ignore[return-value]
     if not pg_runnable():
@@ -159,7 +161,13 @@ def ephemeral_pg() -> list[str] | None:
         return None
     try:
         conninfo, stop = start_cluster(tempfile.mkdtemp(prefix="cfr_pg_eph_"))
-    except Exception:  # noqa: BLE001 — degrade to the parquet twin
+    except Exception as exc:  # noqa: BLE001 — degrade to the parquet twin
+        warnings.warn(
+            f"ephemeral PostgreSQL boot failed ({type(exc).__name__}: {exc});"
+            " falling back to the parquet twin",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         _CACHED["conninfo"] = None
         return None
     _CACHED["conninfo"] = conninfo

@@ -324,10 +324,11 @@ def _kill_one_executor(spark, done_event, grace_s: float = 1.0) -> dict:
     """Driver-side: wait until tasks are actively RUNNING, then SIGKILL one
     of this app's CoarseGrainedExecutorBackend JVMs — a real process death
     mid-stage, not an in-task raise. Returns the kill evidence dict: the
-    pid (None if no executor process exists — local[] mode), plus whether
-    an active stage was still running at the instant of the kill and
-    whether ``run_fn`` had already returned (r12 ADVICE: a SIGKILL landing
-    on an idle executor after the job finished must not read as an
+    pid (None if no executor process exists — local[] mode — or if the run
+    finished before a stage was seen active after the grace period), plus
+    whether an active stage was still running at the instant of the kill
+    and whether ``run_fn`` had already returned (r12 ADVICE: a SIGKILL
+    landing on an idle executor after the job finished must not read as an
     observed injection)."""
     import signal
     import subprocess
@@ -351,9 +352,24 @@ def _kill_one_executor(spark, done_event, grace_s: float = 1.0) -> dict:
     pids = [int(p) for p in out.stdout.split()]
     if not pids:
         return {"pid": None, "no_executor_processes": True}
-    # sample the mid-run predicates at the last instant BEFORE the signal
-    active = bool(tracker.getActiveStageIds())
-    completed = done_event.is_set()
+    # aim the kill: sample the mid-run predicates every 20 ms and signal
+    # right after the first sample that saw a stage active mid-run, so the
+    # kill cannot land in an idle gap between a replay's stages
+    active = completed = False
+    deadline = time.time() + 120
+    while time.time() < deadline:
+        active = bool(tracker.getActiveStageIds())
+        completed = done_event.is_set()
+        if active or completed:
+            break
+        time.sleep(0.02)
+    if completed or not active:
+        return {
+            "pid": None,
+            "no_executor_processes": False,
+            "active_stage_at_kill": active,
+            "run_completed_before_kill": completed,
+        }
     os.kill(pids[0], signal.SIGKILL)
     return {
         "pid": pids[0],
