@@ -3942,11 +3942,12 @@ def q_stream_hold_back(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _psql_upsert_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The live-PostgreSQL leg of ``q_stream_upsert_ingest``: one
     ``PgWireMergeSink`` (streaming/pgwire.py) creates the table, merges
-    and reads back. Each micro-batch stages as it arrives — every
-    non-empty partition the stream hands ``foreachBatch`` COPYs from its
-    own executor task over the raw wire protocol into an UNLOGGED staging
-    table — then one transaction runs the DISTINCT ON + ON CONFLICT DO
-    UPDATE merge — the reference's ingest semantics
+    and reads back. Each micro-batch is ONE Spark action as it arrives —
+    every non-empty partition the stream hands ``foreachBatch`` COPYs from
+    its own executor task over the raw wire protocol into the call's
+    UNLOGGED staging table, which the first such task creates — then, if
+    any rows landed, one transaction runs the DISTINCT ON + ON CONFLICT DO
+    UPDATE merge and drops staging — the reference's ingest semantics
     (`fetchers/helpers/dbhelpers.py:34-132`): COPY each batch as it
     arrives, then merge. The returned relation is the resolved
     state read back FROM Postgres via COPY TO — the correctness row

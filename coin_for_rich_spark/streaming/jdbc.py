@@ -9,11 +9,12 @@ Reference parity: candle batches land in Postgres via COPY with an
 identical ``merge(batch, batch_id)`` interface, pluggable into
 ``run_ingest``.
 
-One sink, one client. Per micro-batch, executors stage their partitions in
-parallel into an UNLOGGED staging table over the raw v3 wire protocol
-(``streaming/pgwire.py``, pure stdlib): each task encodes whole Arrow record
-batches (``mapInArrow``) into binary COPY tuples with pyarrow/numpy, no
-per-row Python. The driver then issues ONE set-based
+One sink, one client, one Spark action per micro-batch. Executors stage their
+partitions in parallel into an UNLOGGED staging table over the raw v3 wire
+protocol (``streaming/pgwire.py``, pure stdlib): the first task with rows
+creates the table, and each task encodes whole Arrow record batches
+(``mapInArrow``) into binary COPY tuples with pyarrow/numpy, no per-row
+Python. If any rows were staged, the driver then issues ONE set-based
 ``INSERT ... SELECT ... ON CONFLICT`` + staging drop in one transaction —
 the merge runs inside the database, the only place it can be transactional
 for an external store. Table DDL (``create_table``) and the resolved-state
@@ -26,6 +27,8 @@ from __future__ import annotations
 
 import datetime
 import math
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -364,26 +367,26 @@ class PgWireMergeSink:
     batch_id)`` contract and within-batch winner rule as
     ``ParquetMergeSink``.
 
-    Per micro-batch:
+    Per micro-batch, ONE Spark action, so the plan ``foreachBatch`` hands
+    over runs once and needs no ``persist``:
 
-    1. driver: recreate an UNLOGGED staging table typed from the batch's
-       Spark schema (``_PG_TYPES``) — UNLOGGED skips WAL (the data is
-       transient by design and a crash truncates it, which is exactly the
-       semantics staging wants). Binary COPY needs exact type widths, so
-       staging mirrors the batch, not the target;
-    2. executors: binary COPY of Arrow batches — ``mapInArrow``; each
-       non-empty partition opens one wire connection and streams its record
-       batches as ``COPY ... (FORMAT binary)`` tuples
-       (:func:`_copy_binary_tuples`, the UTC wall clock for timestamps), then
-       yields its staged row count. Each non-empty partition of the batch
-       as it arrives stages in parallel (a caller that wants wider staging
-       partitions upstream); the driver sees only the counts;
-    3. driver: ONE transaction — ``INSERT ... SELECT DISTINCT ON (pk) ...
-       ON CONFLICT`` + ``DROP`` of staging. The INSERT's assignment casts
-       and the target's constraints apply here (a ``bigint`` out of an
-       ``integer`` column's range, a NULL in a NOT NULL column), so the
-       merge is atomic: a failure anywhere leaves the target untouched and
-       the next attempt recreates staging from scratch.
+    1. driver: name a fresh staging table, ``<staging>_<12 hex>``; no
+       connection;
+    2. executors (``mapInArrow``): each non-empty partition opens one wire
+       connection, creates the UNLOGGED staging table if no task has yet
+       (``IF NOT EXISTS`` under an advisory lock, since two concurrent
+       creations can collide on ``pg_type``), streams its record batches as
+       ``COPY ... (FORMAT binary)`` tuples (:func:`_copy_binary_tuples`,
+       the UTC wall clock for timestamps) and yields its row count. Staging
+       is typed from the batch's Spark schema (``_PG_TYPES``): binary COPY
+       needs exact type widths. UNLOGGED skips WAL for transient data;
+    3. driver: if the counts sum to 0, stop — an empty batch opens no
+       connection. Otherwise ONE transaction — ``INSERT ... SELECT
+       DISTINCT ON (pk) ... ON CONFLICT`` + ``DROP`` of every
+       ``<staging>_<12 hex>`` table in the schema. The INSERT's assignment
+       casts and the target's constraints apply here (a ``bigint`` out of
+       an ``integer`` column's range, a NULL in a NOT NULL column), so the
+       merge is atomic: a failure anywhere leaves the target untouched.
 
     Task-retry safety: a retried partition re-COPYs the same rows, so
     staging may hold EXACT duplicates; ``DISTINCT ON`` collapses them (ties
@@ -391,13 +394,13 @@ class PgWireMergeSink:
     retry-invariant. Batch replay is idempotent: a no-op for 'ignore', a
     same-value overwrite for 'upsert'.
 
-    Concurrency contract: ONE writer per target table at a time — the
-    staging name is derived from the target, so two queries merging into
-    the same table concurrently would trample each other's staging
-    (foreachBatch serializes batches within a query, which is the intended
-    deployment).
-    Crash leftovers are handled by the ``DROP TABLE IF EXISTS`` that opens
-    every merge.
+    Concurrency contract: ONE writer per target table at a time — each
+    merge drops every staging table derived from the target, a concurrent
+    writer's included (foreachBatch serializes batches within a query,
+    which is the intended deployment).
+    Crash leftovers: a failed call's staging table is dropped by the next
+    merge that commits; its name is never reused, so its rows never reach
+    a later batch.
     """
 
     def __init__(
@@ -426,6 +429,11 @@ class PgWireMergeSink:
         # FULL qualified name, sanitized — keying on the bare table name
         # would let a.t and b.t trample each other's staging
         self.staging = "_cfr_wstage_" + table.replace(".", "__")
+        # the server silently truncates an identifier past 63 bytes, and
+        # the merge's sweep of <staging>_<12 hex> would never match it
+        if len(self.staging.encode()) + 13 > 63:
+            raise ValueError(f"table {table!r}: staging name {self.staging}_"
+                             "<12 hex> exceeds PostgreSQL's 63-byte limit")
         # fault-injection seam (None in production): a picklable callable
         # invoked on the EXECUTOR after a partition's COPY commits — the
         # fault-gate axis uses it to fail a task AFTER its rows are staged,
@@ -438,34 +446,19 @@ class PgWireMergeSink:
         return pg_dedup_order(self.mode, self.pk, self.tiebreak_col, columns)
 
     def merge(self, batch: DataFrame, batch_id: int) -> None:
-        # two actions follow (isEmpty probe + the staging mapInArrow);
-        # inside foreachBatch the batch is a plan, so without persist the
-        # upstream micro-batch computation would execute twice per batch
-        batch.persist()
-        try:
-            self._merge_persisted(batch, batch_id)
-        finally:
-            batch.unpersist()
-
-    def _merge_persisted(self, batch: DataFrame, batch_id: int) -> None:
         from .pgwire import PgWireClient
 
         plan = _copy_binary_plan(batch.schema)  # unsupported types: no connection
-        if batch.isEmpty():
-            return  # idle-trigger batches: skip DDL + connections entirely
         columns = batch.columns
         params = dict(self.params)
-        staging = self.staging
-        copy_sql = (
-            f"COPY {staging} ({', '.join(columns)}) FROM STDIN (FORMAT binary)"
+        staging = f"{self.staging}_{uuid.uuid4().hex[:12]}"
+        create_sql = (
+            f"BEGIN; SELECT pg_advisory_xact_lock(hashtext('{staging}')); "
+            f"CREATE UNLOGGED TABLE IF NOT EXISTS {staging} "
+            f"({_pg_columns(batch.schema)}); COMMIT"
         )
+        copy_sql = f"COPY {staging} ({', '.join(columns)}) FROM STDIN (FORMAT binary)"
         post_copy_fault = self._post_copy_fault
-
-        with PgWireClient(**params) as c:
-            c.query(
-                f"DROP TABLE IF EXISTS {staging}; "
-                f"CREATE UNLOGGED TABLE {staging} ({_pg_columns(batch.schema)})"
-            )
 
         def copy_partition(batches):
             from itertools import chain
@@ -477,6 +470,7 @@ class PgWireMergeSink:
             staged = 0
             if first is not None:  # empty partition: no connection at all
                 with PgWireClient(**params) as conn:
+                    conn.query(create_sql)
                     tag = conn.copy_in(
                         copy_sql,
                         chain([_PG_COPY_HEADER, first], tuples, [_PG_COPY_TRAILER]),
@@ -486,20 +480,22 @@ class PgWireMergeSink:
                     post_copy_fault()  # test seam — see __init__
             yield pa.RecordBatch.from_arrays([pa.array([staged], pa.int64())], ["n"])
 
-        batch.mapInArrow(copy_partition, "n long").collect()
+        counts = batch.mapInArrow(copy_partition, "n long").collect()
+        if not sum(r.n for r in counts):
+            return  # idle-trigger batches: no staging table, no connection
 
-        merge_stmt = upsert_sql(
-            self.table,
-            staging,
-            columns,
-            self.pk,
-            self.mode,
-            dedup_order=self._dedup_order(columns),
+        merge_stmt = upsert_sql(self.table, staging, columns, self.pk, self.mode,
+                                dedup_order=self._dedup_order(columns))
+        # unquoted identifiers fold to lower case in the catalog
+        pattern = f"^{re.escape(self.staging.lower())}_[0-9a-f]{{12}}$"
+        sweep = (
+            "DO $$DECLARE t text; BEGIN FOR t IN SELECT tablename FROM "
+            "pg_tables WHERE schemaname = current_schema() AND tablename ~ "
+            f"'{pattern}' LOOP EXECUTE format('DROP TABLE %I', t); "
+            "END LOOP; END $$"
         )
         with PgWireClient(**params) as c:
-            c.query(
-                f"BEGIN; {merge_stmt}; DROP TABLE {staging}; COMMIT;"
-            )
+            c.query(f"BEGIN; {merge_stmt}; {sweep}; COMMIT;")
 
     def create_table(
         self, schema, drop: bool = False, hypertable_time_col: str | None = None

@@ -31,6 +31,7 @@ import shutil
 import uuid
 from typing import Protocol
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -150,25 +151,17 @@ class ParquetMergeSink:
     # -- the foreachBatch body ----------------------------------------------
 
     def merge(self, batch: DataFrame, batch_id: int) -> None:
-        # persist across the two actions: inside foreachBatch the batch
-        # DataFrame is a PLAN, not materialized rows, so isEmpty() + write
-        # would otherwise execute the upstream micro-batch computation
-        # twice — for a stateful source (applyInPandasWithState) that
-        # doubles the whole state pass per batch (measured ~1.3× on the
-        # late-correction pipeline)
-        batch.persist()
-        try:
-            if batch.isEmpty():
-                # same early-out as the database twins: an empty micro-batch
-                # must not permanently add a file-less batch=N partition that
-                # every later read lists and windows over until compaction
-                return
-            # replay-idempotent: the batch owns its partition, overwrites it
-            batch.write.mode("overwrite").parquet(
-                os.path.join(self.path, f"batch={int(batch_id)}")
-            )
-        finally:
-            batch.unpersist()
+        # ONE action: inside foreachBatch the batch is a PLAN, so a second
+        # action (an emptiness probe) would run the upstream micro-batch —
+        # for a stateful source, its whole state pass — twice per batch.
+        # Replay-idempotent: the batch owns its partition, overwrites it
+        out = os.path.join(self.path, f"batch={int(batch_id)}")
+        batch.write.mode("overwrite").parquet(out)
+        # an empty batch writes one 0-row part file; drop its partition, so
+        # no later read lists and windows over it. Footer reads run no job
+        parts = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        if not sum(pq.read_metadata(os.path.join(out, f)).num_rows for f in parts):
+            shutil.rmtree(out)
 
     # -- maintenance --------------------------------------------------------
 

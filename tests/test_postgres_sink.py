@@ -210,8 +210,67 @@ def test_psql_merge_failed_batch_leaves_nothing_behind(spark, pg):
         ["a", "1"], ["d", "4"]
     ]
     # the next batch's merge dropped the failed batch's staging table
-    assert _fetch(pg, "SELECT count(*) FROM pg_tables WHERE tablename = "
-                      f"'{sink.staging}'") == [["0"]]
+    assert _fetch(pg, "SELECT count(*) FROM pg_tables WHERE starts_with("
+                      f"tablename, '{sink.staging}')") == [["0"]]
+
+
+def test_pgwire_sink_failed_staging_job_leaves_nothing_behind(spark, pg):
+    """A staging task that dies after its COPY commits fails the job (local
+    mode runs each task once): ``merge`` raises before the merge
+    transaction, so the target is untouched. The failed call's staging
+    table outlives it; the next good batch merges normally and its merge
+    drops that leftover with its own staging."""
+    from coin_for_rich_spark.streaming import PgWireMergeSink
+
+    _sql(pg, "DROP TABLE IF EXISTS t_stage_fail;"
+             "CREATE TABLE t_stage_fail (k text PRIMARY KEY, v double precision)")
+    sink = PgWireMergeSink(pg, "t_stage_fail", pk=("k",), mode="upsert")
+    schema = "k string, v double"
+    leftovers = ("SELECT count(*) FROM pg_tables WHERE starts_with(tablename, "
+                 f"'{sink.staging}')")
+    sink.merge(spark.createDataFrame([("a", 1.0)], schema), 0)
+
+    def fail():
+        raise RuntimeError("injected staging fault")
+
+    sink._post_copy_fault = fail
+    # one task: no sibling task of the failed job can outlive it
+    bad = spark.createDataFrame([("a", 9.0), ("b", 2.0)], schema).coalesce(1)
+    with pytest.raises(Exception, match="injected staging fault"):
+        sink.merge(bad, 1)
+    assert _fetch(pg, "SELECT k, v FROM t_stage_fail") == [["a", "1"]]
+    assert _fetch(pg, leftovers) == [["1"]]
+    sink._post_copy_fault = None
+    sink.merge(spark.createDataFrame([("c", 3.0)], schema), 2)
+    assert _fetch(pg, "SELECT k, v FROM t_stage_fail ORDER BY k") == [
+        ["a", "1"], ["c", "3"]
+    ]
+    assert _fetch(pg, leftovers) == [["0"]]
+
+
+@pytest.mark.parametrize("backend", ["parquet", "pgwire"])
+def test_merge_sinks_run_one_job_per_batch(spark, pg, tmp_path, backend):
+    """Each sink's ``foreachBatch`` body runs ONE Spark job per non-empty
+    batch: no emptiness probe ahead of the write, so the batch's plan runs
+    once and needs no ``persist``."""
+    from coin_for_rich_spark.streaming import ParquetMergeSink, PgWireMergeSink
+
+    if backend == "parquet":
+        sink = ParquetMergeSink(str(tmp_path / "tbl"), pk=("k",), mode="upsert")
+    else:
+        _sql(pg, "DROP TABLE IF EXISTS t_one_job;"
+                 "CREATE TABLE t_one_job (k text PRIMARY KEY, v double precision)")
+        sink = PgWireMergeSink(pg, "t_one_job", pk=("k",), mode="upsert")
+    # local rows: building the batch runs no job and needs no shuffle
+    batch = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double")
+    sc = spark.sparkContext
+    group = f"merge_one_job_{backend}"
+    sc.setJobGroup(group, "merge")
+    try:
+        sink.merge(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_psql_sink_matches_parquet_twin_on_a_real_stream(spark, sf_dir, tmp_path, pg):
@@ -639,6 +698,17 @@ def test_pgwire_distributed_sink_stages_partitions_in_parallel(spark, pg):
     assert got == want and len(got) == 40
     # staging cleaned up inside the merge transaction
     assert _fetch(pg, "SELECT count(*) FROM pg_tables WHERE tablename LIKE '_cfr_wstage%'")[0][0] == "0"
+    # 16 tasks race to create each call's staging table: the advisory lock
+    # serializes their CREATE ... IF NOT EXISTS, every batch lands whole
+    for batch_id in range(1, 4):
+        rows = [(f"k{i % 40}", 1000 * batch_id + i, float(i)) for i in range(800)]
+        batch = spark.createDataFrame(
+            rows, "k string, seq int, v double"
+        ).repartition(16)
+        sink.merge(batch, batch_id)
+        got = {r[0]: int(r[1]) for r in _fetch(pg, "SELECT k, seq FROM t_w")}
+        assert got == {f"k{i}": 1000 * batch_id + 760 + i for i in range(40)}
+    assert _fetch(pg, "SELECT count(*) FROM pg_tables WHERE tablename LIKE '_cfr_wstage%'")[0][0] == "0"
 
 
 def test_pgwire_sink_failed_merge_leaves_target_untouched(spark, pg):
@@ -689,6 +759,19 @@ def test_pgwire_sink_rejects_unmapped_types_before_connecting(spark, ddl, row):
     column = batch.columns[1]
     with pytest.raises(TypeError, match=f"column '{column}'"):
         sink.merge(batch, 0)
+
+
+def test_pgwire_sink_rejects_staging_names_past_63_bytes():
+    """Each merge stages into ``<staging>_<12 hex>``; past PostgreSQL's
+    63-byte identifier limit the server would truncate that name silently
+    and the merge's sweep of leftovers would never match it."""
+    from coin_for_rich_spark.streaming.jdbc import PgWireMergeSink
+
+    conninfo = ["-h", "/nonexistent", "-p", "5432"]
+    sink = PgWireMergeSink(conninfo, "t" * 38, pk=("k",))
+    assert len(sink.staging.encode()) + 13 == 63
+    with pytest.raises(ValueError, match="63-byte"):
+        PgWireMergeSink(conninfo, "t" * 39, pk=("k",))
 
 
 def test_pgwire_sink_stages_many_arrow_batches_from_one_partition(spark, pg):

@@ -8,6 +8,8 @@ oracle checks — so batch and streaming can't drift apart.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -100,6 +102,22 @@ def test_merge_sink_upsert_newest_wins(spark, tmp_path):
     got = sorted(tuple(r) for r in sink.read(spark).collect())
     # 'a' corrected by batch 2 (highest seq within batch wins), 'b' untouched
     assert got == [("a", 4, 10.9), ("b", 2, 20.0), ("c", 5, 30.0)]
+
+
+def test_merge_sink_empty_batch_adds_no_partition(spark, tmp_path):
+    """An empty micro-batch (an idle trigger) leaves no ``batch=N``
+    partition behind for later reads to list and window over, whether it
+    arrives with no partitions or as empty partitions."""
+    sink = ParquetMergeSink(str(tmp_path / "tbl"), pk=("k",), mode="ignore")
+    schema = "k string, v double"
+    sink.merge(spark.createDataFrame([("a", 1.0)], schema), 0)
+    assert sink.batch_log_length() == 1
+    sink.merge(spark.createDataFrame([], schema), 1)
+    filtered = spark.createDataFrame([("b", 2.0)], schema).repartition(4)
+    sink.merge(filtered.filter("v < 0"), 2)
+    assert sink.batch_log_length() == 1
+    assert sorted(os.listdir(tmp_path / "tbl")) == ["batch=0"]
+    assert [tuple(r) for r in sink.read(spark).collect()] == [("a", 1.0)]
 
 
 def test_hold_back_collector_matches_batch_minus_open_candle(
