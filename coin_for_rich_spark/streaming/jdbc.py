@@ -368,7 +368,7 @@ class PgWireMergeSink:
     ``ParquetMergeSink``.
 
     Per micro-batch, ONE Spark action, so the plan ``foreachBatch`` hands
-    over runs once and needs no ``persist``:
+    over runs once and needs no cache:
 
     1. driver: name a fresh staging table, ``<staging>_<12 hex>``; no
        connection;
