@@ -79,8 +79,7 @@ def main() -> int:
         # memoized query RESULTS must not leak between passes — min-of-N
         # should measure the plan, not a cache hit (staged infrastructure
         # like stream chunks stays warm on purpose)
-        if hasattr(entry_mod, "_reset_bench_caches"):
-            entry_mod._reset_bench_caches()
+        entry_mod._reset_bench_caches()
         for name, fn in entry_mod.queries().items():
             if only and name not in only:
                 continue

@@ -1,6 +1,6 @@
 from .asof import asof_join
 from .rangejoin import range_join
-from .candles import cascade_rollup, cascade_rollup_multi, ohlcv_rollup, rollup_family
+from .candles import cascade_rollup, cascade_rollup_multi, ohlcv_rollup
 from .analytics import (
     common_keys_top30,
     top_k_with_other,
@@ -28,7 +28,6 @@ __all__ = [
     "cascade_rollup",
     "cascade_rollup_multi",
     "ohlcv_rollup",
-    "rollup_family",
     "common_keys_top30",
     "top_k_with_other",
     "weekly_return",

@@ -170,19 +170,3 @@ def cascade_rollup_multi(
         *coarse_candle_aggs(F.col("_fine"))
     )
 
-
-def rollup_family(
-    df: DataFrame,
-    intervals: list[str] = ("5m", "15m", "30m", "1h", "6h", "12h", "1D", "7D"),
-    **kwargs,
-) -> dict[str, DataFrame]:
-    """All 8 reference resolutions (`create.sql:105-223`) as lazy plans.
-
-    In production each entry materializes to its own partitioned sink table
-    (the continuous-aggregate analog); incremental maintenance is the
-    streaming path (streaming.rollup). Coarser rollups could cascade from
-    finer ones (5m → 1h → 1D) to cut input volume ~60× per step; they are
-    derived from the raw stream here to match the reference's refresh
-    semantics exactly.
-    """
-    return {iv: ohlcv_rollup(df, iv, **kwargs) for iv in intervals}

@@ -79,12 +79,13 @@ def lead_bounded_fill(
     )
 
 
+#: the price columns a dummy candle fills with their fetched-window average
+FILL_COLS = ("open", "high", "low", "close")
+
+
 def gap_fill_series(
     candles: DataFrame,
     interval: str,
-    bucket_col: str = "bucket",
-    value_cols: list[str] = ("open", "high", "low", "close"),
-    volume_col: str = "volume",
     start=None,
     end=None,
     series_limit: int | None = None,
@@ -92,10 +93,11 @@ def gap_fill_series(
     """Fill missing buckets of a single-key candle frame.
 
     ``candles`` must already be filtered to one key (the reference fills
-    per-request, one symbol per call). Missing buckets get
-    avg(value over fetched window) for each price column, 0 volume, and
-    ``filled = true``. The avg is decimal-summed / count to stay
-    deterministic under parallel aggregation.
+    per-request, one symbol per call) and carry ``bucket``, ``FILL_COLS``
+    and ``volume``; the output keeps only those columns plus ``filled``.
+    Missing buckets get avg(value over fetched window) for each price
+    column, 0 volume, and ``filled = true``. The avg is decimal-summed /
+    count to stay deterministic under parallel aggregation.
 
     ``series_limit`` reproduces the reference's spine clamp
     (`readers.py:228-238`): its dummy series is ordered DESC and LIMITed
@@ -118,13 +120,29 @@ def gap_fill_series(
     lo = (
         time_bucket(F.lit(start).cast("timestamp"), interval)
         if start is not None
-        else F.min(bucket_col)
+        else F.min("bucket")
     )
     hi = (
         time_bucket(F.lit(end).cast("timestamp"), interval)
         if end is not None
-        else F.max(bucket_col)
+        else F.max("bucket")
     )
+    if series_limit is not None:
+        # both bounds sit on the same grid (lo is a bucket; hi is a
+        # time_bucket floor or a bucket), so stepping back N-1 widths from
+        # hi stays on-grid and greatest() picks the later anchor — the
+        # latest series_limit grid points, exactly the reference's
+        # ORDER BY ts DESC LIMIT over its generate_series.
+        # greatest() SKIPS nulls: an empty fetch (NULL lo) must stay NULL
+        # so the spine stays empty (the reference returns [] — its series
+        # starts at min(fetched time), which does not exist), not become a
+        # full dummy series anchored at the clamp
+        lo = F.when(
+            lo.isNotNull(),
+            F.greatest(
+                lo, hi - F.expr(f"INTERVAL {width * (series_limit - 1)} SECOND")
+            ),
+        )
 
     # ONE global agg carries the bounds AND the fill averages (the
     # reference's dseries computes avg(fetched) alongside its
@@ -141,44 +159,21 @@ def gap_fill_series(
         hi.alias("_hi"),
         *[
             (F.sum(money(c)).cast("double") / F.count(c)).alias(f"_avg_{c}")
-            for c in value_cols
+            for c in FILL_COLS
         ],
     )
-    if series_limit is not None:
-        # both bounds sit on the same grid (lo is a bucket; hi is a
-        # time_bucket floor or a bucket), so stepping back N-1 widths from
-        # hi stays on-grid and greatest() picks the later anchor — the
-        # latest series_limit grid points, exactly the reference's
-        # ORDER BY ts DESC LIMIT over its generate_series
-        clamped = F.greatest(
-            F.col("_lo"),
-            F.col("_hi")
-            - F.expr(f"INTERVAL {width * (series_limit - 1)} SECOND"),
-        )
-        # greatest() SKIPS nulls: an empty fetch (NULL _lo) must stay NULL
-        # so the spine stays empty (the reference returns [] — its series
-        # starts at min(fetched time), which does not exist), not become a
-        # full dummy series anchored at the clamp
-        bounds = bounds.select(
-            F.when(F.col("_lo").isNull(), F.lit(None).cast("timestamp"))
-            .otherwise(clamped)
-            .alias("_lo"),
-            "_hi",
-            *[f"_avg_{c}" for c in value_cols],
-        )
     spine = bounds.select(
         F.explode(
             F.sequence("_lo", "_hi", F.expr(f"INTERVAL {width} SECOND"))
-        ).alias(bucket_col),
-        *[f"_avg_{c}" for c in value_cols],
+        ).alias("bucket"),
+        *[f"_avg_{c}" for c in FILL_COLS],
     )
-    joined = spine.join(candles, on=bucket_col, how="left")
-    filled_flag = F.col(value_cols[0]).isNull()
-    out_cols = [F.col(bucket_col)]
-    for c in value_cols:
-        out_cols.append(
+    return spine.join(candles, on="bucket", how="left").select(
+        "bucket",
+        *[
             F.round(F.coalesce(F.col(c), F.col(f"_avg_{c}")), 4).alias(c)
-        )
-    out_cols.append(F.coalesce(F.col(volume_col), F.lit(0.0)).alias(volume_col))
-    out_cols.append(filled_flag.alias("filled"))
-    return joined.select(*out_cols)
+            for c in FILL_COLS
+        ],
+        F.coalesce(F.col("volume"), F.lit(0.0)).alias("volume"),
+        F.col("open").isNull().alias("filled"),
+    )

@@ -15,6 +15,11 @@ Reference parity: ``readers.read_ohlcvs``
 5. optional gap-fill with avg-filled dummy rows (``empty_ts``,
    `readers.py:210-244`).
 
+Each request builds one predicate for its route: a materialized rollup is
+filtered on key, bucket bounds and their derived ``dt`` bounds
+(``sources.store.prune_time_range``); any other interval filters the ticks
+on key and the equivalent tick bounds, then buckets them on the fly.
+
 Scale posture: the router picks a *pre-aggregated* rollup table exactly like
 the reference picks a continuous aggregate — the read never rescans raw
 minutes for coarse intervals. Filters land on the rollup's partition/sort
@@ -32,6 +37,7 @@ from pyspark.sql import functions as F
 from ..functions.timeutils import INTERVAL_SECONDS
 from ..operators.candles import ohlcv_rollup
 from ..operators.gapfill import gap_fill_series
+from ..sources.store import PARTITION_COL, prune_time_range
 
 #: Interval strings accepted by the API (`web/config/constants.py:2-4`).
 VALID_INTERVALS = list(INTERVAL_SECONDS.keys())
@@ -43,29 +49,30 @@ MATERIALIZED = {"5m", "15m", "30m", "1h", "6h", "12h", "1D", "7D"}
 MAX_LIMIT = 500  # `readers.py:168`
 
 
+def _check_interval(interval: str) -> None:
+    if interval not in INTERVAL_SECONDS:
+        raise ValueError(f"unknown interval {interval!r}; valid: {VALID_INTERVALS}")
+
+
 def route_interval(
     ticks: DataFrame,
     interval: str,
     rollups: dict[str, DataFrame] | None = None,
-    **rollup_kwargs,
 ) -> DataFrame:
     """interval string → candle relation (P8).
 
     ``rollups`` maps interval → pre-materialized rollup DataFrames (the
     continuous-aggregate analog). Missing entries (and the reference's
-    broken '3h'/'14D'/'1M') compute on the fly from ``ticks``. Unknown
-    intervals raise — the reference returns [] for unknown and crashes on
-    the three unbound ones; we validate up front.
+    broken '3h'/'14D'/'1M') compute on the fly from ``ticks``; '1m' is the
+    raw relation bucketed to the minute (the reference serves its ohlcvs
+    table directly; a tick stream needs the bucketing). Unknown intervals
+    raise — the reference returns [] for unknown and crashes on the three
+    unbound ones; we validate up front.
     """
-    if interval not in INTERVAL_SECONDS:
-        raise ValueError(f"unknown interval {interval!r}; valid: {VALID_INTERVALS}")
+    _check_interval(interval)
     if rollups and interval in rollups:
         return rollups[interval]
-    if interval == "1m":
-        # raw relation, bucketed to the minute (the reference serves the
-        # ohlcvs table directly; our tick stream needs the 1m bucketing).
-        return ohlcv_rollup(ticks, "1m", **rollup_kwargs)
-    return ohlcv_rollup(ticks, interval, **rollup_kwargs)
+    return ohlcv_rollup(ticks, interval)
 
 
 def _floor_minute(t) -> dt.datetime | None:
@@ -93,12 +100,13 @@ def _aligned_tick_bounds(interval, start, end):
 
     Fixed widths align to TS_BUCKET_ORIGIN (Monday-aligned weeks included);
     '1M' aligns to calendar month starts. Naive datetimes, UTC semantics —
-    the same frame the bucketing expressions use."""
+    the same frame the bucketing expressions use. ``start`` may be None
+    (no lower bound, ``lo`` None); ``end`` is required."""
     from ..functions.timeutils import TS_BUCKET_ORIGIN
 
     width = INTERVAL_SECONDS[interval]
     epoch = dt.datetime(1970, 1, 1)
-    lo = hi = None
+    lo = None
     if width is not None:
         # microsecond-exact arithmetic (r15 ADVICE): int(total_seconds())
         # truncated a sub-second start, widening the window by one leading
@@ -114,10 +122,9 @@ def _aligned_tick_bounds(interval, start, end):
             lo = epoch + dt.timedelta(
                 microseconds=e if r == 0 else e - r + width_us
             )
-        if end is not None:
-            e = (end - epoch) // dt.timedelta(microseconds=1)
-            f = e - ((e - origin_us) % width_us)
-            hi = epoch + dt.timedelta(microseconds=f + width_us)
+        e = (end - epoch) // dt.timedelta(microseconds=1)
+        f = e - ((e - origin_us) % width_us)
+        hi = epoch + dt.timedelta(microseconds=f + width_us)
     else:  # calendar month
         if start is not None:
             if (start.day, start.hour, start.minute, start.second, start.microsecond) == (1, 0, 0, 0, 0):
@@ -125,9 +132,8 @@ def _aligned_tick_bounds(interval, start, end):
             else:
                 lo = (start.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
                       + dt.timedelta(days=32)).replace(day=1)
-        if end is not None:
-            hi = (end.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
-                  + dt.timedelta(days=32)).replace(day=1)
+        hi = (end.replace(day=1, hour=0, minute=0, second=0, microsecond=0)
+              + dt.timedelta(days=32)).replace(day=1)
     return lo, hi
 
 
@@ -142,11 +148,16 @@ def read_ohlcvs(
     key_col: str = "symbol",
     rollups: dict[str, DataFrame] | None = None,
     now=None,
-    **rollup_kwargs,
 ) -> DataFrame:
     """Chart read: candles for one symbol at one interval, ASC by bucket,
     at most ``min(limit, 500)`` rows (the *latest* ones in range), optionally
     gap-filled.
+
+    ``ticks`` carries ``ts``, ``price``, ``volume`` and ``key_col``. An
+    interval with an entry in ``rollups`` reads that rollup, which must
+    carry its ``dt`` partition column (``sources.store.load_rollups``);
+    any other interval buckets ``ticks`` on the fly. An unknown interval
+    raises ``ValueError`` before any bound is computed.
 
     ``end`` defaults to one minute before ``now`` (`readers.py:171-175` —
     the reference always bounds the fetch at now-1min, floored to the
@@ -158,6 +169,7 @@ def read_ohlcvs(
     ``LIMIT -1``; Spark rejects ``.limit(-1)``) — unlike the analytics
     readers (:func:`read_returns`), where -1 explicitly means "all".
     """
+    _check_interval(interval)
     limit = min(int(limit), MAX_LIMIT)  # `readers.py:168`
     start, end = _floor_minute(start), _floor_minute(end)
     if end is None:
@@ -166,79 +178,53 @@ def read_ohlcvs(
             now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         end = _floor_minute(now) - dt.timedelta(minutes=1)
 
-    # On the raw-rollup route, replace the post-agg bucket bounds with their
-    # EXACT tick-level equivalents (guide §6): the bucket bounds sit on a
-    # derived column (two to_unix_timestamp + mod chains per row, never
-    # pushed to the scan), while ``bucket ≥ start ⟺ ts ≥ ceil_align(start)``
-    # and ``bucket ≤ end ⟺ ts < floor_align(end) + width`` — because
-    # bucket = align_floor(ts) is the largest aligned instant ≤ ts. The
-    # replacement is bit-identical (every kept bucket aggregates its
-    # complete tick set — the bounds are bucket-aligned so no bucket is
-    # split), strictly cheaper per row (two plain timestamp compares), and
-    # PushedFilters gains the ts range so a properly laid-out deployment
-    # skips row groups outside the chart window instead of aggregating the
-    # entire tick history.
-    raw_route = not (rollups and interval in rollups)
-    bucket_bounds_replaced = False
-    if raw_route and (start is not None or end is not None):
-        tick_time = rollup_kwargs.get("time_col", "ts")
-        lo, hi = _aligned_tick_bounds(interval, start, end)
-        if lo is not None:
-            ticks = ticks.filter(F.col(tick_time) >= F.lit(lo))
-        if hi is not None:
-            ticks = ticks.filter(F.col(tick_time) < F.lit(hi))
-        bucket_bounds_replaced = True
-    rel = route_interval(ticks.filter(F.col(key_col) == symbol), interval,
-                         rollups=rollups, keys=[key_col], **rollup_kwargs)
+    key = F.col(key_col) == symbol
     if rollups and interval in rollups:
-        rel = rel.filter(F.col(key_col) == symbol)
-    # a materialized rollup carries its dt partition column: apply the
-    # derived day bounds (Catalyst cannot infer them from `bucket` — dt is
-    # a stored column) so the scan PRUNES instead of reading the rollup's
-    # whole history, then drop dt from the serve schema
-    has_dt = "dt" in rel.columns
-    if start is not None and not bucket_bounds_replaced:
-        rel = rel.filter(F.col("bucket") >= F.lit(start))
-        if has_dt:
-            from ..sources.store import utc_day
-
-            rel = rel.filter(
-                F.col("dt") >= utc_day(F.lit(start).cast("timestamp"))
-            )
-    if end is not None and not bucket_bounds_replaced:
-        rel = rel.filter(F.col("bucket") <= F.lit(end))
-        if has_dt:
-            from ..sources.store import utc_day
-
-            rel = rel.filter(
-                F.col("dt") <= utc_day(F.lit(end).cast("timestamp"))
-            )
-    if has_dt:
-        rel = rel.drop("dt")
+        # the bucket bounds plus their derived dt bounds (Catalyst cannot
+        # infer them from `bucket` — dt is a stored column), so the scan
+        # PRUNES instead of reading the rollup's whole history; dt then
+        # leaves the serve schema
+        rel = prune_time_range(
+            rollups[interval].filter(key), "bucket", start, end
+        ).drop(PARTITION_COL)
+    else:
+        # Replace the post-agg bucket bounds with their EXACT tick-level
+        # equivalents (guide §6): the bucket bounds sit on a derived column
+        # (two to_unix_timestamp + mod chains per row, never pushed to the
+        # scan), while ``bucket ≥ start ⟺ ts ≥ ceil_align(start)`` and
+        # ``bucket ≤ end ⟺ ts < floor_align(end) + width`` — because
+        # bucket = align_floor(ts) is the largest aligned instant ≤ ts. The
+        # replacement is bit-identical (every kept bucket aggregates its
+        # complete tick set — the bounds are bucket-aligned so no bucket is
+        # split), strictly cheaper per row (two plain timestamp compares),
+        # and PushedFilters gains the ts range so a properly laid-out
+        # deployment skips row groups outside the chart window instead of
+        # aggregating the entire tick history.
+        lo, hi = _aligned_tick_bounds(interval, start, end)
+        bounds = F.col("ts") < F.lit(hi)
+        if lo is not None:
+            bounds = (F.col("ts") >= F.lit(lo)) & bounds
+        rel = ohlcv_rollup(ticks.filter(bounds & key), interval, keys=[key_col])
 
     # DESC fetch with limit keeps the latest rows (`readers.py:194-195`),
     # then ASC re-sort for charting (`readers.py:242`).
     fetched = rel.orderBy(F.col("bucket").desc()).limit(limit)
     result = fetched.orderBy(F.col("bucket").asc())
-
-    if empty_ts:
-        # `readers.py:228-244`: the spine starts at min(FETCHED time) — not
-        # at `start`, which only bounds the fetch — runs to `end` (trailing
-        # gaps fill with dummies up to now-1min by default), and only its
-        # latest `limit` grid points survive (the series is DESC-limited
-        # before the join, so real rows older than the clamped spine drop
-        # out). An empty fetch returns [] — there is no min to anchor at.
-        single = result.drop(key_col)
-        # limit=0: the fetch is empty, so the spine anchor (min fetched
-        # time) is NULL and the series is empty either way — the reference's
-        # `... DESC LIMIT 0` spine and this floor-of-1 both return [];
-        # the floor just keeps gap_fill_series's >=1 validation for direct
-        # callers intact
-        filled = gap_fill_series(
-            single, interval, end=end, series_limit=max(limit, 1)
-        )
-        return filled.withColumn(key_col, F.lit(symbol))
-    return result
+    if not empty_ts:
+        return result
+    # `readers.py:228-244`: the spine starts at min(FETCHED time) — not at
+    # `start`, which only bounds the fetch — runs to `end` (trailing gaps
+    # fill with dummies up to now-1min by default), and only its latest
+    # `limit` grid points survive (the series is DESC-limited before the
+    # join, so real rows older than the clamped spine drop out). An empty
+    # fetch returns [] — there is no min to anchor at.
+    # limit=0: the fetch is empty, so the spine anchor (min fetched time)
+    # is NULL and the series is empty either way — the reference's
+    # `... DESC LIMIT 0` spine and this floor-of-1 both return []; the
+    # floor just keeps gap_fill_series's >=1 validation for direct callers
+    # intact
+    filled = gap_fill_series(result, interval, end=end, series_limit=max(limit, 1))
+    return filled.withColumn(key_col, F.lit(symbol))
 
 
 def read_returns(

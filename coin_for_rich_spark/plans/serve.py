@@ -25,26 +25,22 @@ from ..functions.timeutils import epoch_ms
 OHLCV_COLS = ("open", "high", "low", "close", "volume")
 
 
-def serialize_candles(
-    df: DataFrame,
-    time_col: str = "bucket",
-    results_mls: bool = True,
-    value_cols: tuple[str, ...] = OHLCV_COLS,
-) -> DataFrame:
-    """Candle rows → wire shape: epoch time + 4-decimal values.
+def serialize_candles(df: DataFrame, results_mls: bool = True) -> DataFrame:
+    """Candle rows → wire shape, in one projection: epoch ``time`` from
+    ``bucket`` first, then every other column in order, with
+    ``OHLCV_COLS`` rounded to 4 decimals.
 
     ``results_mls`` selects milliseconds vs whole seconds, mirroring the
     API's ``results_mls`` flag (`parsers.py:9-40`).
     """
-    t = epoch_ms(time_col)
+    t = epoch_ms("bucket")
     if not results_mls:
         t = (t / F.lit(1000)).cast("bigint")
-    out = df.withColumn("time", t).drop(time_col)
-    for c in value_cols:
-        if c in out.columns:
-            out = out.withColumn(c, round4(c))
-    cols = ["time"] + [c for c in out.columns if c != "time"]
-    return out.select(*cols)
+    return df.select(
+        t.alias("time"),
+        *[round4(c).alias(c) if c in OHLCV_COLS else c
+          for c in df.columns if c != "bucket"],
+    )
 
 
 #: serve-loop poll period per interval, in seconds (``senders.py:84-119``):

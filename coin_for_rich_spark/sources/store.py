@@ -21,10 +21,13 @@ relationship between the reference's `ohlcvs` and its 8 rollup views.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.candles import rollup_family
+from ..operators.candles import ohlcv_rollup
 
 PARTITION_COL = "dt"
 
@@ -90,30 +93,31 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
 
 
 def prune_time_range(df: DataFrame, time_col: str, start=None, end=None) -> DataFrame:
-    """Apply a time-range filter AND its derived partition predicate.
+    """Apply a time-range filter AND its derived partition predicate, as
+    one predicate.
 
     The redundant ``dt`` bounds are what the scan planner prunes on —
     Catalyst cannot infer them from the ``time_col`` bounds because ``dt``
     is a stored column, not an expression, once the table is on disk.
     """
+    bounds = []
     if start is not None:
-        df = df.filter(
-            (F.col(time_col) >= F.lit(start))
-            & (F.col(PARTITION_COL) >= utc_day(F.lit(start).cast("timestamp")))
-        )
+        bounds += [
+            F.col(time_col) >= F.lit(start),
+            F.col(PARTITION_COL) >= utc_day(F.lit(start).cast("timestamp")),
+        ]
     if end is not None:
-        df = df.filter(
-            (F.col(time_col) <= F.lit(end))
-            & (F.col(PARTITION_COL) <= utc_day(F.lit(end).cast("timestamp")))
-        )
-    return df
+        bounds += [
+            F.col(time_col) <= F.lit(end),
+            F.col(PARTITION_COL) <= utc_day(F.lit(end).cast("timestamp")),
+        ]
+    return df.filter(reduce(operator.and_, bounds)) if bounds else df
 
 
 def materialize_rollups(
     ticks: DataFrame,
     base_path: str,
     intervals: tuple[str, ...] = ("5m", "15m", "30m", "1h", "6h", "12h", "1D", "7D"),
-    **rollup_kwargs,
 ) -> dict[str, str]:
     """Write the rollup family to per-resolution partitioned sink tables
     (the 8 continuous aggregates, `create.sql:105-223`); returns
@@ -133,7 +137,7 @@ def materialize_rollups(
     state)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    family = rollup_family(ticks, list(intervals), **rollup_kwargs)
+    family = {iv: ohlcv_rollup(ticks, iv) for iv in intervals}
 
     def _write(item: tuple[str, DataFrame]) -> tuple[str, str]:
         interval, rolled = item

@@ -51,8 +51,7 @@ def main() -> int:
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan)
         print(f"captured {name}")
-        if hasattr(entry_mod, "_reset_bench_caches"):
-            entry_mod._reset_bench_caches()
+        entry_mod._reset_bench_caches()
     spark.stop()
     return 0
 

@@ -52,13 +52,11 @@ def run_plan(spark: SparkSession, name: str, sf_dir: str) -> dict:
     fn = entry_mod.queries()[name]
     # pass 0 (untimed): row count — warms fs cache/codegen so the timed
     # passes measure the plan; passes 1..2: noop-writer wall time, MIN
-    if hasattr(entry_mod, "_reset_bench_caches"):
-        entry_mod._reset_bench_caches()
+    entry_mod._reset_bench_caches()
     rows = fn(spark, sf_dir).count()
     wall = None
     for _ in range(2):
-        if hasattr(entry_mod, "_reset_bench_caches"):
-            entry_mod._reset_bench_caches()
+        entry_mod._reset_bench_caches()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()

@@ -77,6 +77,16 @@ def test_route_interval_rejects_unknown(spark, sf_dir):
         route_interval(cv, "42s")
 
 
+def test_read_ohlcvs_rejects_unknown_interval(spark, sf_dir):
+    """The reader raises the router's ValueError on both routes, before any
+    bound arithmetic can fail on the interval first."""
+    cv = candles_view(spark, sf_dir)
+    with pytest.raises(ValueError, match="unknown interval"):
+        read_ohlcvs(cv, "click", "42s")
+    with pytest.raises(ValueError, match="unknown interval"):
+        read_ohlcvs(cv, "click", "42s", rollups={"1h": cv})
+
+
 def test_read_ohlcvs_clamps_limit(spark, sf_dir):
     cv = candles_view(spark, sf_dir)
     # `readers.py:168`: limit = min(limit, 500)

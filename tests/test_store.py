@@ -80,6 +80,47 @@ def test_materialized_route_scans_rollup_not_ticks(spark, sf_dir, tmp_path):
     assert "events.parquet" not in plan
 
 
+@pytest.fixture(scope="module")
+def rollups_1h(spark, sf_dir, tmp_path_factory):
+    cv = candles_view(spark, sf_dir)
+    base = str(tmp_path_factory.mktemp("rollups_1h"))
+    return cv, load_rollups(spark, materialize_rollups(cv, base, intervals=("1h",)))
+
+
+def test_materialized_route_prunes_dt_partitions(rollups_1h):
+    """A windowed read on the materialized route must hand the scan its
+    derived dt bounds: without them every answer stays right while each
+    read lists and scans the rollup's whole history."""
+    cv, rollups = rollups_1h
+    served = read_ohlcvs(
+        cv, "purchase", "1h", start="2024-01-10 00:00:00",
+        end="2024-01-12 06:00:00", rollups=rollups,
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        served.explain("formatted")
+    scans = [node for node in buf.getvalue().split("\n(") if "candles_1h" in node]
+    assert scans, "no scan of the candles_1h sink table"
+    part = [ln for ln in scans[0].splitlines() if ln.startswith("PartitionFilters")]
+    assert part and "dt" in part[0] and ">=" in part[0] and "<=" in part[0], part
+
+
+def test_materialized_gap_fill_matches_ticks(rollups_1h):
+    """empty_ts on the materialized route answers exactly what the tick
+    route answers, with a limit that clamps the spine below its span."""
+    cv, rollups = rollups_1h
+    req = dict(start="2024-01-05 00:00:00", end="2024-01-12 06:30:00",
+               limit=40, empty_ts=True)
+    served = read_ohlcvs(cv, "purchase", "1h", rollups=rollups, **req)
+    direct = read_ohlcvs(cv, "purchase", "1h", **req)
+    assert served.columns == direct.columns
+    rows = served.collect()
+    assert rows == direct.collect()
+    # the clamp is active: 40 grid points, real candles and dummies both
+    assert len(rows) == 40
+    assert {r.filled for r in rows} == {True, False}
+
+
 def test_utc_day_is_session_timezone_independent(spark):
     """The dt partition derivation must cut days on UTC midnight no matter
     the session timezone — a shifted layout written by a non-UTC session
