@@ -494,15 +494,16 @@ def q_chart_read_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_chart_read_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled chart read (J4+A8, readers.py:210-244): spine join +
-    avg-filled dummy candles with volume 0, under the reference's exact
-    spine semantics (serve-pass fix, round 10): the spine anchors at
-    min(FETCHED bucket) — never at ``start`` — runs to ``end``, and only
-    its latest ``limit`` grid points survive (the reference DESC-limits
-    its generate_series before the join, `readers.py:228-238`), so real
-    rows older than the clamped spine drop out of the response. ``end``
-    is pinned to max(ts) floored to the minute — the deterministic stand-in
-    for the reference's default now-1min anchor (`readers.py:171-175`)."""
+    """Gap-filled chart read (J4+A8, readers.py:210-244): each spine point
+    looks up its fetched candle or becomes an avg-filled dummy candle with
+    volume 0, under the reference's exact spine semantics (serve-pass fix,
+    round 10): the spine anchors at min(FETCHED bucket) — never at ``start``
+    — runs to ``end``, and only its latest ``limit`` grid points survive
+    (the reference DESC-limits its generate_series before the join,
+    `readers.py:228-238`), so real rows older than the clamped spine drop
+    out of the response. ``end`` is pinned to max(ts) floored to the minute
+    — the deterministic stand-in for the reference's default now-1min anchor
+    (`readers.py:171-175`)."""
     cv = candles_view(spark, sf_dir)
     end = cv.agg(F.max("ts")).first()[0]
     return read_ohlcvs(cv, "click", "1h", end=end, limit=500, empty_ts=True)

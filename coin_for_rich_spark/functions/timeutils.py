@@ -7,8 +7,8 @@ Reference parity:
   month) map to ``date_trunc`` — both are pure Catalyst expressions that stay
   inside whole-stage codegen (no UDFs, per SURVEY §2.10).
 - epoch-millisecond conversions — the reference converses in epoch ms at every
-  boundary (`common/helpers/datetimehelpers.py:8-127`); Spark's
-  ``timestamp_millis`` / ``unix_millis`` are the built-in equivalents.
+  boundary (`common/helpers/datetimehelpers.py:8-127`); ``epoch_ms`` wraps
+  Spark's built-in ``unix_millis`` for the outbound (wire) direction.
 """
 
 from __future__ import annotations
@@ -73,8 +73,3 @@ def epoch_ms(ts: Column | str) -> Column:
     c = F.col(ts) if isinstance(ts, str) else ts
     return F.unix_millis(c)
 
-
-def from_epoch_ms(ms: Column | str) -> Column:
-    """epoch milliseconds → timestamp (`datetimehelpers.py:8-15` contract)."""
-    c = F.col(ms) if isinstance(ms, str) else ms
-    return F.timestamp_millis(c)

@@ -140,21 +140,6 @@ def png_decode_gray(data: bytes) -> np.ndarray:
     return out
 
 
-def resample_gray(pixels: np.ndarray, target_w: int, target_h: int) -> np.ndarray:
-    """Nearest-neighbor resample of a (h, w) uint8 image to (target_h,
-    target_w) — source pixel for output (x, y) is (floor(x·w/W), floor(y·h/H)),
-    the standard NN mapping. Integer index math only: deterministic on any
-    platform, and exactly predictable by an oracle that knows the source
-    pixels."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w = px.shape
-    if target_w < 1 or target_h < 1:
-        raise ValueError("target dimensions must be >= 1")
-    xs = (np.arange(target_w, dtype=np.int64) * w) // target_w
-    ys = (np.arange(target_h, dtype=np.int64) * h) // target_h
-    return px[np.ix_(ys, xs)]
-
-
 def wav_encode_pcm16(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
     """Encode a 1-D int16 array as a mono PCM16 WAV."""
     s = np.asarray(samples, dtype="<i2")

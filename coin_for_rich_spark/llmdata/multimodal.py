@@ -42,20 +42,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def media_schema() -> T.StructType:
-    """Typed metadata + opaque payload for a media object."""
-    return T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("mime", T.StringType(), False),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("duration_ms", T.LongType(), True),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -267,67 +253,6 @@ def decode_media_stats(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(decode, schema=DECODE_STATS_SCHEMA)
-
-
-RESAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("target_w", T.IntegerType(), False),
-        T.StructField("target_h", T.IntegerType(), False),
-        T.StructField("n_values", T.LongType(), False),
-        T.StructField("value_sum", T.LongType(), False),
-        T.StructField("value_min", T.LongType(), False),
-        T.StructField("value_max", T.LongType(), False),
-    ]
-)
-
-
-def resample_media(media: DataFrame, max_w: int = 16, max_h: int = 12) -> DataFrame:
-    """REAL pixel resample for grayscale-PNG rows: decode → aspect-preserving
-    nearest-neighbor downscale (same dimension arithmetic as ``resize_plan``)
-    → RE-ENCODE to a fresh PNG → decode again → integer value stats.
-
-    The re-encode/re-decode leg is deliberate: the emitted statistics have
-    passed through the full codec twice, so they certify encoder and decoder
-    against each other on *derived* images, not just generated ones. NN
-    index math is integer-exact, which is what lets an oracle predict every
-    output pixel from the source formulas. Map-only mapInPandas; bytes never
-    leave the executor.
-    """
-    import math
-
-    import numpy as np
-
-    from .codecs import png_decode_gray, png_encode_gray, resample_gray
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, mime, payload in zip(
-                pdf["media_id"], pdf["mime"], pdf["payload"]
-            ):
-                if mime != "image/png":
-                    continue
-                px = png_decode_gray(bytes(payload))
-                h, w = px.shape
-                scale = min(1.0, max_w / w, max_h / h)
-                tw = max(1, int(math.floor(w * scale)))
-                th = max(1, int(math.floor(h * scale)))
-                out = resample_gray(px, tw, th)
-                v = png_decode_gray(png_encode_gray(out)).astype(np.int64)
-                rows.append(
-                    (int(media_id), w, h, tw, th, v.size,
-                     int(v.sum()), int(v.min()), int(v.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "target_w", "target_h",
-                         "n_values", "value_sum", "value_min", "value_max"],
-            )
-
-    return media.mapInPandas(work, schema=RESAMPLE_SCHEMA)
 
 
 def resize_plan(

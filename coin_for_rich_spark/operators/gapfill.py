@@ -7,12 +7,12 @@ data (J4), missing rows COALESCEd to dummy candles whose open/high/low/close
 are the AVERAGE over the *fetched window* and whose volume is 0 (A8) — a
 reference idiosyncrasy reproduced exactly (SURVEY §4 item 3).
 
-Spark-first expression: ``explode(sequence(min, max, interval))`` builds the
-spine (Postgres ``generate_series`` equivalent, SURVEY §2.7); the window
-average comes from an unpartitioned-window aggregate over the (already
-small, post-rollup, limit-clamped ≤500-row) fetched set — mirroring the
-reference, which also computes the avg over the limited fetched set
-(`readers.py:221-227`).
+Spark-first expression: one global aggregate row holds the spine
+``sequence(min, max, interval)`` (Postgres ``generate_series``, SURVEY §2.7),
+the averages and a bucket → candle map of the fetched rows; each exploded
+spine point looks its bucket up in that map instead of a LEFT JOIN, so the
+small (post-rollup, ≤500-row) fetched set is read once. The reference also
+averages over the limited fetched set (`readers.py:221-227`).
 """
 
 from __future__ import annotations
@@ -93,17 +93,19 @@ def gap_fill_series(
     """Fill missing buckets of a single-key candle frame.
 
     ``candles`` must already be filtered to one key (the reference fills
-    per-request, one symbol per call) and carry ``bucket``, ``FILL_COLS``
-    and ``volume``; the output keeps only those columns plus ``filled``.
-    Missing buckets get avg(value over fetched window) for each price
-    column, 0 volume, and ``filled = true``. The avg is decimal-summed /
-    count to stay deterministic under parallel aggregation.
+    per-request, one symbol per call), hold each ``bucket`` once and never
+    NULL (a repeat raises ``DUPLICATED_MAP_KEY``), and carry ``bucket``,
+    ``FILL_COLS`` and ``volume``; the output keeps only those columns plus
+    ``filled``, ascending by ``bucket``. Missing buckets get avg(value over
+    fetched window) for each price column, 0 volume, and ``filled = true``.
+    The avg is decimal-summed / count to stay deterministic under parallel
+    aggregation.
 
     ``series_limit`` reproduces the reference's spine clamp
     (`readers.py:228-238`): its dummy series is ordered DESC and LIMITed
     before the join, so only the LATEST ``series_limit`` grid points
     survive — real rows older than the clamped spine are dropped from the
-    output (they join nothing). ``None`` leaves the spine unclamped.
+    output (the spine misses them). ``None`` leaves the spine unclamped.
     ``start``, when given, anchors the spine explicitly; the reference
     reader never does this (its spine always starts at min(fetched time) —
     `readers.py:230`), so the parity caller passes ``start=None``.
@@ -114,7 +116,7 @@ def gap_fill_series(
     if series_limit is not None and series_limit < 1:
         raise ValueError(f"series_limit must be >= 1, got {series_limit}")
     # explicit bounds SNAP to the bucket grid (an unaligned start would put
-    # every spine timestamp off-grid, the join would match nothing, and all
+    # every spine timestamp off-grid, the lookup would find nothing, and all
     # real candles would come back as filled dummies); data-derived bounds
     # are bucket values already
     lo = (
@@ -144,36 +146,31 @@ def gap_fill_series(
             ),
         )
 
-    # ONE global agg carries the bounds AND the fill averages (the
-    # reference's dseries computes avg(fetched) alongside its
-    # generate_series, `readers.py:221-238`) — deriving the averages from
-    # the joined frame instead would LOSE them whenever no fetched row
-    # survives the clamped spine (a sparse key whose latest data is older
-    # than the last `series_limit` grid points must still emit avg-filled
-    # dummies, not NULLs — caught by the live-PG reader-shape leg). The
-    # avg is decimal-summed / count to stay deterministic under parallel
-    # aggregation. Agg, never select: with BOTH bounds literal, a select
-    # would emit one row PER candle and duplicate the spine N times.
-    bounds = candles.agg(
-        lo.alias("_lo"),
-        hi.alias("_hi"),
+    # ONE global agg carries the spine, the fill averages and the fetched
+    # rows (the reference's dseries computes avg(fetched) alongside its
+    # generate_series, `readers.py:221-238`). The averages come from every
+    # fetched row, so a sparse key whose latest data is older than the
+    # last `series_limit` grid points still emits avg-filled dummies, not
+    # NULLs (caught by the live-PG reader-shape leg). Agg, never select:
+    # with BOTH bounds literal, a select would emit one row PER candle and
+    # duplicate the spine N times. The one row explodes in sequence order
+    # inside one partition, so the output is ascending with no sort.
+    row = F.col("_rows")[F.col("bucket")]
+    return candles.agg(
+        F.sequence(lo, hi, F.expr(f"INTERVAL {width} SECOND")).alias("_spine"),
+        F.map_from_entries(
+            F.collect_list(F.struct("bucket", F.struct(*FILL_COLS, "volume")))
+        ).alias("_rows"),
         *[
             (F.sum(money(c)).cast("double") / F.count(c)).alias(f"_avg_{c}")
             for c in FILL_COLS
         ],
-    )
-    spine = bounds.select(
-        F.explode(
-            F.sequence("_lo", "_hi", F.expr(f"INTERVAL {width} SECOND"))
-        ).alias("bucket"),
-        *[f"_avg_{c}" for c in FILL_COLS],
-    )
-    return spine.join(candles, on="bucket", how="left").select(
+    ).select("*", F.explode("_spine").alias("bucket")).select(
         "bucket",
         *[
-            F.round(F.coalesce(F.col(c), F.col(f"_avg_{c}")), 4).alias(c)
+            F.round(F.coalesce(row[c], F.col(f"_avg_{c}")), 4).alias(c)
             for c in FILL_COLS
         ],
-        F.coalesce(F.col("volume"), F.lit(0.0)).alias("volume"),
-        F.col("open").isNull().alias("filled"),
+        F.coalesce(row["volume"], F.lit(0.0)).alias("volume"),
+        row["open"].isNull().alias("filled"),
     )

@@ -207,11 +207,11 @@ def read_ohlcvs(
         rel = ohlcv_rollup(ticks.filter(bounds & key), interval, keys=[key_col])
 
     # DESC fetch with limit keeps the latest rows (`readers.py:194-195`),
-    # then ASC re-sort for charting (`readers.py:242`).
+    # then ASC re-sort for charting (`readers.py:242`); the gap fill emits
+    # its spine ascending, so it takes the fetch unsorted.
     fetched = rel.orderBy(F.col("bucket").desc()).limit(limit)
-    result = fetched.orderBy(F.col("bucket").asc())
     if not empty_ts:
-        return result
+        return fetched.orderBy(F.col("bucket").asc())
     # `readers.py:228-244`: the spine starts at min(FETCHED time) — not at
     # `start`, which only bounds the fetch — runs to `end` (trailing gaps
     # fill with dummies up to now-1min by default), and only its latest
@@ -223,7 +223,7 @@ def read_ohlcvs(
     # `... DESC LIMIT 0` spine and this floor-of-1 both return []; the
     # floor just keeps gap_fill_series's >=1 validation for direct callers
     # intact
-    filled = gap_fill_series(result, interval, end=end, series_limit=max(limit, 1))
+    filled = gap_fill_series(fetched, interval, end=end, series_limit=max(limit, 1))
     return filled.withColumn(key_col, F.lit(symbol))
 
 

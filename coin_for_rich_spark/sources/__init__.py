@@ -1,4 +1,4 @@
-from .tables import TABLES, load_table, load_all, candles_view
+from .tables import TABLES, load_table, candles_view
 from .fetchplan import (
     build_fetch_plan,
     dead_letters,
@@ -37,7 +37,6 @@ __all__ = [
     "zorder_key_n",
     "TABLES",
     "load_table",
-    "load_all",
     "candles_view",
     "build_fetch_plan",
     "dead_letters",

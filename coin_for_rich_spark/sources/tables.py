@@ -106,16 +106,6 @@ def _to_event_time(dt: T.DataType, col: str):
     )
 
 
-def load_all(spark: SparkSession, sf_dir: str, register_views: bool = False) -> dict[str, DataFrame]:
-    out = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def candles_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events` normalized to the candle-stream shape the reference's fetchers
     emit (`fetchers/helpers/ws.py:6-17`): a key (symbol), an event time, and a

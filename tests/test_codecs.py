@@ -129,22 +129,6 @@ def test_attach_real_media_decodes_externally(spark, sf_dir):
             assert rate == 8000 and len(s) == r.media_id % 977 + 100
 
 
-def test_resample_gray_nn_mapping():
-    from coin_for_rich_spark.llmdata.codecs import resample_gray
-
-    rng = np.random.RandomState(9)
-    px = rng.randint(0, 256, size=(23, 31), dtype=np.uint8)
-    out = resample_gray(px, 16, 11)
-    assert out.shape == (11, 16)
-    for y in range(11):
-        for x in range(16):
-            assert out[y, x] == px[(y * 23) // 11, (x * 31) // 16]
-    # upscale and identity
-    assert np.array_equal(resample_gray(px, 31, 23), px)
-    up = resample_gray(px, 62, 23)
-    assert up.shape == (23, 62) and up[0, 0] == px[0, 0] and up[0, 1] == px[0, 0]
-
-
 try:
     from hypothesis import given, settings
     from hypothesis import strategies as st

@@ -110,6 +110,20 @@ def test_gap_fill_avg_dummies(spark):
     assert not out[dt.datetime(2024, 1, 1)]["filled"]
 
 
+def test_gap_fill_rejects_duplicate_buckets(spark):
+    """A frame that repeats a bucket (not filtered to one key) fails
+    loudly instead of emitting one output row per copy."""
+    candles = spark.createDataFrame(
+        [
+            Row(bucket=dt.datetime(2024, 1, d), open=1.0, high=1.0, low=1.0,
+                close=1.0, volume=1.0)
+            for d in (1, 1, 3)
+        ]
+    )
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        gap_fill_series(candles, "1D").collect()
+
+
 def test_dedup_keeps_lowest_tiebreak(spark):
     df = spark.createDataFrame(
         [Row(k="a", v=1, tb=2), Row(k="a", v=9, tb=1), Row(k="b", v=3, tb=5)]

@@ -105,20 +105,60 @@ def test_materialized_route_prunes_dt_partitions(rollups_1h):
     assert part and "dt" in part[0] and ">=" in part[0] and "<=" in part[0], part
 
 
+_GAP_REQ = dict(start="2024-01-05 00:00:00", end="2024-01-12 06:30:00",
+                limit=40, empty_ts=True)
+
+
 def test_materialized_gap_fill_matches_ticks(rollups_1h):
     """empty_ts on the materialized route answers exactly what the tick
     route answers, with a limit that clamps the spine below its span."""
     cv, rollups = rollups_1h
-    req = dict(start="2024-01-05 00:00:00", end="2024-01-12 06:30:00",
-               limit=40, empty_ts=True)
-    served = read_ohlcvs(cv, "purchase", "1h", rollups=rollups, **req)
-    direct = read_ohlcvs(cv, "purchase", "1h", **req)
+    served = read_ohlcvs(cv, "purchase", "1h", rollups=rollups, **_GAP_REQ)
+    direct = read_ohlcvs(cv, "purchase", "1h", **_GAP_REQ)
     assert served.columns == direct.columns
     rows = served.collect()
     assert rows == direct.collect()
     # the clamp is active: 40 grid points, real candles and dummies both
     assert len(rows) == 40
     assert {r.filled for r in rows} == {True, False}
+    # ascending for charting, with no sort after the gap fill
+    buckets = [r.bucket for r in rows]
+    assert buckets == sorted(buckets)
+
+
+def _jobs_to_collect(df, group: str) -> int:
+    """Spark jobs one ``collect`` of ``df`` runs (job group + status
+    tracker; works with the Spark UI off)."""
+    sc = df.sparkSession.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_raw_gap_fill_reads_the_ticks_once(rollups_1h):
+    """A gap-filled read on the tick route plans ONE scan of the tick
+    source and no join, and runs at most two jobs: the rollup's shuffle
+    stage and the result stage."""
+    cv, _ = rollups_1h
+    served = read_ohlcvs(cv, "purchase", "1h", **_GAP_REQ)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        served.explain("formatted")
+    tree = buf.getvalue().split("\n\n", 1)[0]
+    assert tree.count("Scan parquet") == 1, tree
+    assert "Join" not in tree, tree
+    assert _jobs_to_collect(served, "raw_gap_fill") <= 2
+
+
+def test_materialized_gap_fill_runs_one_job(rollups_1h):
+    """On the materialized route the scan, top-K, aggregate and spine all
+    run in a single job."""
+    cv, rollups = rollups_1h
+    served = read_ohlcvs(cv, "purchase", "1h", rollups=rollups, **_GAP_REQ)
+    assert _jobs_to_collect(served, "materialized_gap_fill") == 1
 
 
 def test_utc_day_is_session_timezone_independent(spark):
