@@ -546,8 +546,10 @@ def q_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r
     # swapped for `stream_rollup_1d` (COVERAGE.md): W1's LEAD-gap contract
     # stays pinned hash-exact by tests/test_operators.py::
     # test_gap_detect_matches_duckdb_twin via _gap_detect_oracle_sql, and
-    # the LEAD window family keeps gate coverage through geo_daily_return /
-    # chart_read_gapfill (W2 rides the same bounded-LEAD plan)
+    # the LEAD window family keeps gate coverage through geo_daily_return,
+    # the only declared row that runs the bounded-LEAD fill
+    # (operators.gapfill.lead_bounded_fill, W2); chart_read_gapfill's
+    # gap_fill_series has no LEAD window (agg → explode → project)
     """W1 — LEAD-based gap detection (queries.py:54-61), 12h threshold."""
     ev = load_table(spark, sf_dir, "events")
     return detect_gaps(ev, ["user_id"], "ts", min_gap_seconds=43200)
@@ -3767,13 +3769,14 @@ def q_stream_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark keeps its declared ``stream_rollup_5m`` row."""
     import uuid
 
-    from coin_for_rich_spark.streaming.rollup import run_rollup_to_memory
+    from coin_for_rich_spark.streaming.rollup import run_to_memory
 
     stream = candle_stream(_staged_stream(spark, sf_dir))
     rolled = streaming_ohlcv_rollup(stream, "1h", watermark="0 seconds")
-    return run_rollup_to_memory(
+    return run_to_memory(
         rolled,
         f"stream_rollup_1h_{uuid.uuid4().hex}",
+        "append",
         state_partitions=_STREAM_STATE_PARTITIONS,
     )
 
@@ -3889,7 +3892,7 @@ def q_stream_latest_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arity + null contract pinned in tests/test_streaming.py)."""
     import uuid
 
-    from coin_for_rich_spark.streaming.latest import run_latest_to_memory
+    from coin_for_rich_spark.streaming.rollup import run_to_memory
 
     stream = candle_stream(_staged_stream(spark, sf_dir))
     wire = format_wire_candles(
@@ -3914,10 +3917,10 @@ def q_stream_latest_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     candles = parsed.select(
         "symbol", "ts", F.col("close").alias("price"), "volume"
     )
-    served = latest_value_serve(candles, keys=("symbol",))
-    return run_latest_to_memory(
-        served,
+    return run_to_memory(
+        latest_value_serve(candles),
         f"stream_latest_{uuid.uuid4().hex}",
+        "complete",
         state_partitions=_STREAM_STATE_PARTITIONS,
     )
 
@@ -4291,13 +4294,14 @@ def q_stream_rollup(
     pytest-pinned 1h/1d/15m/30m/6h/12h/7D tiers."""
     import uuid
 
-    from coin_for_rich_spark.streaming.rollup import run_rollup_to_memory
+    from coin_for_rich_spark.streaming.rollup import run_to_memory
 
     stream = candle_stream(_staged_stream(spark, sf_dir))
     rolled = streaming_ohlcv_rollup(stream, interval, watermark=None)
-    return run_rollup_to_memory(
+    return run_to_memory(
         rolled,
         f"stream_rollup_{interval.lower()}_{uuid.uuid4().hex}",
+        "append",
         state_partitions=_STREAM_STATE_PARTITIONS,
     )
 

@@ -94,10 +94,10 @@ def scoped_conf(spark: SparkSession, **confs: str):
                 spark.conf.set(k, old)
 
 
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
+def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
     """Temporarily pin ``spark.sql.shuffle.partitions`` for the enclosed
-    plan-and-start window, restoring the previous value after.
+    plan-and-start window, restoring the previous value after; ``None``
+    leaves the session's value alone (a no-op scope).
 
     Exists for the streaming runners: a stateful query creates one state
     store per shuffle partition and commits EVERY one of them in EVERY
@@ -109,5 +109,5 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
     scale the same knob goes UP for hot wide keyspaces — the point is that
     it's sized, not defaulted.
     """
-    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": str(n)}):
-        yield
+    confs = {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
+    return scoped_conf(spark, **confs)

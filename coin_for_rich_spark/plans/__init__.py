@@ -4,12 +4,11 @@ from .cache import (
     WouldBlock,
     orm_cache_get,
 )
-from .reader import read_ohlcvs, route_interval, VALID_INTERVALS
+from .reader import read_ohlcvs, VALID_INTERVALS
 from .serve import serialize_candles, to_json_rows
 
 __all__ = [
     "read_ohlcvs",
-    "route_interval",
     "VALID_INTERVALS",
     "serialize_candles",
     "to_json_rows",

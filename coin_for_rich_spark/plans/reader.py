@@ -49,32 +49,6 @@ MATERIALIZED = {"5m", "15m", "30m", "1h", "6h", "12h", "1D", "7D"}
 MAX_LIMIT = 500  # `readers.py:168`
 
 
-def _check_interval(interval: str) -> None:
-    if interval not in INTERVAL_SECONDS:
-        raise ValueError(f"unknown interval {interval!r}; valid: {VALID_INTERVALS}")
-
-
-def route_interval(
-    ticks: DataFrame,
-    interval: str,
-    rollups: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """interval string → candle relation (P8).
-
-    ``rollups`` maps interval → pre-materialized rollup DataFrames (the
-    continuous-aggregate analog). Missing entries (and the reference's
-    broken '3h'/'14D'/'1M') compute on the fly from ``ticks``; '1m' is the
-    raw relation bucketed to the minute (the reference serves its ohlcvs
-    table directly; a tick stream needs the bucketing). Unknown intervals
-    raise — the reference returns [] for unknown and crashes on the three
-    unbound ones; we validate up front.
-    """
-    _check_interval(interval)
-    if rollups and interval in rollups:
-        return rollups[interval]
-    return ohlcv_rollup(ticks, interval)
-
-
 def _floor_minute(t) -> dt.datetime | None:
     """Normalize a request bound to minute precision (`readers.py:169-176`).
 
@@ -169,7 +143,8 @@ def read_ohlcvs(
     ``LIMIT -1``; Spark rejects ``.limit(-1)``) — unlike the analytics
     readers (:func:`read_returns`), where -1 explicitly means "all".
     """
-    _check_interval(interval)
+    if interval not in INTERVAL_SECONDS:
+        raise ValueError(f"unknown interval {interval!r}; valid: {VALID_INTERVALS}")
     limit = min(int(limit), MAX_LIMIT)  # `readers.py:168`
     start, end = _floor_minute(start), _floor_minute(end)
     if end is None:

@@ -2,10 +2,18 @@
 
 Reference parity map (SURVEY §2.9):
 - continuous aggregates + refresh policies  → streaming.rollup (A1/A2)
-- WS micro-batch updater (10 s, hold-back)  → streaming.rollup + trigger (S4)
-- COPY/upsert bulk sink, ON CONFLICT        → streaming.sink (S5/S6/S7)
+- WS micro-batch updater (10 s, hold-back)  → streaming.stateful +
+                                              run_ingest's trigger (S4)
+- COPY/upsert bulk sink, ON CONFLICT        → streaming.sink, streaming.jdbc
+                                              (S5/S6/S7)
 - latest-value serve hash                   → streaming.latest (S8)
-- file-chunk replay source for tests        → streaming.source (S3 stand-in)
+- wire format + file-chunk replay source    → streaming.source (S3 stand-in)
+
+Every step reads and writes the one candle schema (``symbol``, ``ts``,
+``price``, ``volume``; ``wire`` for the ``"t;;o;;h;;l;;c;;v"`` string), so
+column names are fixed rather than parameters. Two runners drive a stream:
+``run_ingest`` into a merge sink, ``rollup.run_to_memory`` into a memory
+table.
 """
 
 from .corpus import (

@@ -241,8 +241,8 @@ def upsert_sql(
     staging: str,
     columns: list[str],
     pk: list[str],
-    mode: str = "ignore",
-    dedup_order: list[str] | None = None,
+    mode: str,
+    dedup_order: list[str],
 ) -> str:
     """The set-based merge statement (`queries.py:4,12-15` templates).
 
@@ -250,26 +250,22 @@ def upsert_sql(
     mode='upsert' → ON CONFLICT DO UPDATE SET every non-PK column (late
     correction, S7).
 
-    ``dedup_order`` (a list of ``"col ASC|DESC"`` terms, possibly empty)
-    switches the staging SELECT to PostgreSQL ``DISTINCT ON (pk)`` ordered
-    by ``pk, *dedup_order`` — required when one staged batch can hold the
-    same PK twice: ``DO UPDATE`` raises "cannot affect row a second time"
-    on such input, and ``DO NOTHING`` would keep an arbitrary copy. With it
-    the kept row per PK is deterministic. ``None`` keeps the plain SELECT
-    (the caller guarantees PK-unique staging).
+    The staging SELECT is PostgreSQL ``DISTINCT ON (pk)`` ordered by
+    ``pk, *dedup_order`` (a list of ``"col ASC|DESC"`` terms, possibly
+    empty; see :func:`pg_dedup_order`): one staged batch can hold the same
+    PK twice, on which ``DO UPDATE`` raises "cannot affect row a second
+    time" and ``DO NOTHING`` would keep an arbitrary copy. With it the kept
+    row per PK is deterministic.
     """
     if mode not in ("ignore", "upsert"):
         raise ValueError(f"mode must be 'ignore' or 'upsert', got {mode!r}")
     cols = ", ".join(columns)
     conflict = ", ".join(pk)
-    select = f"SELECT {cols} FROM {staging}"
-    if dedup_order is not None:
-        order = ", ".join([conflict, *dedup_order]) if dedup_order else conflict
-        select = (
-            f"SELECT DISTINCT ON ({conflict}) {cols} FROM {staging} "
-            f"ORDER BY {order}"
-        )
-    base = f"INSERT INTO {target} ({cols}) {select} ON CONFLICT ({conflict}) "
+    order = ", ".join([conflict, *dedup_order])
+    base = (
+        f"INSERT INTO {target} ({cols}) SELECT DISTINCT ON ({conflict}) "
+        f"{cols} FROM {staging} ORDER BY {order} ON CONFLICT ({conflict}) "
+    )
     if mode == "ignore":
         return base + "DO NOTHING"
     updates = ", ".join(
@@ -414,7 +410,8 @@ class PgWireMergeSink:
     ) -> None:
         from .pgwire import conninfo_params
 
-        upsert_sql(table, "_probe_stg", ["_probe"], list(pk), mode)  # validate
+        if mode not in ("ignore", "upsert"):
+            raise ValueError(f"mode must be 'ignore' or 'upsert', got {mode!r}")
         self.params = conninfo_params(conninfo)
         # the merge transaction is ONE simple-query round trip with no
         # protocol traffic while the server works — its recv timeout must
@@ -441,9 +438,6 @@ class PgWireMergeSink:
         # re-COPYs, staging holds exact duplicates, DISTINCT ON collapses
         # them) with a real retried COPY instead of an argument
         self._post_copy_fault = None
-
-    def _dedup_order(self, columns: list[str]) -> list[str]:
-        return pg_dedup_order(self.mode, self.pk, self.tiebreak_col, columns)
 
     def merge(self, batch: DataFrame, batch_id: int) -> None:
         from .pgwire import PgWireClient
@@ -484,8 +478,10 @@ class PgWireMergeSink:
         if not sum(r.n for r in counts):
             return  # idle-trigger batches: no staging table, no connection
 
-        merge_stmt = upsert_sql(self.table, staging, columns, self.pk, self.mode,
-                                dedup_order=self._dedup_order(columns))
+        merge_stmt = upsert_sql(
+            self.table, staging, columns, self.pk, self.mode,
+            pg_dedup_order(self.mode, self.pk, self.tiebreak_col, columns),
+        )
         # unquoted identifiers fold to lower case in the catalog
         pattern = f"^{re.escape(self.staging.lower())}_[0-9a-f]{{12}}$"
         sweep = (

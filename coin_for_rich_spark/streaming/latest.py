@@ -4,7 +4,7 @@ Reference parity: each WS fetcher overwrites a per-key Redis hash with the
 newest candle, guarded by `timestamp >= current`
 (`fetchers/ws/bitfinex.py:202-217`); the web layer reads it every second
 (`web/routes/api/ws/utils/senders.py:73-84`). In Spark this is a streaming
-``groupBy(keys).agg(max_by(struct(...), time))`` in **update** mode: state
+``groupBy("symbol").agg(max_by(struct(...), ts))`` in **update** mode: state
 holds exactly one row per key, each micro-batch emits only keys whose latest
 value changed — the same "overwrite if newer" semantics without the external
 KV store.
@@ -20,38 +20,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def latest_value_serve(
-    stream: DataFrame,
-    keys: tuple[str, ...] = ("symbol",),
-    time_col: str = "ts",
-    value_cols: tuple[str, ...] = ("price", "volume"),
-) -> DataFrame:
+def latest_value_serve(stream: DataFrame) -> DataFrame:
+    """The newest ``(ts, price, volume)`` per ``symbol`` of a candle stream,
+    one row per key; drive it with ``rollup.run_to_memory(..., "complete")``
+    for the serve-hash snapshot."""
     # ordering key = (ts, value struct): the reference's `timestamp >=
     # current` guard means the LATEST ARRIVAL wins a timestamp tie, an
     # order Spark cannot observe — max_by on the bare ts would pick an
     # arbitrary tied row per run/partitioning, so the value struct itself
     # breaks ties (lexicographic struct comparison): deterministic across
     # runs and engines, documented as "greatest value wins a ts tie"
-    val = F.struct(
-        F.col(time_col).alias(time_col), *[F.col(c) for c in value_cols]
-    )
-    latest = F.max_by(val, F.struct(F.col(time_col), val)).alias("_latest")
+    val = F.struct("ts", "price", "volume")
     return (
-        stream.groupBy(*keys)
-        .agg(latest)
-        .select(*keys, F.col(f"_latest.{time_col}").alias(time_col),
-                *[F.col(f"_latest.{c}").alias(c) for c in value_cols])
+        stream.groupBy("symbol")
+        .agg(F.max_by(val, F.struct("ts", val)).alias("_latest"))
+        .select("symbol", "_latest.*")
     )
-
-
-def run_latest_to_memory(
-    served: DataFrame,
-    table_name: str,
-    trigger: dict | None = None,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drive the serve aggregate into an in-memory sink in complete mode
-    (state is one row per key, so 'complete' is the serve-hash snapshot)."""
-    from .rollup import run_to_memory
-
-    return run_to_memory(served, table_name, "complete", trigger, state_partitions)

@@ -8,9 +8,9 @@ newest (still-open) candle and drains every 10 s
 (`fetchers/ws/updater.py:29,165-184`). Structured Streaming expresses all
 three semantics natively:
 
-- bucket           → ``window(time, Δ)`` (epoch-aligned tumbling window,
+- bucket           → ``window(ts, Δ)`` (origin-aligned tumbling window,
                      identical boundaries to functions.timeutils.time_bucket)
-- end_offset /     → ``withWatermark(time, end_offset)``: a window emits only
+- end_offset /     → ``withWatermark(ts, end_offset)``: a window emits only
   hold-open-candle   once the watermark passes its end, so open buckets are
                      never published (append mode) — exactly the updater's
                      hold-back and the conagg's end_offset lag.
@@ -19,7 +19,14 @@ three semantics natively:
                      are dropped (the reference instead re-fetches via REST
                      and upserts — that correction path is sink.run_ingest
                      with mode='upsert').
-- schedule_interval→ ``trigger(processingTime=...)``.
+- schedule_interval→ ``trigger(processingTime=...)`` (``run_ingest``'s
+                     trigger); bounded replays drain with ``availableNow``.
+
+The input is the one candle schema (``symbol``, ``ts``, ``price``,
+``volume``, see ``source.candle_stream``); column names are fixed, not
+parameters. ``run_to_memory`` is the one in-memory runner for every
+streaming row here: append for this rollup and the hold-back collector,
+complete for the latest-value serve.
 
 Scale posture: partial aggregation happens per micro-batch map-side; state is
 keyed on (key, window) so state size scales with active windows per key, not
@@ -54,15 +61,10 @@ _DURATIONS: dict[str, str] = {
 
 
 def streaming_ohlcv_rollup(
-    stream: DataFrame,
-    interval: str,
-    watermark: str | None = None,
-    keys: tuple[str, ...] = ("symbol",),
-    time_col: str = "ts",
-    price_col: str = "price",
-    volume_col: str = "volume",
+    stream: DataFrame, interval: str, watermark: str | None = None
 ) -> DataFrame:
-    """Watermarked tumbling-window OHLCV candles over a streaming DataFrame.
+    """Watermarked tumbling-window OHLCV candles over a streaming candle
+    DataFrame (``symbol``, ``ts``, ``price``, ``volume``).
 
     The aggregate expressions ARE the batch operator's —
     ``operators.candles.ohlcv_aggs`` is imported, not copied — one definition
@@ -99,16 +101,14 @@ def streaming_ohlcv_rollup(
 
     width = INTERVAL_SECONDS[interval]
     offset = TS_BUCKET_ORIGIN % width
-    win = F.window(
-        time_col, _DURATIONS[interval], startTime=f"{offset} seconds"
-    )
+    win = F.window("ts", _DURATIONS[interval], startTime=f"{offset} seconds")
     return (
-        stream.withWatermark(time_col, watermark)
-        .groupBy(win.alias("win"), *keys)
-        .agg(*ohlcv_aggs(time_col, price_col, volume_col))
+        stream.withWatermark("ts", watermark)
+        .groupBy(win.alias("win"), "symbol")
+        .agg(*ohlcv_aggs())
         .select(
             F.col("win.start").alias("bucket"),
-            *keys,
+            "symbol",
             "open",
             "high",
             "low",
@@ -123,57 +123,25 @@ def run_to_memory(
     df: DataFrame,
     table_name: str,
     output_mode: str,
-    trigger: dict | None = None,
     state_partitions: int | None = None,
 ) -> DataFrame:
-    """Drive a streaming DataFrame to COMPLETION into an in-memory sink —
-    the shared harness behind run_rollup_to_memory / run_latest_to_memory
-    (one copy, so a fix to the drive logic cannot silently miss a twin).
-
-    Only self-terminating triggers are accepted: a processingTime or
-    continuous trigger never finishes, so ``awaitTermination()`` would
-    block the caller forever while holding the shuffle-partition scope
-    pinned on the shared session — continuous serving should start
-    ``writeStream`` directly and manage the query handle.
+    """Drive a streaming DataFrame to completion (``availableNow``) into an
+    in-memory sink and return the table: ``"append"`` for a watermarked
+    rollup or the hold-back collector (only closed candles land),
+    ``"complete"`` for the latest-value serve (one row per key).
     ``state_partitions`` sizes the state store to the keyspace (see
     functions.partitioning.scoped_shuffle_partitions)."""
-    from contextlib import nullcontext
-
     from ..functions.partitioning import scoped_shuffle_partitions
 
-    trigger = trigger or {"availableNow": True}
-    if not (trigger.get("availableNow") or trigger.get("once")):
-        raise ValueError(
-            f"run_to_memory drives the stream to completion; trigger "
-            f"{trigger!r} never self-terminates — use writeStream directly "
-            "for continuous queries"
+    # the scope must cover awaitTermination: micro-batch planning (which
+    # captures the state partition count) happens after start() returns
+    with scoped_shuffle_partitions(df.sparkSession, state_partitions):
+        (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(table_name)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
-    scope = (
-        scoped_shuffle_partitions(df.sparkSession, state_partitions)
-        if state_partitions
-        else nullcontext()
-    )
-    writer = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(table_name)
-    )
-    with scope:
-        # the scope must cover awaitTermination: micro-batch planning (which
-        # captures the state partition count) happens after start() returns
-        q = writer.trigger(**trigger).start()
-        q.awaitTermination()
     return df.sparkSession.table(table_name)
-
-
-def run_rollup_to_memory(
-    rolled: DataFrame,
-    table_name: str,
-    trigger: dict | None = None,
-    state_partitions: int | None = None,
-) -> "DataFrame":
-    """Drive a streaming rollup into an in-memory sink (tests / serve cache).
-
-    Append mode ⇒ only watermark-closed candles land in the table. Returns
-    after the stream finishes (availableNow by default)."""
-    return run_to_memory(rolled, table_name, "append", trigger, state_partitions)

@@ -172,32 +172,6 @@ class ParquetMergeSink:
             return 0
         return sum(1 for d in os.listdir(self.path) if d.startswith("batch="))
 
-    def compact_if_worthwhile(
-        self,
-        spark: SparkSession,
-        expected_reads: float,
-        payoff_reads: float = 3.0,
-        min_batches: int = 4,
-    ) -> bool:
-        """The measured compaction-payoff rule, executable (r12 VERDICT:
-        the rule lived in prose). ``READ_UNDER_INGEST.json`` measured that
-        folding a deep batch log costs roughly the work of a few resolved
-        reads and halves per-read latency (24-batch log: read 0.495 s →
-        0.251 s, compact 1.4 s ≈ 3 reads' savings) — so compaction pays for
-        itself once ~``payoff_reads`` reads are expected before the next
-        ingest window reopens the log. Below ``min_batches`` partitions the
-        window resolve is already cheap and the fold is churn (a freshly
-        compacted table is 1 partition and is never re-folded).
-
-        Call between ingest windows (same concurrency contract as
-        ``compact()``: stream stopped). Returns True iff it compacted."""
-        if self.batch_log_length() < min_batches:
-            return False
-        if expected_reads < payoff_reads:
-            return False
-        self.compact(spark)
-        return True
-
     def compact(self, spark: SparkSession) -> None:
         """Fold the batch log into a single base partition (read-amp → 1).
 
@@ -247,20 +221,13 @@ def run_ingest(
     updater's drain cadence (`fetchers/ws/updater.py:29`); tests use
     availableNow for a deterministic bounded run.
     """
-    from contextlib import nullcontext
-
     from ..functions.partitioning import scoped_shuffle_partitions
 
-    scope = (
-        scoped_shuffle_partitions(stream.sparkSession, state_partitions)
-        if state_partitions
-        else nullcontext()
-    )
-    with scope:
-        q = (
+    with scoped_shuffle_partitions(stream.sparkSession, state_partitions):
+        (
             stream.writeStream.foreachBatch(sink.merge)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(**(trigger or {"availableNow": True}))
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()

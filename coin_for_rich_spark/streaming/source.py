@@ -24,9 +24,7 @@ from pyspark.sql import types as T
 from ..functions.numbers import round_wire
 
 
-def stage_stream_chunks(
-    df: DataFrame, path: str, n_chunks: int = 8, order_col: str = "ts"
-) -> T.StructType:
+def stage_stream_chunks(df: DataFrame, path: str, n_chunks: int = 8) -> T.StructType:
     """Write ``df`` as ``n_chunks`` time-ordered parquet files under ``path``
     and return the schema (file streams require an explicit schema).
 
@@ -38,8 +36,8 @@ def stage_stream_chunks(
     order so replay follows event time.
     """
     (
-        df.repartitionByRange(n_chunks, F.col(order_col))
-        .sortWithinPartitions(order_col)
+        df.repartitionByRange(n_chunks, F.col("ts"))
+        .sortWithinPartitions("ts")
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -76,17 +74,14 @@ def candle_stream(stream: DataFrame) -> DataFrame:
 
 
 WIRE_SEP = ";;"
+# the five value fields after the event time, in wire order
+_WIRE_VALUES = ("open", "high", "low", "close", "volume")
 
 
-def format_wire_candles(
-    df: DataFrame,
-    cols: tuple[str, ...] = ("ts", "open", "high", "low", "close", "volume"),
-    wire_col: str = "wire",
-    keep_cols: tuple[str, ...] = ("symbol",),
-    ts_unit: str = "ms",
-) -> DataFrame:
-    """Inverse of ``parse_wire_candles``: serialize candle columns to the
-    ``"t;;o;;h;;l;;c;;v"`` staging wire string (what the reference's WS
+def format_wire_candles(df: DataFrame, ts_unit: str = "ms") -> DataFrame:
+    """Inverse of ``parse_wire_candles``: serialize ``ts``/``open``/``high``/
+    ``low``/``close``/``volume`` to the ``"t;;o;;h;;l;;c;;v"`` staging wire
+    string in ``wire``, next to ``symbol`` (what the reference's WS
     fetchers write to Redis before the updater drains it). Doubles go
     through Spark's cast-to-string (shortest round-trip representation), so
     ``parse(format(x)) == x`` exactly; with ``ts_unit="us"`` the event time
@@ -95,23 +90,18 @@ def format_wire_candles(
 
     NULL fields serialize as an explicit empty token (``concat_ws`` would
     otherwise silently SKIP them, emitting a short-arity string that parses
-    as the wrong fields): arity is always ``len(cols)``, and the parse side
+    as the wrong fields): arity is always 6, and the parse side
     dead-letters the row — a null-field candle surfaces in the dead-letter
     relation with its full wire string instead of vanishing or shifting
     columns."""
     ts_of = {"ms": F.unix_millis, "us": F.unix_micros}[ts_unit]
-    pieces = [F.coalesce(ts_of(F.col(cols[0])).cast("string"), F.lit(""))] + [
-        F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols[1:]
-    ]
-    return df.select(*keep_cols, F.concat_ws(WIRE_SEP, *pieces).alias(wire_col))
+    fields = [ts_of(F.col("ts"))] + [F.col(c) for c in _WIRE_VALUES]
+    pieces = [F.coalesce(f.cast("string"), F.lit("")) for f in fields]
+    return df.select("symbol", F.concat_ws(WIRE_SEP, *pieces).alias("wire"))
 
 
 def parse_wire_candles(
-    df: DataFrame,
-    wire_col: str = "wire",
-    keep_cols: tuple[str, ...] = ("symbol",),
-    ts_unit: str = "ms",
-    round_decimals: int | None = None,
+    df: DataFrame, ts_unit: str = "ms", round_decimals: int | None = None
 ):
     """Parse the reference's Redis staging wire format —
     ``"t;;o;;h;;l;;c;;v"`` strings (`fetchers/ws/bitfinex.py:176-201`,
@@ -123,12 +113,11 @@ def parse_wire_candles(
     reference's exchange-candle stamps) or ``"us"`` (lossless for
     microsecond-precision event time — a ms hop would silently truncate).
 
-    Returns ``(parsed, dead_letters)``: parsed has ``keep_cols`` + ts/open/
-    high/low/close/volume; dead_letters has ``keep_cols`` + the raw wire
-    string. All parsing is ``try_cast`` column algebra — ANSI-safe (a bad
-    field yields NULL, never an exception), streaming-safe (pure
-    projection), and the same expressions work on a batch backfill of a
-    dumped staging hash.
+    Returns ``(parsed, dead_letters)``: parsed has symbol/ts/open/high/low/
+    close/volume; dead_letters has ``symbol`` + the raw ``wire`` string.
+    All parsing is ``try_cast`` column algebra — ANSI-safe (a bad field
+    yields NULL, never an exception), streaming-safe (pure projection), and
+    the same expressions work on a batch backfill of a dumped staging hash.
 
     ``round_decimals`` applies the reference updater's ingest rounding
     (`fetchers/ws/updater.py:84-88`: ``round_decimal(field, NUM_DECIMALS)``
@@ -146,7 +135,7 @@ def parse_wire_candles(
     than a dead letter).
     """
     ts_of = {"ms": F.timestamp_millis, "us": F.timestamp_micros}[ts_unit]
-    parts = F.split(F.col(wire_col), WIRE_SEP)
+    parts = F.split(F.col("wire"), WIRE_SEP)
 
     def val(x: Column) -> Column:
         if round_decimals is None:
@@ -173,10 +162,9 @@ def parse_wire_candles(
     # conjunct in _ok catches it).
     vals = F.transform(F.slice(parts, 2, 5), val)
     ts = ts_of(F.try_element_at(parts, F.lit(1)).try_cast("bigint"))
-    names = ("open", "high", "low", "close", "volume")
     shaped = df.select(
-        *keep_cols,
-        F.col(wire_col),
+        "symbol",
+        "wire",
         ts.alias("ts"),
         vals.alias("_vals"),
         F.size(parts).alias("_arity"),
@@ -194,9 +182,10 @@ def parse_wire_candles(
         ),
     )
     parsed = shaped.filter("_ok").select(
-        *keep_cols,
+        "symbol",
         "ts",
-        *[F.try_element_at("_vals", F.lit(i + 1)).alias(n) for i, n in enumerate(names)],
+        *[F.try_element_at("_vals", F.lit(i + 1)).alias(n)
+          for i, n in enumerate(_WIRE_VALUES)],
     )
-    dead = shaped.filter(~F.col("_ok")).select(*keep_cols, wire_col)
+    dead = shaped.filter(~F.col("_ok")).select("symbol", "wire")
     return parsed, dead

@@ -14,14 +14,14 @@ window aggregates, so this is the one genuinely custom stateful operator:
 ``applyInPandasWithState`` with per-key state = the aggregates of the
 still-open minutes.
 
-Semantics per key and minute bucket:
+Semantics per ``symbol`` and minute bucket:
 - rows aggregate into (open@first-ts, high, low, close@last-ts, Σvolume, n);
 - a bucket is EMITTED (append) once a strictly later bucket for the key
   arrives — the newest bucket is always held;
-- with a processing-time timeout configured, held state older than the
-  threshold is flushed on timeout (the stale-flush rule) — in bounded test
-  replays the timeout never fires, matching the updater's behavior of never
-  emitting the final open candle until more data arrives.
+- with ``stale_ms`` set, held state older than that threshold is flushed
+  on a processing-time timeout (the stale-flush rule); with the default
+  ``None`` no timeout is armed, so bounded replays never emit the final
+  open candle until more data arrives — the updater's behavior.
 
 Volume is accumulated in integer cents (inputs are 2-decimal measures) so
 the emitted sum is exact and engine-independent — same contract as the
@@ -348,21 +348,19 @@ def _flush_fn(
 
 def hold_back_collector(
     stream: DataFrame,
-    key_col: str = "symbol",
-    stale_timeout: bool = False,
-    stale_ms: int = DATA_HELD_MS_THRESHOLD,
+    stale_ms: int | None = None,
     late_policy: str = "drop",
-    now_ms_fn=None,
 ) -> DataFrame:
     """1-minute candles emitted per the updater's data-driven close rule.
 
-    Input stream needs (key_col, ts, price, volume). With
-    ``stale_timeout=True`` the production stale-flush applies: every state
-    update arms a processing-time timeout of ``stale_ms`` (the reference's
-    DATA_HELD_MLS_THRESHOLD, `updater.py:30,165-176`), so a candle held with
-    no successor data is force-emitted once stale. Bounded deterministic
-    replays leave it off so the final open candle is withheld exactly like
-    the updater.
+    Input stream needs (symbol, ts, price, volume). ``stale_ms`` is the
+    stale-flush threshold: ``None`` (default) arms no timeout, so a held
+    candle closes only on later data — bounded deterministic replays
+    withhold the final open candle exactly like the updater. An int arms a
+    ``ProcessingTimeTimeout`` of that many ms on every state update, so a
+    candle held with no successor data is force-emitted once stale;
+    production passes ``DATA_HELD_MS_THRESHOLD`` (the reference's
+    DATA_HELD_MLS_THRESHOLD, `updater.py:30,165-176`).
 
     ``late_policy`` picks between the two defensible late-data contracts:
 
@@ -378,32 +376,24 @@ def hold_back_collector(
     - ``'emit'``: the reference updater's protocol VERBATIM
       (`updater.py:160-185` — see :func:`_flush_fn_emit`): nothing is
       dropped as late, the newest bucket per key is the only held state,
-      the stale rule is EVENT-time age against the updater clock, and
+      the stale rule is EVENT-time age against the wall clock, and
       dedup is the downstream idempotent sink's job (the reference's
       ``ON CONFLICT DO NOTHING``). Use with ``mode='ignore'`` merge sinks.
     """
     if late_policy not in ("drop", "emit"):
         raise ValueError(f"late_policy must be 'drop' or 'emit': {late_policy!r}")
     timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if stale_timeout
-        else GroupStateTimeout.NoTimeout
+        GroupStateTimeout.NoTimeout
+        if stale_ms is None
+        else GroupStateTimeout.ProcessingTimeTimeout
     )
-    effective_stale = stale_ms if stale_timeout else None
 
     def fn(key, pdfs, state):
-        return _flush_fn(
-            key,
-            pdfs,
-            state,
-            stale_ms=effective_stale,
-            late_policy=late_policy,
-            now_ms_fn=now_ms_fn,
-        )
+        return _flush_fn(key, pdfs, state, stale_ms, late_policy)
 
     return (
-        stream.select(key_col, "ts", "price", "volume")
-        .groupBy(key_col)
+        stream.select("symbol", "ts", "price", "volume")
+        .groupBy("symbol")
         .applyInPandasWithState(
             fn, OUTPUT_SCHEMA, STATE_SCHEMA, "append", timeout
         )

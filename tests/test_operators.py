@@ -17,7 +17,7 @@ from coin_for_rich_spark.operators import (
     latest_per_key,
     ohlcv_rollup,
 )
-from coin_for_rich_spark.plans import read_ohlcvs, route_interval
+from coin_for_rich_spark.plans import read_ohlcvs
 from coin_for_rich_spark.sources import candles_view
 
 
@@ -69,12 +69,6 @@ def test_time_bucket_epoch_alignment(spark):
     assert r["b5"] == dt.datetime(2024, 1, 1, 13, 45)
     assert r["b6h"] == dt.datetime(2024, 1, 1, 12, 0)
     assert r["b1m"] == dt.datetime(2024, 1, 1, 0, 0)
-
-
-def test_route_interval_rejects_unknown(spark, sf_dir):
-    cv = candles_view(spark, sf_dir)
-    with pytest.raises(ValueError, match="unknown interval"):
-        route_interval(cv, "42s")
 
 
 def test_read_ohlcvs_rejects_unknown_interval(spark, sf_dir):
@@ -242,6 +236,10 @@ def test_scoped_shuffle_partitions_restores_on_success_and_error(spark):
     with pytest.raises(RuntimeError):
         with scoped_shuffle_partitions(spark, 7):
             raise RuntimeError("boom")
+    assert spark.conf.get(key) == prev
+    # None leaves the session value alone: the runners' unsized default
+    with scoped_shuffle_partitions(spark, None):
+        assert spark.conf.get(key) == prev
     assert spark.conf.get(key) == prev
 
 

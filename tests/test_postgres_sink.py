@@ -774,6 +774,36 @@ def test_pgwire_sink_rejects_staging_names_past_63_bytes():
         PgWireMergeSink(conninfo, "t" * 39, pk=("k",))
 
 
+def test_pgwire_sink_merge_sql_for_ingest_benchmark_is_pinned():
+    """The merge statement the sink builds for the ``ingest_pg`` benchmark's
+    configuration (upsert on ``(symbol, bucket)`` over the hold-back
+    collector's ``OUTPUT_SCHEMA`` columns, no tiebreak column), pinned
+    verbatim, so a refactor of the SQL builder or of the winner rule cannot
+    move the SQL PostgreSQL executes. The staging name is random per merge;
+    ``stg`` stands in for it."""
+    from coin_for_rich_spark.streaming.jdbc import (
+        PgWireMergeSink,
+        pg_dedup_order,
+        upsert_sql,
+    )
+    from coin_for_rich_spark.streaming.stateful import OUTPUT_SCHEMA
+
+    sink = PgWireMergeSink(["-h", "/nonexistent", "-p", "5432"], "candles_1m",
+                           pk=("symbol", "bucket"), mode="upsert")
+    cols = OUTPUT_SCHEMA.fieldNames()
+    order = pg_dedup_order(sink.mode, sink.pk, sink.tiebreak_col, cols)
+    assert upsert_sql(sink.table, "stg", cols, sink.pk, sink.mode, order) == (
+        "INSERT INTO candles_1m (symbol, bucket, open, high, low, close, "
+        "volume, n_trades) SELECT DISTINCT ON (symbol, bucket) symbol, bucket, "
+        "open, high, low, close, volume, n_trades FROM stg ORDER BY symbol, "
+        "bucket, close ASC NULLS FIRST, high ASC NULLS FIRST, low ASC NULLS "
+        "FIRST, n_trades ASC NULLS FIRST, open ASC NULLS FIRST, volume ASC "
+        "NULLS FIRST ON CONFLICT (symbol, bucket) DO UPDATE SET open = "
+        "excluded.open, high = excluded.high, low = excluded.low, close = "
+        "excluded.close, volume = excluded.volume, n_trades = excluded.n_trades"
+    )
+
+
 def test_pgwire_sink_stages_many_arrow_batches_from_one_partition(spark, pg):
     """A 25,000-row single-partition batch reaches its one staging task as
     three Arrow record batches (default maxRecordsPerBatch 10,000), COPYed

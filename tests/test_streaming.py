@@ -23,8 +23,7 @@ from coin_for_rich_spark.streaming import (
     stage_stream_chunks,
     streaming_ohlcv_rollup,
 )
-from coin_for_rich_spark.streaming.latest import run_latest_to_memory
-from coin_for_rich_spark.streaming.rollup import run_rollup_to_memory
+from coin_for_rich_spark.streaming.rollup import run_to_memory
 from coin_for_rich_spark.streaming.source import read_file_stream
 
 
@@ -44,7 +43,7 @@ def test_streaming_rollup_matches_batch_on_closed_windows(spark, sf_dir, staged_
     path, schema = staged_events
     stream = candle_stream(read_file_stream(spark, path, schema))
     rolled = streaming_ohlcv_rollup(stream, "1h", watermark="0 seconds")
-    got = run_rollup_to_memory(rolled, "t_stream_rollup_1h")
+    got = run_to_memory(rolled, "t_stream_rollup_1h", "append")
 
     ev = candles_view(spark, sf_dir)
     max_ts = ev.select(F.max("ts")).first()[0]
@@ -63,8 +62,7 @@ def test_streaming_rollup_matches_batch_on_closed_windows(spark, sf_dir, staged_
 def test_latest_value_serve_matches_batch_latest(spark, sf_dir, staged_events):
     path, schema = staged_events
     stream = candle_stream(read_file_stream(spark, path, schema))
-    served = latest_value_serve(stream, keys=("symbol",))
-    got = run_latest_to_memory(served, "t_stream_latest")
+    got = run_to_memory(latest_value_serve(stream), "t_stream_latest", "complete")
 
     expected = latest_per_key(
         candles_view(spark, sf_dir), ["symbol"], "ts", tiebreak_col=None
@@ -213,21 +211,22 @@ def test_streamed_ingest_pipeline_dedups_on_pk(spark, sf_dir, tmp_path, staged_e
 def test_jdbc_upsert_sql_shapes():
     from coin_for_rich_spark.streaming.jdbc import upsert_sql
 
-    ignore = upsert_sql("ohlcvs", "ohlcvs__staging",
-                        ["exchange", "time", "open"], ["exchange", "time"])
+    ignore = upsert_sql("ohlcvs", "ohlcvs__staging", ["exchange", "time", "open"],
+                        ["exchange", "time"], "ignore", [])
     assert ignore.endswith("ON CONFLICT (exchange, time) DO NOTHING")
     up = upsert_sql("ohlcvs", "s", ["exchange", "time", "open", "close"],
-                    ["exchange", "time"], mode="upsert")
+                    ["exchange", "time"], "upsert", [])
     assert up.endswith("DO UPDATE SET open = excluded.open, close = excluded.close")
-    # within-batch dedup branch: DISTINCT ON over the PK, tiebreak order
+    # within-batch dedup: DISTINCT ON over the PK, tiebreak order
     dd = upsert_sql("ohlcvs", "s", ["exchange", "time", "open"],
-                    ["exchange", "time"], mode="upsert",
-                    dedup_order=["open DESC"])
+                    ["exchange", "time"], "upsert", ["open DESC"])
     assert "SELECT DISTINCT ON (exchange, time) exchange, time, open FROM s" in dd
     assert "ORDER BY exchange, time, open DESC" in dd
     # empty dedup_order still dedups (exact-duplicate PK rows in one batch)
-    dd0 = upsert_sql("t", "s", ["a"], ["a"], dedup_order=[])
+    dd0 = upsert_sql("t", "s", ["a"], ["a"], "ignore", [])
     assert "SELECT DISTINCT ON (a) a FROM s ORDER BY a" in dd0
+    with pytest.raises(ValueError, match="mode must be"):
+        upsert_sql("t", "s", ["a"], ["a"], "merge", [])
 
 
 def test_merge_sink_compact_preserves_state_and_semantics(spark, tmp_path):
@@ -253,47 +252,6 @@ def test_merge_sink_compact_preserves_state_and_semantics(spark, tmp_path):
     ]
 
 
-def test_merge_sink_compact_if_worthwhile_rule(spark, tmp_path):
-    """The compaction-payoff rule is executable, not documentation (r12
-    VERDICT #7): compact iff the log is deep enough for the resolve window
-    to hurt AND enough reads are expected to amortize the fold — the rule
-    READ_UNDER_INGEST.json measured (payoff after ~3 reads on a 24-batch
-    log). Either failing leg must leave the log untouched; firing must
-    fold to one partition without changing the resolved state."""
-    from coin_for_rich_spark.streaming import ParquetMergeSink
-
-    sink = ParquetMergeSink(
-        str(tmp_path / "tbl"), pk=("k",), mode="upsert", tiebreak_col="seq"
-    )
-    for i in range(5):
-        sink.merge(
-            spark.createDataFrame([("a", i, float(i)), (f"k{i}", 0, 1.0)],
-                                  "k string, seq int, v double"),
-            i,
-        )
-    before = sorted(map(tuple, sink.read(spark).collect()))
-    assert sink.batch_log_length() == 5
-    # too few expected reads: the fold would cost more than it saves
-    assert sink.compact_if_worthwhile(spark, expected_reads=2) is False
-    assert sink.batch_log_length() == 5
-    # deep log + enough reads: fires, read-amp -> 1, state unchanged
-    assert sink.compact_if_worthwhile(spark, expected_reads=10) is True
-    assert sink.batch_log_length() == 1
-    assert sorted(map(tuple, sink.read(spark).collect())) == before
-    # a freshly compacted table is never re-folded (below min_batches)
-    assert sink.compact_if_worthwhile(spark, expected_reads=10) is False
-    # shallow-log guard: a new sink with fewer than min_batches partitions
-    # stays merge-on-read even when many reads are expected
-    shallow = ParquetMergeSink(
-        str(tmp_path / "tbl2"), pk=("k",), mode="upsert", tiebreak_col="seq"
-    )
-    shallow.merge(
-        spark.createDataFrame([("a", 1, 1.0)], "k string, seq int, v double"), 0
-    )
-    assert shallow.compact_if_worthwhile(spark, expected_reads=100) is False
-    assert shallow.batch_log_length() == 1
-
-
 def test_exactly_once_dedup_under_duplicate_delivery(spark, sf_dir, staged_events):
     from coin_for_rich_spark.streaming import exactly_once_dedup
 
@@ -316,7 +274,7 @@ def test_exactly_once_dedup_under_duplicate_delivery(spark, sf_dir, staged_event
 
 
 def test_stale_flush_force_emits_held_candle(spark, tmp_path):
-    """ADVICE fix: with stale_timeout on, a key with NO later data must still
+    """ADVICE fix: with stale_ms set, a key with NO later data must still
     flush once its processing-time timeout lapses (the reference's
     DATA_HELD_MLS_THRESHOLD force-flush) — the timeout is armed on every
     state update. Key 'lonely' appears only in batch 1; by the time batch 2
@@ -354,7 +312,7 @@ def test_stale_flush_force_emits_held_candle(spark, tmp_path):
     for flag, expect_lonely in ((True, True), (False, False)):
         name = f"t_stale_{int(flag)}"
         q = (
-            hold_back_collector(stream, stale_timeout=flag, stale_ms=1)
+            hold_back_collector(stream, stale_ms=1 if flag else None)
             .writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
@@ -585,7 +543,7 @@ def test_rollup_watermark_delay_revises_within_and_drops_beyond(spark, tmp_path)
     ])
     stream = read_file_stream(spark, path, schema)
     rolled = streaming_ohlcv_rollup(stream, "5m")  # policy watermark: 5 minutes
-    got = run_rollup_to_memory(rolled, "t_rollup_wm_delay")
+    got = run_to_memory(rolled, "t_rollup_wm_delay", "append")
     out = {
         r["bucket"].minute + 60 * r["bucket"].hour:
             (r["open"], r["close"], r["n_trades"])
@@ -609,7 +567,6 @@ def test_streaming_sessionize_matches_batch_on_closed_sessions(
     sessions for every session the watermark has closed, and hold back
     every still-open one — the same discipline as the rollup twin."""
     from coin_for_rich_spark.operators.windowed import sessionize
-    from coin_for_rich_spark.streaming.rollup import run_rollup_to_memory
     from coin_for_rich_spark.streaming.sessions import streaming_sessionize
 
     gap = 1800
@@ -618,7 +575,7 @@ def test_streaming_sessionize_matches_batch_on_closed_sessions(
     sessions = streaming_sessionize(
         stream, ["symbol"], gap_seconds=gap, watermark="0 seconds"
     )
-    got = run_rollup_to_memory(sessions, "t_stream_sessions")
+    got = run_to_memory(sessions, "t_stream_sessions", "append")
 
     ev = candles_view(spark, sf_dir)
     max_ts = ev.select(F.max("ts")).first()[0]
@@ -795,19 +752,15 @@ def test_flush_fn_tombstone_ttl_bounds_state_and_suppression():
 
 
 def test_rollup_interval_and_trigger_guards(spark, tmp_path):
-    """Unsupported intervals fail with context (not a bare KeyError), a
+    """Unsupported intervals fail with context (not a bare KeyError), and a
     no-policy interval demands an explicit watermark (a silent '0 seconds'
-    default would drop all late rows), and the run-to-memory harness
-    rejects non-self-terminating triggers instead of hanging forever."""
+    default would drop all late rows)."""
     import datetime as dt
 
     import pytest
     from pyspark.sql import Row
 
-    from coin_for_rich_spark.streaming.rollup import (
-        run_to_memory,
-        streaming_ohlcv_rollup,
-    )
+    from coin_for_rich_spark.streaming.rollup import streaming_ohlcv_rollup
 
     src = str(tmp_path / "src")
     df = spark.createDataFrame(
@@ -821,13 +774,6 @@ def test_rollup_interval_and_trigger_guards(spark, tmp_path):
         streaming_ohlcv_rollup(stream, "3h")
     # explicit watermark unlocks the no-policy interval (plan builds fine)
     streaming_ohlcv_rollup(stream, "3h", watermark="1 hour")
-    with pytest.raises(ValueError, match="self-terminates"):
-        run_to_memory(
-            streaming_ohlcv_rollup(stream, "1h"),
-            "t_never",
-            "append",
-            trigger={"processingTime": "10 seconds"},
-        )
 
 
 def test_latest_value_serve_deterministic_ts_tie(spark):
