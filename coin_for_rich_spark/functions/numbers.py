@@ -41,12 +41,6 @@ def money4(col: Column | str) -> Column:
     return dec(col, MONEY4)
 
 
-def round4(col: Column | str) -> Column:
-    """4-decimal serve rounding (`parsers.py:22-34`, `numbers.py:7-23`)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c, 4)
-
-
 def round_decimal_parity(
     value: float | int | str | Decimal | None, n_decimals: int = 2
 ) -> float | None:

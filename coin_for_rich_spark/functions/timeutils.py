@@ -6,9 +6,8 @@ Reference parity:
   Sub-daily widths map to exact epoch arithmetic; calendar widths (day, week,
   month) map to ``date_trunc`` — both are pure Catalyst expressions that stay
   inside whole-stage codegen (no UDFs, per SURVEY §2.10).
-- epoch-millisecond conversions — the reference converses in epoch ms at every
-  boundary (`common/helpers/datetimehelpers.py:8-127`); ``epoch_ms`` wraps
-  Spark's built-in ``unix_millis`` for the outbound (wire) direction.
+- ``time_bucket_sql`` — the same bucketing as Spark SQL text, for the
+  chart reader's prepared statements (``plans.reader``).
 """
 
 from __future__ import annotations
@@ -62,14 +61,20 @@ def time_bucket(ts: Column | str, interval: str) -> Column:
     return F.timestamp_seconds(secs - _pymod(secs - TS_BUCKET_ORIGIN, width))
 
 
+def time_bucket_sql(ts: str, interval: str) -> str:
+    """:func:`time_bucket` as Spark SQL text over the SQL expression ``ts``
+    (which it repeats). The same functions in the same order, so both
+    spellings bucket every timestamp alike (pinned in tests/test_operators.py)."""
+    if interval == "1M":
+        return f"date_trunc('month', {ts})"
+    width = INTERVAL_SECONDS[interval]
+    secs = f"to_unix_timestamp({ts})"
+    return (f"timestamp_seconds({secs} - ((({secs} - {TS_BUCKET_ORIGIN}) % {width})"
+            f" + {width}) % {width})")
+
+
 def _pymod(col: Column, width: int) -> Column:
     # timestamps here are post-1970 so % is already a floor-mod; spelled out
     # so negative epochs would still bucket left.
     return ((col % width) + width) % width
-
-
-def epoch_ms(ts: Column | str) -> Column:
-    """timestamp → epoch milliseconds (`datetimehelpers.py:53-60` contract)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.unix_millis(c)
 

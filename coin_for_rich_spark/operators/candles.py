@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.numbers import money
+from ..functions.numbers import MONEY, money
 from ..functions.timeutils import time_bucket
 
 
@@ -53,6 +53,16 @@ def ohlcv_aggs(
         F.sum(money(volume_col)).cast("double").alias("volume"),
         F.count(F.lit(1)).alias("n_trades"),
     ]
+
+
+#: :func:`ohlcv_aggs` with its defaults, as Spark SQL select-list text for
+#: the chart reader's prepared statements (pinned equal to the Column list
+#: in tests/test_operators.py)
+OHLCV_AGGS_SQL = (
+    "min_by(price, ts) AS open, max(price) AS high, min(price) AS low, "
+    f"max_by(price, ts) AS close, CAST(sum(CAST(volume AS {MONEY})) AS DOUBLE) AS volume, "
+    "count(1) AS n_trades"
+)
 
 
 def ohlcv_rollup(

@@ -12,7 +12,9 @@ Spark-first expression: one global aggregate row holds the spine
 the averages and a bucket → candle map of the fetched rows; each exploded
 spine point looks its bucket up in that map instead of a LEFT JOIN, so the
 small (post-rollup, ≤500-row) fetched set is read once. The reference also
-averages over the limited fetched set (`readers.py:221-227`).
+averages over the limited fetched set (`readers.py:221-227`). The fill is
+written once, as SQL text (``gap_fill_sql``), so the chart reader can
+prepare it inside its own statement.
 """
 
 from __future__ import annotations
@@ -20,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.numbers import money
-from ..functions.timeutils import INTERVAL_SECONDS, time_bucket
+from ..functions.numbers import MONEY
+from ..functions.timeutils import INTERVAL_SECONDS, time_bucket_sql
 
 
 def lead_bounded_fill(
@@ -83,6 +85,77 @@ def lead_bounded_fill(
 FILL_COLS = ("open", "high", "low", "close")
 
 
+def gap_fill_args(interval: str, start=None, end=None, series_limit: int | None = None) -> dict:
+    """The parameters :func:`gap_fill_sql` binds for one fill; raises
+    ``ValueError`` for a calendar-month interval or a ``series_limit``
+    below 1, before any Spark call. ``None`` binds NULL: the bound or the
+    clamp then falls back to the data (see :func:`gap_fill_series`)."""
+    width = INTERVAL_SECONDS[interval]
+    if width is None:
+        raise ValueError("gap fill over calendar months not supported; use fixed widths")
+    if series_limit is not None and series_limit < 1:
+        raise ValueError(f"series_limit must be >= 1, got {series_limit}")
+    span = None if series_limit is None else width * (series_limit - 1)
+    return {"fill_start": start, "fill_end": end, "fill_span": span}
+
+
+def gap_fill_sql(src: str, interval: str) -> str:
+    """THE gap fill, as one Spark SQL statement over the relation ``src``
+    with the named markers of :func:`gap_fill_args` — the single
+    definition that :func:`gap_fill_series` and the chart reader's
+    prepared statements (``plans.reader``) both run.
+
+    One global agg row carries the spine bounds, the fill averages and a
+    bucket → candle map of the fetched rows (the reference's dseries
+    computes avg(fetched) alongside its generate_series,
+    `readers.py:221-238`); the spine ``sequence`` explodes from that row
+    and each point looks its bucket up in the map. The averages come from
+    every fetched row, so a sparse key whose latest data is older than the
+    clamped spine still emits avg-filled dummies, not NULLs (caught by the
+    live-PG reader-shape leg). Agg, never select: with both bounds bound, a
+    select would emit one row PER candle and duplicate the spine N times.
+    The one row explodes in sequence order inside one partition, so the
+    output is ascending with no sort.
+
+    Explicit bounds SNAP to the bucket grid (an unaligned start would put
+    every spine timestamp off-grid, the lookup would find nothing, and all
+    real candles would come back as filled dummies); data-derived bounds
+    are bucket values already. The clamp steps back ``:fill_span``
+    seconds from the upper bound — both bounds sit on one grid, so that
+    stays on-grid — and ``greatest`` keeps the later anchor: the latest
+    ``series_limit`` grid points, exactly the reference's ORDER BY ts DESC
+    LIMIT over its generate_series. ``greatest`` SKIPS nulls, so the
+    ``CASE`` keeps an empty fetch's NULL anchor NULL and its spine empty
+    (the reference returns [] — its series starts at min(fetched time),
+    which does not exist)."""
+    step = f"INTERVAL {INTERVAL_SECONDS[interval]} SECOND"
+    lo = time_bucket_sql("CAST(:fill_start AS TIMESTAMP)", interval)
+    hi = time_bucket_sql("CAST(:fill_end AS TIMESTAMP)", interval)
+    avgs = ", ".join(
+        f"CAST(sum(CAST({c} AS {MONEY})) AS DOUBLE) / count({c}) AS _avg_{c}" for c in FILL_COLS
+    )
+    fills = ", ".join(
+        f"round(coalesce(_rows[bucket].{c}, _avg_{c}), 4) AS {c}" for c in FILL_COLS
+    )
+    return f"""
+        SELECT bucket, {fills}, coalesce(_rows[bucket].volume, 0D) AS volume,
+               _rows[bucket].open IS NULL AS filled
+        FROM (
+            SELECT *, explode(sequence(
+                CASE WHEN _lo IS NOT NULL
+                     THEN greatest(_lo, _hi - make_dt_interval(0, 0, 0, :fill_span)) END,
+                _hi, {step})) AS bucket
+            FROM (
+                SELECT coalesce({lo}, min(bucket)) AS _lo,
+                       coalesce({hi}, max(bucket)) AS _hi,
+                       map_from_entries(collect_list(struct(
+                           bucket, struct({", ".join(FILL_COLS)}, volume)))) AS _rows,
+                       {avgs}
+                FROM {src}
+            )
+        )"""
+
+
 def gap_fill_series(
     candles: DataFrame,
     interval: str,
@@ -108,69 +181,8 @@ def gap_fill_series(
     output (the spine misses them). ``None`` leaves the spine unclamped.
     ``start``, when given, anchors the spine explicitly; the reference
     reader never does this (its spine always starts at min(fetched time) —
-    `readers.py:230`), so the parity caller passes ``start=None``.
+    `readers.py:230`), so the chart reader binds no start. ``end``
+    defaults to max(bucket).
     """
-    width = INTERVAL_SECONDS[interval]
-    if width is None:
-        raise ValueError("gap fill over calendar months not supported; use fixed widths")
-    if series_limit is not None and series_limit < 1:
-        raise ValueError(f"series_limit must be >= 1, got {series_limit}")
-    # explicit bounds SNAP to the bucket grid (an unaligned start would put
-    # every spine timestamp off-grid, the lookup would find nothing, and all
-    # real candles would come back as filled dummies); data-derived bounds
-    # are bucket values already
-    lo = (
-        time_bucket(F.lit(start).cast("timestamp"), interval)
-        if start is not None
-        else F.min("bucket")
-    )
-    hi = (
-        time_bucket(F.lit(end).cast("timestamp"), interval)
-        if end is not None
-        else F.max("bucket")
-    )
-    if series_limit is not None:
-        # both bounds sit on the same grid (lo is a bucket; hi is a
-        # time_bucket floor or a bucket), so stepping back N-1 widths from
-        # hi stays on-grid and greatest() picks the later anchor — the
-        # latest series_limit grid points, exactly the reference's
-        # ORDER BY ts DESC LIMIT over its generate_series.
-        # greatest() SKIPS nulls: an empty fetch (NULL lo) must stay NULL
-        # so the spine stays empty (the reference returns [] — its series
-        # starts at min(fetched time), which does not exist), not become a
-        # full dummy series anchored at the clamp
-        lo = F.when(
-            lo.isNotNull(),
-            F.greatest(
-                lo, hi - F.expr(f"INTERVAL {width * (series_limit - 1)} SECOND")
-            ),
-        )
-
-    # ONE global agg carries the spine, the fill averages and the fetched
-    # rows (the reference's dseries computes avg(fetched) alongside its
-    # generate_series, `readers.py:221-238`). The averages come from every
-    # fetched row, so a sparse key whose latest data is older than the
-    # last `series_limit` grid points still emits avg-filled dummies, not
-    # NULLs (caught by the live-PG reader-shape leg). Agg, never select:
-    # with BOTH bounds literal, a select would emit one row PER candle and
-    # duplicate the spine N times. The one row explodes in sequence order
-    # inside one partition, so the output is ascending with no sort.
-    row = F.col("_rows")[F.col("bucket")]
-    return candles.agg(
-        F.sequence(lo, hi, F.expr(f"INTERVAL {width} SECOND")).alias("_spine"),
-        F.map_from_entries(
-            F.collect_list(F.struct("bucket", F.struct(*FILL_COLS, "volume")))
-        ).alias("_rows"),
-        *[
-            (F.sum(money(c)).cast("double") / F.count(c)).alias(f"_avg_{c}")
-            for c in FILL_COLS
-        ],
-    ).select("*", F.explode("_spine").alias("bucket")).select(
-        "bucket",
-        *[
-            F.round(F.coalesce(row[c], F.col(f"_avg_{c}")), 4).alias(c)
-            for c in FILL_COLS
-        ],
-        F.coalesce(row["volume"], F.lit(0.0)).alias("volume"),
-        row["open"].isNull().alias("filled"),
-    )
+    args = gap_fill_args(interval, start, end, series_limit)
+    return candles.sparkSession.sql(gap_fill_sql("{src}", interval), args=args, src=candles)

@@ -15,10 +15,25 @@ Reference parity: ``readers.read_ohlcvs``
 5. optional gap-fill with avg-filled dummy rows (``empty_ts``,
    `readers.py:210-244`).
 
-Each request builds one predicate for its route: a materialized rollup is
-filtered on key, bucket bounds and their derived ``dt`` bounds
-(``sources.store.prune_time_range``); any other interval filters the ticks
-on key and the equivalent tick bounds, then buckets them on the fly.
+Each request binds ONE prepared Spark SQL statement — the reference's
+single statement against a continuous aggregate. Its text is built once
+per route shape (source, interval, route, ``empty_ts``, whether ``start``
+is set, ``key_col``) and bound per request with ``spark.sql(text,
+args=...)``: symbol, bounds and limit. A materialized rollup is filtered
+on key, bucket bounds and their derived ``dt`` bounds
+(``sources.store.time_range_sql``); any other interval filters the ticks
+on key and the equivalent tick bounds, then buckets them on the fly; the
+gap fill is ``operators.gapfill.gap_fill_sql`` over the fetch. Building a
+request's plan from DataFrame calls costs hundreds of Py4J round trips
+(PySpark's call-site capture wraps each one); binding a cached text costs
+a few dozen.
+
+Each source DataFrame is registered as one temp view on its first read.
+The view is dropped at the first read after the DataFrame is
+garbage-collected: the finalizer only queues the name, since it may run in
+the middle of another Py4J call (py4j defers its own finalizers the same
+way). One lock covers view creation and the text cache, so concurrent
+first reads never share a view name.
 
 Scale posture: the router picks a *pre-aggregated* rollup table exactly like
 the reference picks a continuous aggregate — the read never rescans raw
@@ -30,14 +45,17 @@ top-K (Spark's TakeOrderedAndProject), no full sort.
 from __future__ import annotations
 
 import datetime as dt
+import itertools
+import threading
+import weakref
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.timeutils import INTERVAL_SECONDS
-from ..operators.candles import ohlcv_rollup
-from ..operators.gapfill import gap_fill_series
-from ..sources.store import PARTITION_COL, prune_time_range
+from ..functions.timeutils import INTERVAL_SECONDS, time_bucket_sql
+from ..operators.candles import OHLCV_AGGS_SQL
+from ..operators.gapfill import gap_fill_args, gap_fill_sql
+from ..sources.store import PARTITION_COL, time_range_sql
 
 #: Interval strings accepted by the API (`web/config/constants.py:2-4`).
 VALID_INTERVALS = list(INTERVAL_SECONDS.keys())
@@ -111,6 +129,72 @@ def _aligned_tick_bounds(interval, start, end):
     return lo, hi
 
 
+def _sql(view: str, interval: str, materialized: bool, empty_ts: bool,
+         has_start: bool, key_col: str) -> str:
+    """The prepared statement of one route shape over the temp ``view``."""
+    key = f"`{key_col}`"
+    if materialized:
+        # the bucket bounds plus their derived dt bounds (Catalyst cannot
+        # infer them from `bucket` — dt is a stored column), so the scan
+        # PRUNES instead of reading the rollup's whole history; dt then
+        # leaves the serve schema
+        fetch = (f"SELECT * EXCEPT ({PARTITION_COL}) FROM {view} WHERE {key} = :sym"
+                 f" AND ({time_range_sql('bucket', has_start, True)})")
+    else:
+        # Replace the post-agg bucket bounds with their EXACT tick-level
+        # equivalents (guide §6): the bucket bounds sit on a derived column
+        # (two to_unix_timestamp + mod chains per row, never pushed to the
+        # scan), while ``bucket ≥ start ⟺ ts ≥ ceil_align(start)`` and
+        # ``bucket ≤ end ⟺ ts < floor_align(end) + width`` — because
+        # bucket = align_floor(ts) is the largest aligned instant ≤ ts. The
+        # replacement is bit-identical (every kept bucket aggregates its
+        # complete tick set — the bounds are bucket-aligned so no bucket is
+        # split), strictly cheaper per row (two plain timestamp compares),
+        # and PushedFilters gains the ts range so a properly laid-out
+        # deployment skips row groups outside the chart window instead of
+        # aggregating the entire tick history. The two bounds stay
+        # adjacent: when the window holds no whole bucket, lo == hi makes
+        # them each other's negation and Catalyst's BooleanSimplification
+        # folds the read to an empty relation that runs no Spark job.
+        bounds = "ts >= :lo AND ts < :hi" if has_start else "ts < :hi"
+        fetch = (f"SELECT {time_bucket_sql('ts', interval)} AS bucket, {key}, {OHLCV_AGGS_SQL}"
+                 f" FROM {view} WHERE {bounds} AND {key} = :sym GROUP BY 1, {key}")
+    # DESC fetch with limit keeps the latest rows (`readers.py:194-195`),
+    # then ASC re-sort for charting (`readers.py:242`); the gap fill emits
+    # its spine ascending, so it takes the fetch unsorted.
+    fetched = f"{fetch} ORDER BY bucket DESC LIMIT :lim"
+    if not empty_ts:
+        return f"SELECT * FROM ({fetched}) ORDER BY bucket"
+    return (f"WITH fetched AS ({fetched})"
+            f" SELECT *, :sym AS {key} FROM ({gap_fill_sql('fetched', interval)})")
+
+
+_LOCK = threading.Lock()
+#: source DataFrame → (its temp view, {route shape: statement text})
+_SOURCES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: (session, view) of collected sources, dropped by the next read
+_DEAD_VIEWS: list = []
+_VIEW_IDS = itertools.count()
+
+
+def _statement(src: DataFrame, shape: tuple) -> str:
+    """The statement text of one route ``shape`` over ``src``; registers
+    ``src``'s temp view on its first read and builds each text once."""
+    with _LOCK:
+        while _DEAD_VIEWS:
+            spark, view = _DEAD_VIEWS.pop()
+            spark.catalog.dropTempView(view)
+        if src not in _SOURCES:
+            view = f"chart_src_{next(_VIEW_IDS)}"
+            src.createOrReplaceTempView(view)
+            weakref.finalize(src, _DEAD_VIEWS.append, (src.sparkSession, view)).atexit = False
+            _SOURCES[src] = (view, {})
+        view, texts = _SOURCES[src]
+        if shape not in texts:
+            texts[shape] = _sql(view, *shape)
+        return texts[shape]
+
+
 def read_ohlcvs(
     ticks: DataFrame,
     symbol: str,
@@ -130,8 +214,9 @@ def read_ohlcvs(
     ``ticks`` carries ``ts``, ``price``, ``volume`` and ``key_col``. An
     interval with an entry in ``rollups`` reads that rollup, which must
     carry its ``dt`` partition column (``sources.store.load_rollups``);
-    any other interval buckets ``ticks`` on the fly. An unknown interval
-    raises ``ValueError`` before any bound is computed.
+    any other interval buckets ``ticks`` on the fly. An unknown interval,
+    a negative ``limit`` and a gap fill over '1M' raise ``ValueError``
+    before any Spark call.
 
     ``end`` defaults to one minute before ``now`` (`readers.py:171-175` —
     the reference always bounds the fetch at now-1min, floored to the
@@ -140,66 +225,41 @@ def read_ohlcvs(
     ``weekly_return``'s). The reference clamps only downward
     (``min(limit, 500)``, no lower bound): ``limit=0`` returns nothing and
     a negative limit is an error on both sides (PostgreSQL rejects
-    ``LIMIT -1``; Spark rejects ``.limit(-1)``) — unlike the analytics
-    readers (:func:`read_returns`), where -1 explicitly means "all".
+    ``LIMIT -1``) — unlike the analytics readers (:func:`read_returns`),
+    where -1 explicitly means "all".
     """
     if interval not in INTERVAL_SECONDS:
         raise ValueError(f"unknown interval {interval!r}; valid: {VALID_INTERVALS}")
-    limit = min(int(limit), MAX_LIMIT)  # `readers.py:168`
+    limit = int(limit)
+    if limit < 0:
+        raise ValueError(f"limit must be >= 0, got {limit}")
+    limit = min(limit, MAX_LIMIT)  # `readers.py:168`
     start, end = _floor_minute(start), _floor_minute(end)
     if end is None:
         # `readers.py:171-175`: end = (now - 1 minute) floored to the minute
         if now is None:
             now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         end = _floor_minute(now) - dt.timedelta(minutes=1)
-
-    key = F.col(key_col) == symbol
-    if rollups and interval in rollups:
-        # the bucket bounds plus their derived dt bounds (Catalyst cannot
-        # infer them from `bucket` — dt is a stored column), so the scan
-        # PRUNES instead of reading the rollup's whole history; dt then
-        # leaves the serve schema
-        rel = prune_time_range(
-            rollups[interval].filter(key), "bucket", start, end
-        ).drop(PARTITION_COL)
+    args = {"sym": symbol, "lim": limit}
+    if empty_ts:
+        # `readers.py:228-244`: the spine starts at min(FETCHED time) — not
+        # at `start`, which only bounds the fetch — runs to `end` (trailing
+        # gaps fill with dummies up to now-1min by default), and only its
+        # latest `limit` grid points survive (the series is DESC-limited
+        # before the join, so real rows older than the clamped spine drop
+        # out). An empty fetch returns [] — there is no min to anchor at.
+        # limit=0: the fetch is empty, so the spine is empty either way;
+        # the floor of 1 keeps gap_fill_args's >=1 check for direct callers
+        args.update(gap_fill_args(interval, end=end, series_limit=max(limit, 1)))
+    materialized = bool(rollups) and interval in rollups
+    if materialized:
+        src = rollups[interval]
+        args.update(start=start, end=end)
     else:
-        # Replace the post-agg bucket bounds with their EXACT tick-level
-        # equivalents (guide §6): the bucket bounds sit on a derived column
-        # (two to_unix_timestamp + mod chains per row, never pushed to the
-        # scan), while ``bucket ≥ start ⟺ ts ≥ ceil_align(start)`` and
-        # ``bucket ≤ end ⟺ ts < floor_align(end) + width`` — because
-        # bucket = align_floor(ts) is the largest aligned instant ≤ ts. The
-        # replacement is bit-identical (every kept bucket aggregates its
-        # complete tick set — the bounds are bucket-aligned so no bucket is
-        # split), strictly cheaper per row (two plain timestamp compares),
-        # and PushedFilters gains the ts range so a properly laid-out
-        # deployment skips row groups outside the chart window instead of
-        # aggregating the entire tick history.
-        lo, hi = _aligned_tick_bounds(interval, start, end)
-        bounds = F.col("ts") < F.lit(hi)
-        if lo is not None:
-            bounds = (F.col("ts") >= F.lit(lo)) & bounds
-        rel = ohlcv_rollup(ticks.filter(bounds & key), interval, keys=[key_col])
-
-    # DESC fetch with limit keeps the latest rows (`readers.py:194-195`),
-    # then ASC re-sort for charting (`readers.py:242`); the gap fill emits
-    # its spine ascending, so it takes the fetch unsorted.
-    fetched = rel.orderBy(F.col("bucket").desc()).limit(limit)
-    if not empty_ts:
-        return fetched.orderBy(F.col("bucket").asc())
-    # `readers.py:228-244`: the spine starts at min(FETCHED time) — not at
-    # `start`, which only bounds the fetch — runs to `end` (trailing gaps
-    # fill with dummies up to now-1min by default), and only its latest
-    # `limit` grid points survive (the series is DESC-limited before the
-    # join, so real rows older than the clamped spine drop out). An empty
-    # fetch returns [] — there is no min to anchor at.
-    # limit=0: the fetch is empty, so the spine anchor (min fetched time)
-    # is NULL and the series is empty either way — the reference's
-    # `... DESC LIMIT 0` spine and this floor-of-1 both return []; the
-    # floor just keeps gap_fill_series's >=1 validation for direct callers
-    # intact
-    filled = gap_fill_series(fetched, interval, end=end, series_limit=max(limit, 1))
-    return filled.withColumn(key_col, F.lit(symbol))
+        src = ticks
+        args.update(zip(("lo", "hi"), _aligned_tick_bounds(interval, start, end)))
+    shape = (interval, materialized, empty_ts, start is not None, key_col)
+    return src.sparkSession.sql(_statement(src, shape), args=args)
 
 
 def read_returns(

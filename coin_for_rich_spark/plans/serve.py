@@ -10,16 +10,15 @@ Both are pure column expressions (``unix_millis``, ``round``,
 ``to_json(struct(*))``) so serialization happens distributed, inside
 whole-stage codegen — the reference does this row-at-a-time in Python on the
 web tier; here a 1000-executor write of serialized payloads is the same plan
-shape as any other projection.
+shape as any other projection. ``serialize_candles`` spells its projection
+as SQL text in one ``selectExpr``: one Py4J call per response, where a
+Column per output field would cost several each.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.numbers import round4
-from ..functions.timeutils import epoch_ms
 
 #: columns rounded to 4 decimals at serve (`parsers.py:22-34`)
 OHLCV_COLS = ("open", "high", "low", "close", "volume")
@@ -33,12 +32,10 @@ def serialize_candles(df: DataFrame, results_mls: bool = True) -> DataFrame:
     ``results_mls`` selects milliseconds vs whole seconds, mirroring the
     API's ``results_mls`` flag (`parsers.py:9-40`).
     """
-    t = epoch_ms("bucket")
-    if not results_mls:
-        t = (t / F.lit(1000)).cast("bigint")
-    return df.select(
-        t.alias("time"),
-        *[round4(c).alias(c) if c in OHLCV_COLS else c
+    t = "unix_millis(bucket)" if results_mls else "CAST(unix_millis(bucket) / 1000 AS BIGINT)"
+    return df.selectExpr(
+        f"{t} AS time",
+        *[f"round(`{c}`, 4) AS `{c}`" if c in OHLCV_COLS else f"`{c}`"
           for c in df.columns if c != "bucket"],
     )
 

@@ -21,9 +21,6 @@ relationship between the reference's `ohlcvs` and its 8 rollup views.
 
 from __future__ import annotations
 
-import operator
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +39,12 @@ def utc_day(col) -> F.Column:
     return F.date_from_unix_date(
         F.floor(F.unix_timestamp(col) / F.lit(86400)).cast("int")
     )
+
+
+def utc_day_sql(ts: str) -> str:
+    """:func:`utc_day` as Spark SQL text over the SQL expression ``ts``
+    (pinned equal to it in tests/test_store.py)."""
+    return f"date_from_unix_date(CAST(floor(unix_timestamp({ts}) / 86400) AS INT))"
 
 
 def write_partitioned(
@@ -92,26 +95,34 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def prune_time_range(df: DataFrame, time_col: str, start=None, end=None) -> DataFrame:
-    """Apply a time-range filter AND its derived partition predicate, as
-    one predicate.
+def time_range_sql(time_col: str, start: bool, end: bool) -> str:
+    """The SQL predicate for ``:start <= time_col <= :end`` (each side only
+    when asked for) AND its derived partition predicate on ``dt``, with
+    ``:start``/``:end`` left as named parameter markers.
 
     The redundant ``dt`` bounds are what the scan planner prunes on —
     Catalyst cannot infer them from the ``time_col`` bounds because ``dt``
     is a stored column, not an expression, once the table is on disk.
     """
     bounds = []
-    if start is not None:
-        bounds += [
-            F.col(time_col) >= F.lit(start),
-            F.col(PARTITION_COL) >= utc_day(F.lit(start).cast("timestamp")),
-        ]
-    if end is not None:
-        bounds += [
-            F.col(time_col) <= F.lit(end),
-            F.col(PARTITION_COL) <= utc_day(F.lit(end).cast("timestamp")),
-        ]
-    return df.filter(reduce(operator.and_, bounds)) if bounds else df
+    if start:
+        bounds += [f"`{time_col}` >= :start",
+                   f"{PARTITION_COL} >= {utc_day_sql('CAST(:start AS TIMESTAMP)')}"]
+    if end:
+        bounds += [f"`{time_col}` <= :end",
+                   f"{PARTITION_COL} <= {utc_day_sql('CAST(:end AS TIMESTAMP)')}"]
+    return " AND ".join(bounds)
+
+
+def prune_time_range(df: DataFrame, time_col: str, start=None, end=None) -> DataFrame:
+    """Apply a time-range filter AND its derived partition predicate, as
+    one predicate (:func:`time_range_sql`)."""
+    if start is None and end is None:
+        return df
+    pred = time_range_sql(time_col, start is not None, end is not None)
+    return df.sparkSession.sql(
+        f"SELECT * FROM {{df}} WHERE {pred}", args={"start": start, "end": end}, df=df
+    )
 
 
 def materialize_rollups(

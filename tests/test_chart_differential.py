@@ -10,6 +10,9 @@ hand-written edges the mix rarely draws."""
 from __future__ import annotations
 
 import datetime as dt
+import gc
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -78,9 +81,15 @@ def chart_store(spark, tmp_path_factory):
     src = gen.write_table(table, str(base / "ticks.parquet"))
     write_partitioned(spark.read.parquet(src), str(base / "ticks"), truncate=True)
     ticks = read_partitioned(spark, str(base / "ticks"))
-    rollups = load_rollups(spark, materialize_rollups(ticks, str(base / "rollups")))
+    paths = materialize_rollups(ticks, str(base / "rollups"))
     con = oracle.connect_ticks(table)
-    yield ticks, rollups, con
+
+    def open_sources():
+        """Fresh source DataFrames over the same store: no temp view and
+        no statement text of the reader's belongs to them yet."""
+        return read_partitioned(spark, str(base / "ticks")), load_rollups(spark, paths)
+
+    yield (*open_sources(), con, open_sources)
     con.close()
 
 
@@ -103,9 +112,93 @@ def test_mix_covers_every_request_class():
 
 @pytest.mark.parametrize("req", CASES)
 def test_chart_response_matches_oracle(chart_store, req):
-    ticks, rollups, con = chart_store
+    ticks, rollups, con, _ = chart_store
     got = serve(ticks, rollups, req)
     want = oracle.chart_expected(con, req)
     assert oracle.compare_rows(want, got) is None, oracle.compare_rows(want, got)
     if want:
         assert list(got[0]) == list(want[0])  # column order, not just the set
+
+
+def test_window_without_whole_bucket_runs_no_job(chart_store):
+    """A tick-route window that holds no whole bucket plans to an empty
+    relation: its collect runs no Spark job."""
+    from coin_for_rich_spark.plans.reader import read_ohlcvs
+
+    ticks, rollups, _, _ = chart_store
+    month = _req("on_the_fly", "1M", D + dt.timedelta(days=1, hours=2), D + dt.timedelta(days=2))
+    for name, req in (("3h", EDGES["no_whole_bucket_on_the_fly"]), ("1M", month)):
+        df = read_ohlcvs(ticks, req["symbol"], req["interval"], start=req["start"],
+                         end=req["end"], limit=req["limit"], rollups=rollups)
+        sc = df.sparkSession.sparkContext
+        sc.setJobGroup(name, name)
+        try:
+            assert df.collect() == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(name) == [], name
+
+
+#: first reads of eight route shapes; the two clients take alternate
+#: entries, so each barrier round starts two first reads over two
+#: different sources (a rollup and the ticks)
+FIRST_READS = [
+    _req("materialized", "1h", D, D + dt.timedelta(days=2, hours=3)),
+    _req("raw_1m", "1m", D + dt.timedelta(days=2), D + dt.timedelta(days=2, hours=9)),
+    _req("materialized", "1h", D, D + dt.timedelta(days=1, hours=5), limit=30, empty_ts=True),
+    _req("on_the_fly", "3h", D, D + dt.timedelta(days=2, hours=20), symbol="SYM1"),
+    _req("materialized", "1D", D, D + dt.timedelta(days=2, hours=12), symbol="SYM2"),
+    _req("raw_1m", "1m", D + dt.timedelta(hours=20), D + dt.timedelta(days=1), limit=90, empty_ts=True),
+    _req("materialized", "1D", D, D + dt.timedelta(days=2, hours=12), empty_ts=True, symbol="SYM2"),
+    _req("on_the_fly", "14D", dt.datetime(2023, 12, 20), D + dt.timedelta(days=2)),
+]
+
+
+def test_two_thread_first_reads_match_serial(chart_store):
+    """Two clients start the FIRST reads of eight route shapes on fresh
+    sources, two at a time behind a barrier: every response equals its
+    serial answer, so concurrent first reads never share a temp view or a
+    half-built statement."""
+    ticks, rollups, _, open_sources = chart_store
+    serial = [serve(ticks, rollups, r) for r in FIRST_READS]
+    fresh_ticks, fresh_rollups = open_sources()
+    barrier = threading.Barrier(2)
+
+    def client(k: int) -> dict[int, list[dict]]:
+        out = {}
+        for i in range(k, len(FIRST_READS), 2):
+            barrier.wait(timeout=60)
+            try:
+                out[i] = serve(fresh_ticks, fresh_rollups, FIRST_READS[i])
+            except BaseException:
+                barrier.abort()  # the other client stops at its next round
+                raise
+        return out
+
+    with ThreadPoolExecutor(2) as pool:
+        got = {i: rows for part in pool.map(client, (0, 1)) for i, rows in part.items()}
+    assert len({(r["interval"], r["empty_ts"]) for r in FIRST_READS}) >= 6
+    for i, want in enumerate(serial):
+        assert got[i] == want, (i, FIRST_READS[i])
+
+
+def test_source_view_dropped_after_gc(spark, chart_store):
+    """A source DataFrame gets one temp view on its first read; once the
+    DataFrame is garbage-collected, the next read drops that view."""
+    from coin_for_rich_spark.plans.reader import read_ohlcvs
+
+    ticks, _, _, open_sources = chart_store
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    src, _ = open_sources()
+    read_ohlcvs(src, "SYM0", "3h", end=D + dt.timedelta(days=1))
+    read_ohlcvs(src, "SYM0", "14D", end=D + dt.timedelta(days=1))
+    (view,) = views() - before  # one view per source, not per shape
+    del src
+    gc.collect()
+    assert view in views()  # the finalizer only queues the drop
+    read_ohlcvs(ticks, "SYM0", "3h", end=D + dt.timedelta(days=1))
+    assert view not in views()

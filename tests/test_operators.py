@@ -71,6 +71,38 @@ def test_time_bucket_epoch_alignment(spark):
     assert r["b1m"] == dt.datetime(2024, 1, 1, 0, 0)
 
 
+def test_time_bucket_sql_matches_column_twin(spark):
+    """The SQL text of time_bucket buckets every timestamp exactly like the
+    Column expression, at every interval the router accepts."""
+    from coin_for_rich_spark.functions.timeutils import INTERVAL_SECONDS, time_bucket_sql
+
+    ts = [dt.datetime(2024, 1, 1, 13, 47, 59), dt.datetime(2023, 12, 31, 23, 59, 59, 999999),
+          dt.datetime(2000, 1, 3), dt.datetime(1999, 12, 30, 5, 0, 1),
+          dt.datetime(2024, 2, 29, 12, 0, 0, 1), dt.datetime(2024, 1, 14, 23, 59)]
+    df = spark.createDataFrame([(t,) for t in ts], "ts timestamp")
+    for iv in INTERVAL_SECONDS:
+        pairs = df.select(time_bucket("ts", iv).alias("c"), F.expr(time_bucket_sql("ts", iv)).alias("s"))
+        assert pairs.dtypes[0] == ("c", "timestamp") and pairs.dtypes[1] == ("s", "timestamp")
+        rows = pairs.collect()
+        assert all(r.c == r.s for r in rows) and len({r.c for r in rows}) > 1, iv
+
+
+def test_ohlcv_aggs_sql_matches_column_twin(spark, sf_dir):
+    """The SQL text of the OHLCV aggregates gives the same candles, schema
+    and column order as ohlcv_rollup."""
+    from coin_for_rich_spark.functions.timeutils import time_bucket_sql
+    from coin_for_rich_spark.operators.candles import OHLCV_AGGS_SQL
+
+    cv = candles_view(spark, sf_dir)
+    want = ohlcv_rollup(cv, "1h")
+    got = spark.sql(
+        f"SELECT {time_bucket_sql('ts', '1h')} AS bucket, symbol, {OHLCV_AGGS_SQL}"
+        " FROM {cv} GROUP BY 1, symbol", cv=cv,
+    )
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_read_ohlcvs_rejects_unknown_interval(spark, sf_dir):
     """The reader raises the router's ValueError on both routes, before any
     bound arithmetic can fail on the interval first."""

@@ -34,6 +34,19 @@ def test_chart_read_uses_topk_not_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan  # DESC limit = top-K, never a full Sort
 
 
+def test_tick_route_pushes_ts_range_to_scan(spark, sf_dir):
+    """The tick route's exact aligned ts bounds reach the parquet scan, so
+    row groups outside the chart window can be skipped."""
+    plan = _plan(read_ohlcvs(
+        candles_view(spark, sf_dir), "purchase", "1h",
+        start="2024-01-10 00:30:00", end="2024-01-12 06:00:00",
+    ))
+    scan = plan.split("Scan parquet", 1)[1]
+    pushed = next(ln for ln in scan.splitlines() if ln.startswith("PushedFilters"))
+    assert "GreaterThanOrEqual(ts,2024-01-10T01:00)" in pushed, pushed
+    assert "LessThan(ts,2024-01-12T07:00)" in pushed, pushed
+
+
 def test_rollup_is_partial_then_final_aggregate(spark, sf_dir):
     import re
 

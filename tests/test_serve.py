@@ -199,6 +199,21 @@ def test_chart_limit_contract_zero_and_negative(spark):
         read_ohlcvs(ticks, "k", "1h", limit=-1).count()
 
 
+def test_chart_read_rejects_bad_inputs_before_any_spark_call():
+    """A gap fill over calendar months and a negative limit fail at the
+    boundary with ValueError: the source here is no DataFrame, so any
+    Spark call on it would raise something else first."""
+    import pytest
+
+    from coin_for_rich_spark.plans.reader import read_ohlcvs
+
+    not_a_frame = object()
+    with pytest.raises(ValueError, match="calendar months"):
+        read_ohlcvs(not_a_frame, "k", "1M", end="2024-01-10 00:00:00", empty_ts=True)
+    with pytest.raises(ValueError, match="limit must be >= 0, got -1"):
+        read_ohlcvs(not_a_frame, "k", "1h", end="2024-01-10 00:00:00", limit=-1)
+
+
 def test_read_returns_cutoff_truthiness_and_limit_all(spark):
     """readers.py:44-68: cutoffs are tested for TRUTHINESS — cutoff 0 is
     ignored exactly like None (a 'negative returns only' request cannot be

@@ -187,6 +187,21 @@ def test_utc_day_is_session_timezone_independent(spark):
     assert shifted == dt.date(2024, 1, 10)
 
 
+def test_utc_day_sql_matches_column_twin(spark):
+    """The SQL text of utc_day cuts days exactly where the Column
+    expression does."""
+    import datetime as dt
+
+    from coin_for_rich_spark.sources.store import utc_day, utc_day_sql
+
+    ts = [dt.datetime(2024, 1, 10, 23, 59, 59, 999999), dt.datetime(2024, 1, 11),
+          dt.datetime(2023, 12, 31, 12, 30), dt.datetime(1999, 12, 31, 23, 59, 59)]
+    df = spark.createDataFrame([(t,) for t in ts], "ts timestamp")
+    pairs = df.select(utc_day(F.col("ts")).alias("c"), F.expr(utc_day_sql("ts")).alias("s"))
+    assert pairs.dtypes == [("c", "date"), ("s", "date")]
+    assert all(r.c == r.s for r in pairs.collect())
+
+
 def test_incremental_write_keeps_other_partitions(spark, tmp_path):
     """mode='overwrite' is DYNAMIC: writing one day replaces only that
     day's partition — Spark's static default would wipe the whole table on
