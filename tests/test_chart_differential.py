@@ -67,8 +67,9 @@ CASES = [
 
 @pytest.fixture(scope="module")
 def chart_store(spark, tmp_path_factory):
-    """The seeded ticks, date-partitioned, their rollup family, and a DuckDB
-    connection holding the same ticks."""
+    """(ticks, rollups, DuckDB connection, open_sources): the seeded ticks,
+    date-partitioned, their rollup family, a DuckDB connection holding the
+    same ticks, and a factory of fresh source DataFrames over the store."""
     from coin_for_rich_spark.sources.store import (
         load_rollups,
         materialize_rollups,
