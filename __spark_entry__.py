@@ -547,9 +547,9 @@ def q_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:  # UNDECLARED r
     # stays pinned hash-exact by tests/test_operators.py::
     # test_gap_detect_matches_duckdb_twin via _gap_detect_oracle_sql, and
     # the LEAD window family keeps gate coverage through geo_daily_return,
-    # the only declared row that runs the bounded-LEAD fill
-    # (operators.gapfill.lead_bounded_fill, W2); chart_read_gapfill's
-    # gap_fill_series has no LEAD window (agg → explode → project)
+    # the only declared row that runs the bounded-LEAD fill (its
+    # close_filled step, W2); chart_read_gapfill's gap_fill_sql has no
+    # LEAD window (agg → explode → project)
     """W1 — LEAD-based gap detection (queries.py:54-61), 12h threshold."""
     ev = load_table(spark, sf_dir, "events")
     return detect_gaps(ev, ["user_id"], "ts", min_gap_seconds=43200)

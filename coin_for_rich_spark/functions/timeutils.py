@@ -1,4 +1,4 @@
-"""Time-bucketing and epoch-ms helpers.
+"""Time-bucketing helpers.
 
 Reference parity:
 - ``time_bucket(interval, time)`` — TimescaleDB's bucketing function used by
@@ -6,8 +6,10 @@ Reference parity:
   Sub-daily widths map to exact epoch arithmetic; calendar widths (day, week,
   month) map to ``date_trunc`` — both are pure Catalyst expressions that stay
   inside whole-stage codegen (no UDFs, per SURVEY §2.10).
-- ``time_bucket_sql`` — the same bucketing as Spark SQL text, for the
-  chart reader's prepared statements (``plans.reader``).
+- ``time_bucket_sql`` is THE definition, as Spark SQL text: the chart
+  reader's prepared statements (``plans.reader``) embed it, and
+  ``time_bucket`` parses the same text into a Column for the DataFrame
+  operators, so there is one spelling of the bucketing rule.
 """
 
 from __future__ import annotations
@@ -45,26 +47,17 @@ INTERVAL_SECONDS: dict[str, int | None] = {
 TS_BUCKET_ORIGIN = 946_857_600
 
 
-def time_bucket(ts: Column | str, interval: str) -> Column:
-    """Bucket start for ``ts`` at the given interval.
+def time_bucket_sql(ts: str, interval: str) -> str:
+    """Bucket start for the Spark SQL expression ``ts`` (which the text
+    repeats) at the given interval, as SQL text.
 
     Origin-aligned floor for fixed widths (identical semantics to
     TimescaleDB's ``time_bucket(width, ts)``: subtract
     ``(epoch - origin) mod width``), ``date_trunc('month')`` for '1M'.
-    Integer division on the long epoch keeps this exact and codegen-friendly.
-    """
-    c = F.col(ts) if isinstance(ts, str) else ts
-    if interval == "1M":
-        return F.date_trunc("month", c)
-    width = INTERVAL_SECONDS[interval]
-    secs = F.to_unix_timestamp(c)
-    return F.timestamp_seconds(secs - _pymod(secs - TS_BUCKET_ORIGIN, width))
-
-
-def time_bucket_sql(ts: str, interval: str) -> str:
-    """:func:`time_bucket` as Spark SQL text over the SQL expression ``ts``
-    (which it repeats). The same functions in the same order, so both
-    spellings bucket every timestamp alike (pinned in tests/test_operators.py)."""
+    Integer arithmetic on the long epoch keeps this exact and
+    codegen-friendly. Timestamps here are post-1970, so ``%`` is already a
+    floor-mod; the ``(x % w + w) % w`` form is spelled out so negative
+    epochs would still bucket left."""
     if interval == "1M":
         return f"date_trunc('month', {ts})"
     width = INTERVAL_SECONDS[interval]
@@ -73,8 +66,6 @@ def time_bucket_sql(ts: str, interval: str) -> str:
             f" + {width}) % {width})")
 
 
-def _pymod(col: Column, width: int) -> Column:
-    # timestamps here are post-1970 so % is already a floor-mod; spelled out
-    # so negative epochs would still bucket left.
-    return ((col % width) + width) % width
-
+def time_bucket(ts: str, interval: str) -> Column:
+    """:func:`time_bucket_sql` over the column named ``ts``, as a Column."""
+    return F.expr(time_bucket_sql(f"`{ts}`", interval))

@@ -17,7 +17,6 @@ from .maintenance import (
     dedup_pk,
     count_distinct_pairs,
 )
-from .gapfill import gap_fill_series
 from .windowed import moving_average, sessionize, topn_per_key
 
 __all__ = [
@@ -38,7 +37,6 @@ __all__ = [
     "retention_anti_join",
     "dedup_pk",
     "count_distinct_pairs",
-    "gap_fill_series",
     "moving_average",
     "sessionize",
     "topn_per_key",

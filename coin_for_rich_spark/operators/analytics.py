@@ -25,7 +25,6 @@ from pyspark.sql import types as T
 
 from ..functions.numbers import money, money4
 from .candles import ohlcv_rollup
-from .gapfill import lead_bounded_fill
 
 
 def common_keys_top30(
@@ -164,14 +163,14 @@ def geo_daily_return(
 
     Parity: ``geo_daily_return`` (`create.sql:225-278`) — daily rollup,
     per-gap LEAD-bounded forward fill of close (the ``close_filled`` CTE,
-    `create.sql:227-244`, via operators.gapfill.lead_bounded_fill), LAG(close)
+    `create.sql:227-244`, W2), LAG(close)
     per key (W3), ln of the daily factor, geometric mean (A4),
     CURRENT_DATE-relative window (`create.sql:241`) parameterized by ``now``
     so results are deterministic (SURVEY §7 M0). A gap day carries the
     previous close forward, so its factor is ln(1)=0 — it dilutes the
     geometric mean (larger n) without adding return, exactly the reference's
     semantics; a factor never spans a gap. The fill DROPS each key's final
-    daily bucket (``last_bucket="drop"``): PostgreSQL's select-list SRF
+    daily bucket: PostgreSQL's select-list SRF
     semantics eliminate the LEAD-is-NULL row from the reference's
     ``close_filled`` CTE, so the most recent day's return is never counted
     — reproduced deliberately and pinned against the reference's own SQL
@@ -195,13 +194,23 @@ def geo_daily_return(
     daily = ohlcv_rollup(windowed, "1D", keys=list(keys), time_col=time_col,
                          price_col=price_col, **rollup_kwargs)
     recent = daily.filter(F.col("close") != 0).select(*keys, "bucket", "close")
-    # last_bucket="drop": PostgreSQL eliminates the select-list SRF row when
-    # LEAD(bucket) is NULL, so the reference's close_filled CTE drops each
-    # key's FINAL daily bucket — the most recent day's return never enters
-    # the geometric mean (verified verbatim in test_reference_sql_parity)
-    filled = lead_bounded_fill(
-        recent, keys=list(keys), bucket_col="bucket", interval="1D",
-        carry_cols=["close"], last_bucket="drop",
+    # close_filled: each present day is extended with copies carrying its
+    # close forward to LEAD(bucket) - 1 day — Postgres's per-row
+    # generate_series(bucket, LEAD(bucket) - Δ, Δ) exactly, so every gap
+    # fills from its left edge. No join: the fill factor is data-dependent
+    # per gap, and the exploded output streams out of the window stage.
+    # PostgreSQL eliminates the select-list SRF row when LEAD(bucket) is
+    # NULL, so the reference's close_filled CTE drops each key's FINAL daily
+    # bucket — the most recent day's return never enters the geometric mean
+    # (verified verbatim in test_reference_sql_parity); here
+    # sequence(b, NULL, Δ) is NULL and explode of a NULL array emits no rows,
+    # the same row elimination
+    day = F.expr("INTERVAL 86400 SECOND")
+    filled = recent.withColumn(
+        "_next", F.lead("bucket").over(Window.partitionBy(*keys).orderBy("bucket"))
+    ).select(
+        *keys, F.explode(F.sequence(F.col("bucket"), F.col("_next") - day, day)).alias("bucket"),
+        "close",
     )
     w = Window.partitionBy(*keys).orderBy("bucket")
     factors = (

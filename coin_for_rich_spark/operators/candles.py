@@ -32,36 +32,42 @@ from ..functions.numbers import MONEY, money
 from ..functions.timeutils import time_bucket
 
 
+def _ohlcv_agg_sql(price: str, volume: str, order: str) -> list[tuple[str, str]]:
+    """THE OHLCV aggregates over the SQL expressions ``price``, ``volume``
+    and ``order`` (what open/close argmin/argmax order on), as (output
+    name, Spark SQL) pairs — the single definition behind the batch rollup
+    (below), the streaming rollup (streaming.rollup) and the chart reader's
+    prepared statements (plans.reader), so backfill, incremental refresh
+    and on-the-fly reads can never disagree on candle semantics (the
+    reference gets the same guarantee from one SQL view definition,
+    `create.sql:105-118`)."""
+    return [
+        ("open", f"min_by({price}, {order})"),
+        ("high", f"max({price})"),
+        ("low", f"min({price})"),
+        ("close", f"max_by({price}, {order})"),
+        ("volume", f"CAST(sum(CAST({volume} AS {MONEY})) AS DOUBLE)"),
+        ("n_trades", "count(1)"),
+    ]
+
+
 def ohlcv_aggs(
     time_col: str = "ts",
     price_col: str = "price",
     volume_col: str = "volume",
-    order: Column | None = None,
+    order: str | None = None,
 ) -> list[Column]:
-    """THE OHLCV aggregate expressions — the single definition shared by the
-    batch rollup (below) and the streaming rollup (streaming.rollup), so
-    backfill and incremental refresh can never disagree on candle semantics
-    (the reference gets the same guarantee from one SQL view definition,
-    `create.sql:105-118`). Guarded by tests/test_plans.py."""
-    if order is None:
-        order = F.col(time_col)
-    return [
-        F.min_by(price_col, order).alias("open"),
-        F.max(price_col).alias("high"),
-        F.min(price_col).alias("low"),
-        F.max_by(price_col, order).alias("close"),
-        F.sum(money(volume_col)).cast("double").alias("volume"),
-        F.count(F.lit(1)).alias("n_trades"),
-    ]
+    """The OHLCV aggregates over the named columns, as aliased Columns;
+    ``order`` is SQL text (default: the time column). Guarded by
+    tests/test_plans.py."""
+    pairs = _ohlcv_agg_sql(f"`{price_col}`", f"`{volume_col}`", order or f"`{time_col}`")
+    return [F.expr(sql).alias(name) for name, sql in pairs]
 
 
-#: :func:`ohlcv_aggs` with its defaults, as Spark SQL select-list text for
-#: the chart reader's prepared statements (pinned equal to the Column list
-#: in tests/test_operators.py)
-OHLCV_AGGS_SQL = (
-    "min_by(price, ts) AS open, max(price) AS high, min(price) AS low, "
-    f"max_by(price, ts) AS close, CAST(sum(CAST(volume AS {MONEY})) AS DOUBLE) AS volume, "
-    "count(1) AS n_trades"
+#: the OHLCV aggregates over ``price``, ``volume`` and ``ts``, as a Spark
+#: SQL select list for the chart reader's prepared statements
+OHLCV_AGGS_SQL = ", ".join(
+    f"{sql} AS {name}" for name, sql in _ohlcv_agg_sql("price", "volume", "ts")
 )
 
 
@@ -84,10 +90,10 @@ def ohlcv_rollup(
     per-key timestamp ties (verified at every sf), so the default orders on
     time alone, which also matches DuckDB's two-argument ``arg_min/arg_max``.
     """
-    order: Column = (
-        F.struct(F.col(time_col), F.col(tiebreak_col))
+    order = (
+        f"struct(`{time_col}`, `{tiebreak_col}`)"
         if tiebreak_col and tiebreak_col in df.columns
-        else F.col(time_col)
+        else None
     )
     return df.groupBy(time_bucket(time_col, interval).alias("bucket"), *keys).agg(
         *ohlcv_aggs(time_col, price_col, volume_col, order=order)

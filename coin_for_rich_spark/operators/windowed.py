@@ -118,7 +118,8 @@ def moving_average(
         out_col,
         # count(value), not count(*): SQL AVG ignores NULL values — the
         # reference's AVG(...) OVER frame (aggregations.sql) divides by the
-        # non-NULL count, and gap_fill_series already follows that rule
+        # non-NULL count, and operators.gapfill.gap_fill_sql already
+        # follows that rule
         F.sum(money(value_col)).over(w).cast("double")
         / F.count(F.col(value_col)).over(w),
     )

@@ -19,14 +19,17 @@ Each request binds ONE prepared Spark SQL statement — the reference's
 single statement against a continuous aggregate. Its text is built once
 per route shape (source, interval, route, ``empty_ts``, whether ``start``
 is set, ``key_col``) and bound per request with ``spark.sql(text,
-args=...)``: symbol, bounds and limit. A materialized rollup is filtered
-on key, bucket bounds and their derived ``dt`` bounds
-(``sources.store.time_range_sql``); any other interval filters the ticks
-on key and the equivalent tick bounds, then buckets them on the fly; the
-gap fill is ``operators.gapfill.gap_fill_sql`` over the fetch. Building a
-request's plan from DataFrame calls costs hundreds of Py4J round trips
-(PySpark's call-site capture wraps each one); binding a cached text costs
-a few dozen.
+args=...)``: symbol, bounds and limit, every datetime as a UTC-aware
+value. The text is assembled from the rules' own SQL definitions: a
+materialized rollup is filtered on key, bucket bounds and their derived
+``dt`` bounds (``sources.store.time_range_sql``); any other interval
+filters the ticks on key and the equivalent tick bounds, then buckets
+them on the fly (``functions.timeutils.time_bucket_sql``,
+``operators.candles.OHLCV_AGGS_SQL``); the gap fill is
+``operators.gapfill.gap_fill_sql`` over the fetch, reading the same
+``:end`` and ``:lim`` markers. Building a request's plan from DataFrame
+calls costs hundreds of Py4J round trips (PySpark's call-site capture
+wraps each one); binding a cached text costs a few dozen.
 
 Each source DataFrame is registered as one temp view on its first read.
 The view is dropped at the first read after the DataFrame is
@@ -54,7 +57,7 @@ from pyspark.sql import functions as F
 
 from ..functions.timeutils import INTERVAL_SECONDS, time_bucket_sql
 from ..operators.candles import OHLCV_AGGS_SQL
-from ..operators.gapfill import gap_fill_args, gap_fill_sql
+from ..operators.gapfill import gap_fill_sql
 from ..sources.store import PARTITION_COL, time_range_sql
 
 #: Interval strings accepted by the API (`web/config/constants.py:2-4`).
@@ -71,15 +74,25 @@ def _floor_minute(t) -> dt.datetime | None:
     """Normalize a request bound to minute precision (`readers.py:169-176`).
 
     Accepts epoch milliseconds (the reference's wire format), ISO strings,
-    or datetimes.
+    or datetimes; returns a naive UTC datetime. A naive input is UTC; an
+    aware one (an ISO string with an offset included) is converted to UTC.
     """
     if t is None:
         return None
     if isinstance(t, (int, float)):  # epoch milliseconds, the wire format
-        t = dt.datetime.fromtimestamp(t / 1000.0, dt.timezone.utc).replace(tzinfo=None)
+        t = dt.datetime.fromtimestamp(t / 1000.0, dt.timezone.utc)
     elif isinstance(t, str):
         t = dt.datetime.fromisoformat(t)
+    if t.tzinfo is not None:
+        t = t.astimezone(dt.timezone.utc).replace(tzinfo=None)
     return t.replace(second=0, microsecond=0)
+
+
+def _utc(t: dt.datetime | None) -> dt.datetime | None:
+    """A naive UTC bound as the UTC-aware value the statement binds: PySpark
+    converts a naive datetime in the Python process's LOCAL zone, which
+    would shift every bound by that zone's offset off a UTC host."""
+    return None if t is None else t.replace(tzinfo=dt.timezone.utc)
 
 
 def _aligned_tick_bounds(interval, start, end):
@@ -214,9 +227,10 @@ def read_ohlcvs(
     ``ticks`` carries ``ts``, ``price``, ``volume`` and ``key_col``. An
     interval with an entry in ``rollups`` reads that rollup, which must
     carry its ``dt`` partition column (``sources.store.load_rollups``);
-    any other interval buckets ``ticks`` on the fly. An unknown interval,
-    a negative ``limit`` and a gap fill over '1M' raise ``ValueError``
-    before any Spark call.
+    any other interval buckets ``ticks`` on the fly. ``start`` and ``end``
+    are epoch milliseconds, ISO strings or datetimes; a naive one is UTC.
+    An unknown interval, a negative ``limit`` and a gap fill over '1M'
+    raise ``ValueError`` before any Spark call.
 
     ``end`` defaults to one minute before ``now`` (`readers.py:171-175` —
     the reference always bounds the fetch at now-1min, floored to the
@@ -233,31 +247,28 @@ def read_ohlcvs(
     limit = int(limit)
     if limit < 0:
         raise ValueError(f"limit must be >= 0, got {limit}")
+    if empty_ts and INTERVAL_SECONDS[interval] is None:
+        raise ValueError("gap fill over calendar months not supported; use fixed widths")
     limit = min(limit, MAX_LIMIT)  # `readers.py:168`
     start, end = _floor_minute(start), _floor_minute(end)
     if end is None:
         # `readers.py:171-175`: end = (now - 1 minute) floored to the minute
         if now is None:
-            now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+            now = dt.datetime.now(dt.timezone.utc)
         end = _floor_minute(now) - dt.timedelta(minutes=1)
-    args = {"sym": symbol, "lim": limit}
-    if empty_ts:
-        # `readers.py:228-244`: the spine starts at min(FETCHED time) — not
-        # at `start`, which only bounds the fetch — runs to `end` (trailing
-        # gaps fill with dummies up to now-1min by default), and only its
-        # latest `limit` grid points survive (the series is DESC-limited
-        # before the join, so real rows older than the clamped spine drop
-        # out). An empty fetch returns [] — there is no min to anchor at.
-        # limit=0: the fetch is empty, so the spine is empty either way;
-        # the floor of 1 keeps gap_fill_args's >=1 check for direct callers
-        args.update(gap_fill_args(interval, end=end, series_limit=max(limit, 1)))
+    # `readers.py:228-244`: a gap fill's spine starts at min(FETCHED time) —
+    # not at `start`, which only bounds the fetch — runs to `end` (trailing
+    # gaps fill with dummies up to now-1min by default), and only its latest
+    # `limit` grid points survive (gap_fill_sql reads :end and :lim)
+    args = {"sym": symbol, "lim": limit, "end": _utc(end)}
     materialized = bool(rollups) and interval in rollups
     if materialized:
         src = rollups[interval]
-        args.update(start=start, end=end)
+        args["start"] = _utc(start)
     else:
         src = ticks
-        args.update(zip(("lo", "hi"), _aligned_tick_bounds(interval, start, end)))
+        lo, hi = _aligned_tick_bounds(interval, start, end)
+        args.update(lo=_utc(lo), hi=_utc(hi))
     shape = (interval, materialized, empty_ts, start is not None, key_col)
     return src.sparkSession.sql(_statement(src, shape), args=args)
 

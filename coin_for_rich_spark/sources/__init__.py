@@ -23,7 +23,6 @@ from .ratelimit import (
 from .store import (
     load_rollups,
     materialize_rollups,
-    prune_time_range,
     read_partitioned,
     write_partitioned,
 )
@@ -49,7 +48,6 @@ __all__ = [
     "gcra_dispatch_schedule",
     "load_rollups",
     "materialize_rollups",
-    "prune_time_range",
     "read_partitioned",
     "write_partitioned",
 ]

@@ -17,6 +17,11 @@ inside the normal shuffle; no driver-side loop, no global sort.
 candles land in their own partitioned table, which the interval router
 (plans.reader) can then serve without rescanning raw ticks — the exact
 relationship between the reference's `ohlcvs` and its 8 rollup views.
+
+The UTC-day rule is written once, as SQL text (``utc_day_sql``): the
+writer projects it through ``F.expr`` and ``time_range_sql`` derives the
+chart reader's ``dt`` bounds from it, so the layout a writer bakes and
+the partitions a reader prunes to cannot drift apart.
 """
 
 from __future__ import annotations
@@ -29,21 +34,14 @@ from ..operators.candles import ohlcv_rollup
 PARTITION_COL = "dt"
 
 
-def utc_day(col) -> F.Column:
-    """The UTC calendar day of a timestamp, independent of the SESSION
-    timezone: epoch seconds floor-div 86400 → DATE. ``to_date`` would cut
-    the day in the session zone — a writer running outside the engine's
-    UTC pin (load_table enforces it, but nothing forces a store writer
-    through load_table) would bake a shifted layout that a UTC reader's
-    partition predicate then silently prunes matching rows out of."""
-    return F.date_from_unix_date(
-        F.floor(F.unix_timestamp(col) / F.lit(86400)).cast("int")
-    )
-
-
 def utc_day_sql(ts: str) -> str:
-    """:func:`utc_day` as Spark SQL text over the SQL expression ``ts``
-    (pinned equal to it in tests/test_store.py)."""
+    """The UTC calendar day of the Spark SQL timestamp expression ``ts``,
+    as SQL text, independent of the SESSION timezone: epoch seconds
+    floor-div 86400 → DATE. ``to_date`` would cut the day in the session
+    zone — a writer running outside the engine's UTC pin (load_table
+    enforces it, but nothing forces a store writer through load_table)
+    would bake a shifted layout that a UTC reader's partition predicate
+    then silently prunes matching rows out of."""
     return f"date_from_unix_date(CAST(floor(unix_timestamp({ts}) / 86400) AS INT))"
 
 
@@ -74,7 +72,7 @@ def write_partitioned(
     in). Pass ``truncate=True`` for a full rebuild — the whole table is
     replaced (static overwrite), so no stale partition survives.
     """
-    out = df.withColumn(PARTITION_COL, utc_day(F.col(time_col)))
+    out = df.withColumn(PARTITION_COL, F.expr(utc_day_sql(f"`{time_col}`")))
     if coalesce_days:
         out = out.repartition(F.col(PARTITION_COL))
     writer = out.write.mode(mode)
@@ -89,8 +87,8 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Read a partitioned table; time predicates prune via ``dt``.
 
     Callers filter on the *time column* as usual plus (optionally) ``dt`` —
-    ``prune_time_range`` derives the partition predicate from a time range
-    so callers never have to think about the layout.
+    :func:`time_range_sql` derives the partition predicate from a time
+    range so callers never have to think about the layout.
     """
     return spark.read.parquet(path)
 
@@ -112,17 +110,6 @@ def time_range_sql(time_col: str, start: bool, end: bool) -> str:
         bounds += [f"`{time_col}` <= :end",
                    f"{PARTITION_COL} <= {utc_day_sql('CAST(:end AS TIMESTAMP)')}"]
     return " AND ".join(bounds)
-
-
-def prune_time_range(df: DataFrame, time_col: str, start=None, end=None) -> DataFrame:
-    """Apply a time-range filter AND its derived partition predicate, as
-    one predicate (:func:`time_range_sql`)."""
-    if start is None and end is None:
-        return df
-    pred = time_range_sql(time_col, start is not None, end is not None)
-    return df.sparkSession.sql(
-        f"SELECT * FROM {{df}} WHERE {pred}", args={"start": start, "end": end}, df=df
-    )
 
 
 def materialize_rollups(

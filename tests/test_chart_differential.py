@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import datetime as dt
 import gc
+import os
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -203,3 +205,40 @@ def test_source_view_dropped_after_gc(spark, chart_store):
     assert view in views()  # the finalizer only queues the drop
     read_ohlcvs(ticks, "SYM0", "3h", end=D + dt.timedelta(days=1))
     assert view not in views()
+
+
+#: served request → the naive-UTC request the oracle answers; the bounds
+#: of each cut through ticked hours, so a window shifted by a zone offset
+#: returns other rows
+TZ_CASES = [
+    (r, r) for r in (
+        _req("materialized", "1h", D + dt.timedelta(hours=5), D + dt.timedelta(days=1, hours=3)),
+        _req("raw_1m", "1m", D + dt.timedelta(hours=22), D + dt.timedelta(days=1, minutes=30),
+             limit=60, empty_ts=True),
+        _req("on_the_fly", "3h", D + dt.timedelta(hours=4), D + dt.timedelta(days=2, hours=20)),
+    )
+] + [(dict(iso, start="2024-01-03T03:00:00+02:00"), iso) for iso in (
+    _req("raw_1m", "1m", D + dt.timedelta(days=2, hours=1), D + dt.timedelta(days=2, hours=6)),
+)]
+
+
+def test_bounds_are_utc_in_any_process_time_zone(chart_store):
+    """Request bounds mean UTC whatever the Python process's local time
+    zone: a naive bound is UTC, and an ISO bound with an offset is
+    converted to UTC, on both routes and with the gap fill."""
+    ticks, rollups, con, _ = chart_store
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        for served, asked in TZ_CASES:
+            got = serve(ticks, rollups, served)
+            want = oracle.chart_expected(con, asked)
+            assert want, asked  # an empty answer would hide a shifted window
+            assert oracle.compare_rows(want, got) is None, (served, oracle.compare_rows(want, got))
+    finally:
+        if tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = tz
+        time.tzset()

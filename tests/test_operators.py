@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 from coin_for_rich_spark.functions.timeutils import time_bucket
 from coin_for_rich_spark.operators import (
     dedup_pk,
-    gap_fill_series,
     latest_per_key,
     ohlcv_rollup,
 )
+from coin_for_rich_spark.operators.gapfill import gap_fill_sql
 from coin_for_rich_spark.plans import read_ohlcvs
 from coin_for_rich_spark.sources import candles_view
 
@@ -71,38 +71,6 @@ def test_time_bucket_epoch_alignment(spark):
     assert r["b1m"] == dt.datetime(2024, 1, 1, 0, 0)
 
 
-def test_time_bucket_sql_matches_column_twin(spark):
-    """The SQL text of time_bucket buckets every timestamp exactly like the
-    Column expression, at every interval the router accepts."""
-    from coin_for_rich_spark.functions.timeutils import INTERVAL_SECONDS, time_bucket_sql
-
-    ts = [dt.datetime(2024, 1, 1, 13, 47, 59), dt.datetime(2023, 12, 31, 23, 59, 59, 999999),
-          dt.datetime(2000, 1, 3), dt.datetime(1999, 12, 30, 5, 0, 1),
-          dt.datetime(2024, 2, 29, 12, 0, 0, 1), dt.datetime(2024, 1, 14, 23, 59)]
-    df = spark.createDataFrame([(t,) for t in ts], "ts timestamp")
-    for iv in INTERVAL_SECONDS:
-        pairs = df.select(time_bucket("ts", iv).alias("c"), F.expr(time_bucket_sql("ts", iv)).alias("s"))
-        assert pairs.dtypes[0] == ("c", "timestamp") and pairs.dtypes[1] == ("s", "timestamp")
-        rows = pairs.collect()
-        assert all(r.c == r.s for r in rows) and len({r.c for r in rows}) > 1, iv
-
-
-def test_ohlcv_aggs_sql_matches_column_twin(spark, sf_dir):
-    """The SQL text of the OHLCV aggregates gives the same candles, schema
-    and column order as ohlcv_rollup."""
-    from coin_for_rich_spark.functions.timeutils import time_bucket_sql
-    from coin_for_rich_spark.operators.candles import OHLCV_AGGS_SQL
-
-    cv = candles_view(spark, sf_dir)
-    want = ohlcv_rollup(cv, "1h")
-    got = spark.sql(
-        f"SELECT {time_bucket_sql('ts', '1h')} AS bucket, symbol, {OHLCV_AGGS_SQL}"
-        " FROM {cv} GROUP BY 1, symbol", cv=cv,
-    )
-    assert got.dtypes == want.dtypes
-    assert sorted(got.collect()) == sorted(want.collect())
-
-
 def test_read_ohlcvs_rejects_unknown_interval(spark, sf_dir):
     """The reader raises the router's ValueError on both routes, before any
     bound arithmetic can fail on the interval first."""
@@ -120,6 +88,14 @@ def test_read_ohlcvs_clamps_limit(spark, sf_dir):
     assert n <= 500
 
 
+def _gap_fill(candles, interval, end, lim=500):
+    """``gap_fill_sql`` over ``candles``, bound the way the chart reader
+    binds it."""
+    return candles.sparkSession.sql(
+        gap_fill_sql("{src}", interval), args={"end": end, "lim": lim}, src=candles
+    )
+
+
 def test_gap_fill_avg_dummies(spark):
     candles = spark.createDataFrame(
         [
@@ -127,7 +103,7 @@ def test_gap_fill_avg_dummies(spark):
             Row(bucket=dt.datetime(2024, 1, 3), open=20.0, high=22.0, low=19.0, close=21.0, volume=7.0),
         ]
     )
-    out = {r["bucket"]: r for r in gap_fill_series(candles, "1D").collect()}
+    out = {r["bucket"]: r for r in _gap_fill(candles, "1D", dt.datetime(2024, 1, 3)).collect()}
     assert len(out) == 3
     dummy = out[dt.datetime(2024, 1, 2)]
     # avg over the fetched window, volume 0 (`readers.py:221-227`)
@@ -147,7 +123,7 @@ def test_gap_fill_rejects_duplicate_buckets(spark):
         ]
     )
     with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
-        gap_fill_series(candles, "1D").collect()
+        _gap_fill(candles, "1D", dt.datetime(2024, 1, 3)).collect()
 
 
 def test_dedup_keeps_lowest_tiebreak(spark):
@@ -455,8 +431,8 @@ def test_range_join_exact_on_big_longs_and_explosion_guard(spark):
 
 def test_operator_core_review_hardening(spark):
     """Round-7 review pins for the relational core: sessionize's tiebreak
-    parameter works; gap-fill with explicit bounds neither duplicates the
-    spine nor misses off-grid candles; moving_average follows SQL AVG NULL
+    parameter works; gap-fill with a bound end neither duplicates the
+    spine nor misses candles below an off-grid end; moving_average follows SQL AVG NULL
     semantics; count-distinct-pairs counts NULL-component rows like a
     Postgres row constructor; weekly buckets align to Monday (TimescaleDB's
     2000-01-03 origin), not epoch-floor Thursday."""
@@ -468,7 +444,6 @@ def test_operator_core_review_hardening(spark):
     from coin_for_rich_spark.functions.timeutils import time_bucket
     from coin_for_rich_spark.operators import (
         count_distinct_pairs,
-        gap_fill_series,
         moving_average,
         sessionize,
     )
@@ -482,8 +457,8 @@ def test_operator_core_review_hardening(spark):
     got = sessionize(df, ["k"], tiebreak_col="event_id").collect()
     assert len(got) == 1 and got[0].n_events == 3
 
-    # 2. explicit bounds: exactly one spine row per bucket, and an
-    # off-grid :30 start snaps to the hour grid instead of matching nothing
+    # 2. a bound end: exactly one spine row per bucket, and an off-grid
+    # :45 end snaps to the hour grid instead of matching nothing
     candles = spark.createDataFrame(
         [
             Row(bucket=t0 + dt.timedelta(hours=1), open=1.0, high=1.0,
@@ -492,22 +467,12 @@ def test_operator_core_review_hardening(spark):
                 low=2.0, close=2.0, volume=7.0),
         ]
     )
-    filled = gap_fill_series(
-        candles, "1h",
-        start=t0 + dt.timedelta(minutes=30),
-        end=t0 + dt.timedelta(hours=3, minutes=45),
-    ).collect()
-    assert len(filled) == 4  # hours 0..3, each ONCE
+    filled = _gap_fill(candles, "1h", t0 + dt.timedelta(hours=3, minutes=45)).collect()
+    assert len(filled) == 3  # hours 1..3, each ONCE
     by_bucket = {r.bucket: r for r in filled}
     assert by_bucket[t0 + dt.timedelta(hours=1)].filled is False
     assert by_bucket[t0 + dt.timedelta(hours=3)].volume == 7.0
     assert by_bucket[t0 + dt.timedelta(hours=2)].filled is True
-    # empty in-range fetch: a full dummy series, not zero rows
-    empty = candles.limit(0)
-    dummies = gap_fill_series(
-        empty, "1h", start=t0, end=t0 + dt.timedelta(hours=2)
-    ).collect()
-    assert len(dummies) == 3 and all(r.filled for r in dummies)
 
     # 3. AVG ignores NULLs
     mv = spark.createDataFrame(

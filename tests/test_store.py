@@ -15,8 +15,8 @@ from coin_for_rich_spark.sources import candles_view, load_table
 from coin_for_rich_spark.sources.store import (
     load_rollups,
     materialize_rollups,
-    prune_time_range,
     read_partitioned,
+    time_range_sql,
     write_partitioned,
 )
 
@@ -37,7 +37,10 @@ def test_roundtrip_preserves_rows(spark, sf_dir, store):
 
 def test_time_range_prunes_partitions(spark, store):
     back = read_partitioned(spark, store)
-    pruned = prune_time_range(back, "ts", start="2024-01-10 00:00:00", end="2024-01-12 23:59:59")
+    pruned = spark.sql(
+        f"SELECT * FROM {{df}} WHERE {time_range_sql('ts', True, True)}",
+        args={"start": "2024-01-10 00:00:00", "end": "2024-01-12 23:59:59"}, df=back,
+    )
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -170,36 +173,21 @@ def test_utc_day_is_session_timezone_independent(spark):
 
     from pyspark.sql import functions as F
 
-    from coin_for_rich_spark.sources.store import utc_day
+    from coin_for_rich_spark.sources.store import utc_day_sql
 
     ts = dt.datetime(2024, 1, 11, 3, 0, tzinfo=dt.timezone.utc)
     df = spark.createDataFrame([(ts,)], "ts timestamp")
-    utc_val = df.select(utc_day(F.col("ts")).alias("d")).first().d
+    utc_val = df.select(F.expr(utc_day_sql("ts")).alias("d")).first().d
     tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        ny_val = df.select(utc_day(F.col("ts")).alias("d")).first().d
+        ny_val = df.select(F.expr(utc_day_sql("ts")).alias("d")).first().d
         # to_date (the old derivation) WOULD shift: 03:00Z = 22:00 prev day NY
         shifted = df.select(F.to_date(F.col("ts")).alias("d")).first().d
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
     assert utc_val == ny_val == dt.date(2024, 1, 11)
     assert shifted == dt.date(2024, 1, 10)
-
-
-def test_utc_day_sql_matches_column_twin(spark):
-    """The SQL text of utc_day cuts days exactly where the Column
-    expression does."""
-    import datetime as dt
-
-    from coin_for_rich_spark.sources.store import utc_day, utc_day_sql
-
-    ts = [dt.datetime(2024, 1, 10, 23, 59, 59, 999999), dt.datetime(2024, 1, 11),
-          dt.datetime(2023, 12, 31, 12, 30), dt.datetime(1999, 12, 31, 23, 59, 59)]
-    df = spark.createDataFrame([(t,) for t in ts], "ts timestamp")
-    pairs = df.select(utc_day(F.col("ts")).alias("c"), F.expr(utc_day_sql("ts")).alias("s"))
-    assert pairs.dtypes == [("c", "date"), ("s", "date")]
-    assert all(r.c == r.s for r in pairs.collect())
 
 
 def test_incremental_write_keeps_other_partitions(spark, tmp_path):
