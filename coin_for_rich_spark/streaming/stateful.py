@@ -74,10 +74,6 @@ STATE_SCHEMA = T.StructType(
 
 _MINUTE_US = 60_000_000
 
-#: the reference's stale-flush threshold (`fetchers/ws/updater.py:30`):
-#: candles held longer than this are force-emitted even with no later data
-DATA_HELD_MS_THRESHOLD = 3_600_000
-
 #: drop-mode tombstone TTL, as a multiple of ``stale_ms``: a key whose
 #: state is only the emit-once watermark keeps suppressing replays for
 #: this horizon, then its state is reclaimed (a replay arriving later
@@ -358,9 +354,10 @@ def hold_back_collector(
     candle closes only on later data — bounded deterministic replays
     withhold the final open candle exactly like the updater. An int arms a
     ``ProcessingTimeTimeout`` of that many ms on every state update, so a
-    candle held with no successor data is force-emitted once stale;
-    production passes ``DATA_HELD_MS_THRESHOLD`` (the reference's
-    DATA_HELD_MLS_THRESHOLD, `updater.py:30,165-176`).
+    candle held with no successor data is force-emitted once stale. The
+    reference's threshold is 1 h (DATA_HELD_MLS_THRESHOLD,
+    `updater.py:30,165-176`); no caller outside the tests sets
+    ``stale_ms``, so the stale flush is test-pinned only.
 
     ``late_policy`` picks between the two defensible late-data contracts:
 

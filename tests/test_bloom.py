@@ -1,6 +1,7 @@
-"""Bloom membership sketch pins (llmdata/bloom.py): the DuckDB twin of
-the contamination probe plus the sketch contracts — zero false negatives,
-mergeability via bit_or, bounded false-positive rate, null handling."""
+"""Bloom membership sketch pins (llmdata/bloom.py): the sketch contracts —
+zero false negatives, mergeability via bit_or, bounded false-positive
+rate, null handling. Each row's DuckDB twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -12,20 +13,6 @@ from coin_for_rich_spark.llmdata.bloom import (
     bloom_positions,
     bloom_probe,
 )
-
-
-def test_bloom_probe_matches_duckdb_twin(spark, sf_dir, duck):
-    """Bitmap words AND membership bits re-derived exactly — including
-    deterministic false positives (also proven at sf0.001/0.01/0.1 this
-    round, COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_bloom_probe(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._bloom_probe_oracle_sql()).df()
-    problems = compare("bloom_probe", sdf, odf)
-    assert not problems, problems
 
 
 def test_no_false_negatives(spark):

@@ -1,6 +1,7 @@
-"""BM25 retrieval (llmdata/bm25.py): DuckDB twin of the banked gate row,
-a pure-Python formula oracle on a planted corpus, tie-break determinism,
-salted/unsalted equivalence, edge cases, and the plan contract."""
+"""BM25 retrieval (llmdata/bm25.py): a pure-Python formula oracle on a
+planted corpus, tie-break determinism, salted/unsalted equivalence, edge
+cases, and the plan contract. Each row's DuckDB twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -17,24 +18,6 @@ def _docs(spark, rows):
 
 def _queries(spark, rows):
     return spark.createDataFrame(rows, "query_id bigint, text string")
-
-
-# ---------------------------------------------------------------- twin
-
-
-def test_bm25_topk_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (score, match counts, AND rank) — also proven at
-    sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_bm25_topk(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    assert sdf.groupby("query_id")["rank"].max().eq(10).all()
-    odf = duck.execute(entry_mod._bm25_topk_oracle_sql()).df()
-    problems = compare("bm25_topk", sdf, odf)
-    assert not problems, problems
 
 
 # ------------------------------------------------------------- formula
@@ -177,20 +160,6 @@ def test_bm25_terms_are_normalized(spark):
 # ------------------------------------------------------------ keywords
 
 
-def test_tfidf_keywords_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin — also proven at sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_tfidf_keywords(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    assert sdf.groupby("doc_id")["rank"].max().le(3).all()
-    odf = duck.execute(entry_mod._tfidf_keywords_oracle_sql()).df()
-    problems = compare("tfidf_keywords", sdf, odf)
-    assert not problems, problems
-
-
 def test_tfidf_keywords_formula_and_ties(spark):
     """tf·idf ranks the doc-specific rare term over the corpus-wide
     common one; equal (tf, df) profiles tie and break by term asc."""
@@ -225,10 +194,10 @@ def test_bm25_plan_broadcasts_queries_not_corpus(spark, sf_dir):
     """100 TB posture pin: the query side reaches the postings through
     BroadcastHashJoin (the corpus is never reshuffled for a query
     batch), and no sort-merge join appears anywhere."""
-    import __spark_entry__ as entry_mod
+    from tests.pinned_rows import q_bm25_topk
 
     plan = (
-        entry_mod.q_bm25_topk(spark, sf_dir)
+        q_bm25_topk(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

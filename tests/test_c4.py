@@ -1,7 +1,7 @@
-"""C4 line-level cleaning (llmdata/c4.py): DuckDB twin of the banked gate
-row, planted-text branch coverage for the rules the synthetic corpus
-cannot fire, physical-line vs segment paths, rule validation, and the
-plan contract."""
+"""C4 line-level cleaning (llmdata/c4.py): planted-text branch coverage for
+the rules the synthetic corpus cannot fire, physical-line vs segment
+paths, rule validation, and the plan contract. Each row's DuckDB twin is
+checked in test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -12,29 +12,6 @@ from coin_for_rich_spark.llmdata.c4 import C4_DEFAULTS, c4_clean
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-# ---------------------------------------------------------------- twin
-
-
-def test_c4_clean_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (line counts, per-rule drop counts, the rebuilt clean_text AND
-    the page_reject_reasons audit string) — also proven at
-    sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_c4_clean(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    # the gate rules must produce a real decision split AND real line
-    # repair, not constant columns (that was the point of tuning them)
-    assert 0 < sdf["keep"].mean() < 1
-    assert (sdf["n_lines_kept"] < sdf["n_lines"]).any()
-    assert (sdf["n_lines_kept"] == sdf["n_lines"]).any()
-    odf = duck.execute(entry_mod._c4_clean_oracle_sql()).df()
-    problems = compare("c4_clean", sdf, odf)
-    assert not problems, problems
 
 
 # ------------------------------------------------------ rule branches
@@ -189,10 +166,10 @@ def test_c4_plan_is_scan_stage_only(spark, sf_dir):
     algebra in the scan stage — no Exchange, no Python node (the
     explode→groupBy alternative would shuffle every line of the
     corpus)."""
-    import __spark_entry__ as entry_mod
+    from tests.pinned_rows import q_c4_clean
 
     plan = (
-        entry_mod.q_c4_clean(spark, sf_dir)
+        q_c4_clean(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -1,6 +1,7 @@
-"""Count-Min-Sketch tier pins (llmdata/cms.py): the full-value DuckDB
-twin plus the sketch contracts — no underestimate ever, sum-mergeability,
-weighted build, Arrow-fallback/literal path equality, geometry guards."""
+"""Count-Min-Sketch tier pins (llmdata/cms.py): the sketch contracts — no
+underestimate ever, sum-mergeability, weighted build,
+Arrow-fallback/literal path equality, geometry guards. Each row's DuckDB
+twin is checked in test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -12,20 +13,6 @@ from coin_for_rich_spark.llmdata.cms import (
     cms_estimate,
     cms_positions,
 )
-
-
-def test_cms_topgrams_matches_duckdb_twin(spark, sf_dir, duck):
-    """Matrix cells, min-estimates, exact counts, and the never_under
-    contract column re-derived bit-for-bit (all integers — no float
-    routing anywhere in the tier)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_cms_topgrams(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._cms_topgrams_oracle_sql()).df()
-    problems = compare("cms_topgrams", sdf, odf)
-    assert not problems, problems
 
 
 def test_cms_never_underestimates(spark):

@@ -938,22 +938,3 @@ def test_jpeg_422_subsampling_round_trips():
     assert np.array_equal(
         base, jpeg_decode(jpeg_encode_rgb_progressive(px, subsampling="4:2:2"))
     )
-
-
-def test_media_decode_matches_duckdb_twin(spark, sf_dir, duck):
-    """The full encode→bytes→decode codec round trip, hash-exact against
-    its formula-only DuckDB twin — preserved as a pytest pin after
-    ``media_decode`` rotated OUT of the driver gate in r13 (swapped for
-    ``web_preprocess``; the attach→mapInPandas→stats plumbing keeps its
-    gate row through ``frame_sample``). The oracle never parses a byte:
-    it recomputes count/sum/min/max of the decoded pixels/samples straight
-    from the generation formulas, so agreement certifies the real PNG /
-    PCM16 / G.711 mu-law decoders end to end."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_media_decode(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._media_decode_oracle_sql()).df()
-    problems = compare("media_decode", sdf, odf)
-    assert not problems, problems

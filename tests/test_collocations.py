@@ -1,6 +1,7 @@
-"""PMI collocation mining (llmdata/collocations.py): DuckDB twin of the
-banked gate row, a scalar-Python formula oracle on a planted corpus,
-floor/tie/edge behavior, and the plan contract."""
+"""PMI collocation mining (llmdata/collocations.py): a scalar-Python
+formula oracle on a planted corpus, floor/tie/edge behavior, and the
+plan contract. Each row's DuckDB twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -13,24 +14,6 @@ from coin_for_rich_spark.llmdata.collocations import pmi_collocations
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-# ---------------------------------------------------------------- twin
-
-
-def test_pmi_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (counts, round-6 PMI, AND the top-m rank) — also proven at
-    sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_pmi_collocations(spark, sf_dir).toPandas()
-    assert len(sdf) == 50
-    assert list(sdf.sort_values("rank")["rank"]) == list(range(1, 51))
-    odf = duck.execute(entry_mod._pmi_collocations_oracle_sql()).df()
-    problems = compare("pmi_collocations", sdf, odf)
-    assert not problems, problems
 
 
 # ------------------------------------------------------------- formula
@@ -129,10 +112,10 @@ def test_pmi_edges(spark):
 def test_pmi_plan_takeordered_not_full_sort(spark, sf_dir):
     """100 TB posture pin: the global cut is TakeOrdered (per-partition
     heaps), not a corpus-wide Sort→Limit, and no Python node appears."""
-    import __spark_entry__ as entry_mod
+    from tests.pinned_rows import q_pmi_collocations
 
     plan = (
-        entry_mod.q_pmi_collocations(spark, sf_dir)
+        q_pmi_collocations(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

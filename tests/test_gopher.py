@@ -1,6 +1,7 @@
-"""Gopher-rules quality filter (llmdata/gopher.py): DuckDB twin of the
-banked gate row, planted-text branch coverage for the rules the synthetic
-corpus cannot fire, threshold validation, and the plan contract."""
+"""Gopher-rules quality filter (llmdata/gopher.py): planted-text branch
+coverage for the rules the synthetic corpus cannot fire, threshold
+validation, and the plan contract. Each row's DuckDB twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -11,26 +12,6 @@ from coin_for_rich_spark.llmdata.gopher import GOPHER_DEFAULTS, gopher_filter
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-# ---------------------------------------------------------------- twin
-
-
-def test_gopher_filter_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (signals AND the comma-joined reject_reasons audit string) —
-    also proven at sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_gopher_filter(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    # the gate thresholds must produce a real decision split, not a
-    # constant column (that was the point of tightening them)
-    assert 0 < sdf["keep"].mean() < 1
-    odf = duck.execute(entry_mod._gopher_filter_oracle_sql()).df()
-    problems = compare("gopher_filter", sdf, odf)
-    assert not problems, problems
 
 
 # ------------------------------------------------------ rule branches
@@ -100,10 +81,10 @@ def test_gopher_plan_is_scan_stage_only(spark, sf_dir):
     """100 TB posture pin: the decision is one fused select in the scan
     stage — no Exchange, no Python node; downstream `filter(keep)` is a
     Catalyst-pushable predicate."""
-    import __spark_entry__ as entry_mod
+    from tests.pinned_rows import q_gopher_filter
 
     plan = (
-        entry_mod.q_gopher_filter(spark, sf_dir)
+        q_gopher_filter(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -88,21 +88,6 @@ def test_line_dedup_all_boilerplate_doc_rebuilds_empty(spark):
     assert out[1]["clean_text"] == "" and out[1]["n_lines_dropped"] == 1
 
 
-def test_hard_negatives_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (the embed_knn_join pairwise construction + band + re-rank) —
-    also proven at sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_hard_negatives(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    assert sdf["cosine"].between(0.22, 0.35, inclusive="left").all()
-    odf = duck.execute(entry_mod._hard_negatives_oracle_sql()).df()
-    problems = compare("hard_negatives", sdf, odf)
-    assert not problems, problems
-
-
 def test_hard_negatives_excludes_disguised_positives(spark):
     """A planted near-duplicate of the anchor (cosine ≈ 1, above hi)
     must NOT appear as a negative; the in-band vectors do, hardest
@@ -141,23 +126,6 @@ def test_hard_negatives_excludes_disguised_positives(spark):
         hard_negatives(df, sim_lo=0.5, sim_hi=0.5)
     with _pytest.raises(ValueError, match="knn_k"):
         hard_negatives(df, n_neg=5, knn_k=3)
-
-
-def test_intra_dedup_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (rebuilt text AND drop counts) — also proven at
-    sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_intra_dedup(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    # the k=2 gate segmentation must exercise BOTH branches
-    assert (sdf["n_lines_dropped"] > 0).any()
-    assert (sdf["n_lines_dropped"] == 0).any()
-    odf = duck.execute(entry_mod._intra_dedup_oracle_sql()).df()
-    problems = compare("intra_dedup", sdf, odf)
-    assert not problems, problems
 
 
 def test_intra_doc_line_dedup_semantics(spark):
@@ -248,9 +216,9 @@ def test_simhash_gate_contract_pinned(spark, sf_dir):
     OUT of the driver gate in r12 (swapped for span_corruption; its oracle
     row was a constant, so the checkable content always lived in the engine
     side pinned here)."""
-    import __spark_entry__ as entry_mod
+    from tests.pinned_rows import q_simhash_pairs
 
-    rows = entry_mod.q_simhash_pairs(spark, sf_dir).collect()
+    rows = q_simhash_pairs(spark, sf_dir).collect()
     assert len(rows) == 1
     assert rows[0]["pigeonhole_exact"] is True
     assert rows[0]["n_missing"] == 0 and rows[0]["n_extra"] == 0
@@ -726,19 +694,6 @@ def test_bloom_prefilter_cascade_equals_exact(spark):
     assert len(surv_ids) < train.count()      # but the scan DID shrink
     # and at default FPR virtually all clean docs are gone
     assert len(surv_ids) <= 10, surv_ids
-
-
-def test_contamination_spans_matches_duckdb_twin(spark, sf_dir, duck):
-    """The span-severity tier's full-value twin: positional shingle join +
-    diagonal gaps-and-islands re-derived exactly (all integers)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_contamination_spans(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._contamination_spans_oracle_sql()).df()
-    problems = compare("contamination_spans", sdf, odf)
-    assert not problems, problems
 
 
 def test_contamination_spans_planted_severity(spark):
@@ -1444,36 +1399,6 @@ def test_sample_frames_half_open_duration(spark):
     # exact-multiple duration: no tick at duration_ms (half-open, matching
     # sample_real_frames)
     assert out == [0, 1000, 2000]
-
-
-def test_embed_knn_join_matches_duckdb_twin(spark, sf_dir, duck):
-    """The exact-cosine kNN JOIN's every-row oracle, hash-exact against its
-    DuckDB twin — preserved as a pytest pin after ``embed_knn_join``
-    rotated OUT of the driver gate in r14 (swapped for
-    ``video_keyframes``; the exact-cosine family keeps gate coverage
-    through ``embed_neardup``'s GEMM-blocked kernel and the ANN recall
-    rows this join certifies)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_embed_knn_join(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._embed_knn_join_oracle_sql()).df()
-    problems = compare("embed_knn_join", sdf, odf)
-    assert not problems, problems
-
-
-def test_length_quantiles_matches_duckdb_twin(spark, sf_dir, duck):
-    """Exact grouped quantiles (textstats.grouped_quantiles) vs the same
-    all-integer histogram/rank formula in DuckDB — bit-exact, no floats."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_length_quantiles(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._length_quantiles_oracle_sql()).df()
-    problems = compare("length_quantiles", sdf, odf)
-    assert not problems, problems
 
 
 def test_grouped_quantiles_closed_form():

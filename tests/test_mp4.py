@@ -387,22 +387,6 @@ def test_spark_video_keyframe_index(spark, sf_dir):
     assert per_media and all(v >= 1 for v in per_media.values())
 
 
-def test_video_keyframes_matches_duckdb_twin(spark, sf_dir, duck):
-    """The r14 swap-in candidate, committed + proven one round before any
-    declaration per the rotation discipline: the keyframe index over the
-    real gry8 containers vs a formula-only DuckDB twin that predicts every
-    row — ABSOLUTE byte offsets included — without parsing a byte (muxer
-    layout contract: 20-byte ftyp + 8-byte mdat header + cumulative w*h)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_video_keyframes(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._video_keyframes_oracle_sql()).df()
-    problems = compare("video_keyframes", sdf, odf)
-    assert not problems, problems
-
-
 def test_mp4_mux_avc1_package_muxer_roundtrip():
     """The package muxer (mp4.mp4_mux_avc1, promoted from this file's
     hand-mux helper in r14) produces containers the demuxer reads back
@@ -421,20 +405,3 @@ def test_mp4_mux_avc1_package_muxer_roundtrip():
     offs = [r[1] for r in vid.keyframe_byte_ranges()]
     assert offs == [28, 28 + 50 + 20 + 30, 28 + 50 + 20 + 30 + 60 + 10 + 40]
     assert [r[2] for r in vid.keyframe_byte_ranges()] == [50, 60, 25]
-
-
-def test_video_keyframes_avc_matches_duckdb_twin(spark, sf_dir, duck):
-    """The r15 swap-in candidate, committed + proven one round before any
-    declaration per the rotation discipline: the keyframe index over REAL
-    avc1 containers (avcC decoder config + stss sync table) vs a
-    formula-only DuckDB twin that predicts every row — RFC 6381 strings
-    and ABSOLUTE byte offsets included — without parsing a byte."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_video_keyframes_avc(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    assert set(sdf["rfc6381"].str[:5]) == {"avc1."}
-    odf = duck.execute(entry_mod._video_keyframes_avc_oracle_sql()).df()
-    problems = compare("video_keyframes_avc", sdf, odf)
-    assert not problems, problems

@@ -498,52 +498,3 @@ def test_operator_core_review_hardening(spark):
     ).first()
     assert b.w == dt.datetime(2024, 1, 8)  # Monday of that week
     assert b.d == dt.datetime(2024, 1, 10) and b.h == dt.datetime(2024, 1, 10)
-
-
-def test_brand_revenue_matches_duckdb_twin(spark, sf_dir, duck):
-    """J2's left-outer-decorate aggregate, hash-exact against its DuckDB
-    twin — preserved as a pytest pin after ``brand_revenue`` rotated OUT
-    of the driver gate in r15 (swapped for ``video_keyframes_avc``; the
-    fact×dim join family keeps gate coverage through ``top_customers``
-    and ``region_supplier_volume``)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_brand_revenue(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._brand_revenue_oracle_sql()).df()
-    problems = compare("brand_revenue", sdf, odf)
-    assert not problems, problems
-
-
-def test_count_distinct_matches_duckdb_twin(spark, sf_dir, duck):
-    """A7's exact tuple-distinct + HLL-accuracy contract, hash-exact
-    against its DuckDB twin — preserved as a pytest pin after
-    ``count_distinct`` rotated OUT of the driver gate in r15 (swapped for
-    ``winnow_overlap``; the sketch contract keeps independent pins in
-    tests/test_sketches.py, exact distinct keeps gate presence through
-    ``dedup_pk``'s tuple dedup)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_count_distinct(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._count_distinct_oracle_sql()).df()
-    problems = compare("count_distinct", sdf, odf)
-    assert not problems, problems
-
-
-def test_gap_detect_matches_duckdb_twin(spark, sf_dir, duck):
-    """W1's exact-µs LEAD gap contract, hash-exact against its DuckDB twin
-    — preserved as a pytest pin after ``gap_detect`` rotated OUT of the
-    driver gate in r13 (swapped for ``stream_rollup_1d``; the bounded-LEAD
-    window family keeps gate coverage through ``geo_daily_return`` and
-    ``chart_read_gapfill``)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_gap_detect(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._gap_detect_oracle_sql()).df()
-    problems = compare("gap_detect", sdf, odf)
-    assert not problems, problems

@@ -1,6 +1,7 @@
-"""PII detection/redaction tier (llmdata/pii.py): DuckDB twin of the
-banked gate row, closed-form Luhn pins, planted-text extraction, the
-zero-shuffle/zero-UDF plan contract, and redaction fixpoint."""
+"""PII detection/redaction tier (llmdata/pii.py): closed-form Luhn pins,
+planted-text extraction, the zero-shuffle/zero-UDF plan contract, and
+redaction fixpoint. Each row's DuckDB twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -11,25 +12,6 @@ from coin_for_rich_spark.llmdata.pii import luhn_valid, pii_audit
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-# ---------------------------------------------------------------- twin
-
-
-def test_pii_audit_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (also proven at sf0.001/0.01/0.1 this round — COVERAGE.md).
-    The twin's SELECT list is BUILT from the shared pattern fragments
-    (pii_oracle_exprs), so a pattern edit that forgets one side fails
-    here, not in the driver gate."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_pii_audit(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._pii_audit_oracle_sql()).df()
-    problems = compare("pii_audit", sdf, odf)
-    assert not problems, problems
 
 
 # ---------------------------------------------------------------- Luhn
@@ -109,10 +91,10 @@ def test_pii_audit_plan_is_scan_stage_only(spark, sf_dir):
     """100 TB posture pin: the audit is one select in the scan stage —
     no Exchange (zero shuffles) and no Python evaluation node (the Luhn
     fold and every count stay in JVM column algebra)."""
-    import __spark_entry__ as entry_mod
+    from tests.pinned_rows import q_pii_audit
 
     plan = (
-        entry_mod.q_pii_audit(spark, sf_dir)
+        q_pii_audit(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -421,38 +421,6 @@ def test_epoch_shuffle_is_layout_invariant_and_seeded(spark):
         epoch_shuffle(docs, 0)
 
 
-def test_doc_scrub_matches_duckdb_twin(spark, sf_dir, duck):
-    """The full doc_scrub gate contract (scrubbed strings + all three audit
-    counts, every document, bit-exact) — preserved as a pytest pin after
-    doc_scrub rotated OUT of the driver gate in r11 (swapped for
-    span_dedup; the scrub still executes inside the declared
-    corpus_curation row)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_doc_scrub(spark, sf_dir).toPandas()
-    odf = duck.execute(entry_mod._doc_scrub_oracle_sql()).df()
-    problems = compare("doc_scrub", sdf, odf)
-    assert not problems, problems
-
-
-def test_epoch_shuffle_matches_duckdb_xxh64_twin(spark, sf_dir, duck):
-    """The hash-exact DuckDB twin (XXH64 closed form re-deriving Spark's
-    xxhash64(doc_id, seed) chain, then the same pmod) — preserved as a
-    pytest pin after epoch_shuffle rotated OUT of the driver gate in r10
-    (swapped for leakage_split; every ord and shard value stays checked
-    here, not just the layout-invariance property above)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_epoch_shuffle(spark, sf_dir).toPandas()
-    odf = duck.execute(
-        entry_mod._epoch_shuffle_oracle_sql(seed=7, n_shards=8)
-    ).df()
-    problems = compare("epoch_shuffle", sdf, odf)
-    assert not problems, problems
-
-
 def test_epoch_shuffle_composes_with_bpe_packing(spark):
     """The training-prep chain: BPE-tokenize → epoch-shuffle → pack — the
     composition every pretraining pipeline runs, end to end."""
@@ -634,19 +602,3 @@ def test_text_tier_edge_and_composition_hardening(spark):
     assert 0.15 * n_hold < n_draw < 0.35 * n_hold, (n_hold, n_draw)
     with pytest.raises(ValueError, match="alpha"):
         train_char_lm(df.filter("text IS NOT NULL"), alpha=0.0)
-
-
-def test_span_corruption_matches_duckdb_xxh64_twin(spark, sf_dir, duck):
-    """The full span-corruption contract vs a first-principles DuckDB twin
-    (closed-form XXH64 over the (doc_id, block, seed) chain, run numbering,
-    sentinel interleave, ordered reassembly, closing sentinel) — committed
-    and proven in r11, one round BEFORE declaration per the rotation
-    discipline; DECLARED in the driver gate as of r12 (swapped in for
-    simhash_pairs), where the oracle runs side-by-side per round."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_span_corruption(spark, sf_dir).toPandas()
-    odf = duck.execute(entry_mod._span_corruption_oracle_sql()).df()
-    problems = compare("span_corruption", sdf, odf)
-    assert not problems, problems

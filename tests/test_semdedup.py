@@ -1,6 +1,7 @@
-"""SemDeDup tier pins (llmdata/semdedup.py): the full-value DuckDB twin
-plus the paper-rule contracts — keep-farthest-from-centroid ranking,
-within-cell dominance only, and Arrow-UDF/codegen path equality."""
+"""SemDeDup tier pins (llmdata/semdedup.py): the paper-rule contracts —
+keep-farthest-from-centroid ranking, within-cell dominance only, and
+Arrow-UDF/codegen path equality. Each row's DuckDB twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -12,20 +13,6 @@ from coin_for_rich_spark.llmdata.semdedup import (
     _affinity_udf,
     semdedup,
 )
-
-
-def test_semdedup_matches_duckdb_twin(spark, sf_dir, duck):
-    """Hash-exact vs the first-principles twin (XXH64-ranked centroids,
-    clamped/unclamped norm split, dominance EXISTS) — also proven at
-    sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_semdedup(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._semdedup_oracle_sql()).df()
-    problems = compare("semdedup", sdf, odf)
-    assert not problems, problems
 
 
 def test_semdedup_planted_duplicates(spark):

@@ -1,7 +1,7 @@
-"""SFT chat-template assembly (llmdata/sft.py): DuckDB twin of the
-banked gate row, handcrafted span extraction (the property that
-matters: slicing the text by the spans returns exactly the assistant
-contents), null/empty edges, and the plan contract."""
+"""SFT chat-template assembly (llmdata/sft.py): handcrafted span extraction
+(the property that matters: slicing the text by the spans returns
+exactly the assistant contents), null/empty edges, and the plan
+contract. Each row's DuckDB twin is checked in test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -15,26 +15,6 @@ def _convs(spark, rows):
         rows,
         "conv_id bigint, turns array<struct<role:string,content:string>>",
     )
-
-
-# ---------------------------------------------------------------- twin
-
-
-def test_sft_render_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r16-fuel row, hash-exact vs its first-principles DuckDB
-    twin (rendered text AND the loss-span string are byte-compared) —
-    also proven at sf0.001/0.01/0.1 this round (COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_sft_render(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    # multi-turn docs exist, and so do single-turn (user-only, no loss)
-    assert (sdf["n_assistant_turns"] > 0).any()
-    assert (sdf["n_assistant_turns"] == 0).any()
-    odf = duck.execute(entry_mod._sft_render_oracle_sql()).df()
-    problems = compare("sft_render", sdf, odf)
-    assert not problems, problems
 
 
 # ------------------------------------------------------------ property
@@ -122,10 +102,10 @@ def test_sft_plan_is_scan_stage_only(spark, sf_dir):
     """100 TB posture pin: the whole render (derivation + fold + audit
     columns) is in-row — no Exchange, no Window, no Python node; the
     explode→window alternative would shuffle every turn."""
-    import __spark_entry__ as entry_mod
+    from tests.pinned_rows import q_sft_render
 
     plan = (
-        entry_mod.q_sft_render(spark, sf_dir)
+        q_sft_render(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

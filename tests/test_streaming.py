@@ -798,58 +798,3 @@ def test_latest_value_serve_deterministic_ts_tie(spark):
     for _ in range(3):  # stable under repeated evaluation
         row = latest_value_serve(df).collect()[0]
         assert (row.price, row.ts) == (9.0, t)
-
-
-def test_stream_rollup_1h_matches_duckdb_twin(spark, sf_dir, duck):
-    """The full explicit-watermark streamed-hourly gate contract (every
-    closed bucket, bit-exact) — preserved as a pytest pin after
-    stream_rollup_1h rotated OUT of the driver gate in r11 (swapped for
-    stream_late_correction; the policy-derived watermark keeps its
-    declared stream_rollup_5m row)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_stream_rollup_1h(spark, sf_dir).toPandas()
-    odf = duck.execute(entry_mod._stream_rollup_1h_oracle_sql()).df()
-    problems = compare("stream_rollup_1h", sdf, odf)
-    assert not problems, problems
-
-
-@pytest.mark.parametrize("interval", ["15m", "30m", "6h", "12h", "7D"])
-def test_stream_rollup_all_fixed_resolutions_match_duckdb_twin(
-    spark, sf_dir, duck, interval
-):
-    """EVERY remaining fixed-width conagg resolution streamed and pinned
-    (r12): with the declared 5m row and the 1h/1d pins this covers the
-    reference's full fixed-width policy family (create.sql:345-381) —
-    each resolution's policy-derived watermark publishes exactly the
-    buckets whose end clears max(ts) − end_offset, hash-exact against the
-    generic twin. '1M' stays batch-only by design (calendar months have no
-    fixed streaming window width — see streaming_ohlcv_rollup's guard)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_stream_rollup(spark, sf_dir, interval).toPandas()
-    assert len(sdf) > 0, f"{interval}: the 30-day replay must close buckets"
-    odf = duck.execute(entry_mod._stream_rollup_oracle_sql(interval)).df()
-    problems = compare(f"stream_rollup_{interval}", sdf, odf)
-    assert not problems, problems
-
-
-def test_stream_rollup_1d_matches_duckdb_twin(spark, sf_dir, duck):
-    """The THIRD streamed conagg resolution (r12): the daily tier with its
-    policy-derived watermark (CONAGG_POLICIES['1D'] end_offset '1 day'),
-    hash-exact against a DuckDB twin that applies the same publication-lag
-    filter — DECLARED in the driver gate since r13 (swap-in for
-    gap_detect); this pin stays as the local fast replica. The daily
-    window is the first whose span covers MANY micro-batches, so this also
-    pins cross-batch state survival (every replay chunk updates open daily
-    windows; only the final watermark advance publishes)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_stream_rollup_1d(spark, sf_dir).toPandas()
-    assert len(sdf) > 0, "daily policy must emit closed buckets on a 30-day replay"
-    odf = duck.execute(entry_mod._stream_rollup_1d_oracle_sql()).df()
-    problems = compare("stream_rollup_1d", sdf, odf)
-    assert not problems, problems

@@ -1,6 +1,7 @@
-"""WebDataset-style tar shard export (llmdata/tarshard.py): formula-
-oracle gate twin, plan≡realized-bytes certification, stdlib-tarfile
-interoperability, determinism, and header-walk safety."""
+"""WebDataset-style tar shard export (llmdata/tarshard.py):
+plan≡realized-bytes certification, stdlib-tarfile interoperability,
+determinism, and header-walk safety. Each row's DuckDB twin is checked
+in test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -14,20 +15,6 @@ from coin_for_rich_spark.llmdata.tarshard import (
     tar_header,
     tar_index,
 )
-
-
-def test_tar_export_matches_duckdb_twin(spark, sf_dir, duck):
-    """The gate-style row: engine writes real ustar bytes and indexes
-    them back; the oracle predicts every offset/length/md5 from
-    byte-length algebra without building a tar."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_tar_export(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._tar_export_oracle_sql()).df()
-    problems = compare("tar_export", sdf, odf)
-    assert not problems, problems
 
 
 def test_plan_equals_realized_bytes(spark):

@@ -1,6 +1,7 @@
-"""WARC crawl-archive ingest (llmdata/warc.py): formula-oracle gate twin,
-the per-member-gzip wire shape, header-grammar generality, the typed
-dead-letter contract, and the records→documents composition."""
+"""WARC crawl-archive ingest (llmdata/warc.py): the per-member-gzip wire
+shape, header-grammar generality, the typed dead-letter contract, and
+the records→documents composition. Each row's DuckDB twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -29,21 +30,6 @@ def _recs(n: int = 5) -> list[bytes]:
         )
         for i in range(n)
     ]
-
-
-def test_warc_extract_matches_duckdb_twin(spark, sf_dir, duck):
-    """The gate-style row: engine parses real WARC bytes back to offsets/
-    lengths/status/md5; the oracle predicts every integer from the
-    serialization formulas without touching a byte."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_warc_extract(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    assert (sdf["parse_error"].isna().all() if "parse_error" in sdf else True)
-    odf = duck.execute(entry_mod._warc_extract_oracle_sql()).df()
-    problems = compare("warc_extract", sdf, odf)
-    assert not problems, problems
 
 
 def test_gzip_members_equal_plain_and_slice_standalone():

@@ -138,21 +138,3 @@ def test_html_entities_no_double_decode_and_null(spark):
     )
     row = extract_html_text(df).first()
     assert row.n_lines == 0
-
-
-def test_web_preprocess_matches_duckdb_twin(spark, sf_dir, duck):
-    """The full web-preprocessing contract vs a first-principles DuckDB twin
-    (html_text + canonical_url re-derived step-for-step; RE2 has no
-    lookahead, so the second-'?' tracking-param disguise is a capture-group
-    rewrite on the oracle side) over a deterministic adversarial HTML/URL
-    wrapping of the documents table. Committed and proven in r12 at
-    sf0.001/sf0.01/sf0.1/edge/sf1 BEFORE declaration per the rotation
-    discipline; DECLARED in the driver gate since r13 (swap-in for
-    media_decode) — this pin stays as the local fast replica."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_web_preprocess(spark, sf_dir).toPandas()
-    odf = duck.execute(entry_mod._web_preprocess_oracle_sql()).df()
-    problems = compare("web_preprocess", sdf, odf)
-    assert not problems, problems

@@ -1,8 +1,8 @@
 """Winnowing fingerprint tier (llmdata/winnow.py) and DSIR selection tier
-(llmdata/dsir.py): DuckDB twins of both r14-banked queries plus the paper
-contracts — the winnowing detection/noise guarantees (Schleimer et al.
-2003 §2) and the DSIR selection determinism (Xie et al. 2023, deterministic
-top-k variant)."""
+(llmdata/dsir.py): the paper contracts — the winnowing detection/noise
+guarantees (Schleimer et al. 2003 §2) and the DSIR selection determinism
+(Xie et al. 2023, deterministic top-k variant). Each row's DuckDB twin
+is checked in test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -22,35 +22,6 @@ from coin_for_rich_spark.llmdata.dsir import (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-# ---------------------------------------------------------------- twins
-
-
-def test_winnow_overlap_matches_duckdb_twin(spark, sf_dir, duck):
-    """The banked r15-fuel row, hash-exact vs its first-principles DuckDB
-    twin (also proven at sf0.001/0.01/0.1 this round — COVERAGE.md)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_winnow_overlap(spark, sf_dir).toPandas()
-    assert len(sdf) > 0
-    odf = duck.execute(entry_mod._winnow_overlap_oracle_sql()).df()
-    problems = compare("winnow_overlap", sdf, odf)
-    assert not problems, problems
-
-
-def test_dsir_select_matches_duckdb_twin(spark, sf_dir, duck):
-    """DSIR top-200 selection, hash-exact vs the DuckDB twin (libm-ln
-    model + VARCHAR-routed decimal cast + ce6 rounding)."""
-    import __spark_entry__ as entry_mod
-    from selfcheck import compare
-
-    sdf = entry_mod.q_dsir_select(spark, sf_dir).toPandas()
-    assert len(sdf) == 200
-    odf = duck.execute(entry_mod._dsir_select_oracle_sql()).df()
-    problems = compare("dsir_select", sdf, odf)
-    assert not problems, problems
 
 
 # ------------------------------------------------- winnowing contracts
