@@ -405,3 +405,36 @@ def test_mp4_mux_avc1_package_muxer_roundtrip():
     offs = [r[1] for r in vid.keyframe_byte_ranges()]
     assert offs == [28, 28 + 50 + 20 + 30, 28 + 50 + 20 + 30 + 60 + 10 + 40]
     assert [r[2] for r in vid.keyframe_byte_ranges()] == [50, 60, 25]
+
+
+def test_video_keyframes_matches_duckdb_twin(spark, sf_dir, duck):
+    """The keyframe index over the gry8 containers vs its formula-only
+    DuckDB twin, which predicts every row (absolute byte offsets included)
+    from the muxer layout alone: 20-byte ftyp + 8-byte mdat header +
+    cumulative w*h. Beyond the parity case it also requires a non-empty
+    index."""
+    import __spark_entry__ as entry_mod
+    from selfcheck import compare
+
+    sdf = entry_mod.q_video_keyframes(spark, sf_dir).toPandas()
+    assert len(sdf) > 0
+    odf = duck.execute(entry_mod._video_keyframes_oracle_sql()).df()
+    problems = compare("video_keyframes", sdf, odf)
+    assert not problems, problems
+
+
+def test_video_keyframes_avc_matches_duckdb_twin(spark, sf_dir, duck):
+    """The keyframe index over avc1 containers (avcC decoder config + stss
+    sync table) vs its formula-only DuckDB twin, which predicts the
+    RFC 6381 strings and absolute byte offsets without parsing a byte.
+    Beyond the parity case it also requires every codec string to be
+    avc1."""
+    import __spark_entry__ as entry_mod
+    from selfcheck import compare
+
+    sdf = entry_mod.q_video_keyframes_avc(spark, sf_dir).toPandas()
+    assert len(sdf) > 0
+    assert set(sdf["rfc6381"].str[:5]) == {"avc1."}
+    odf = duck.execute(entry_mod._video_keyframes_avc_oracle_sql()).df()
+    problems = compare("video_keyframes_avc", sdf, odf)
+    assert not problems, problems

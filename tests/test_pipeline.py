@@ -602,3 +602,17 @@ def test_text_tier_edge_and_composition_hardening(spark):
     assert 0.15 * n_hold < n_draw < 0.35 * n_hold, (n_hold, n_draw)
     with pytest.raises(ValueError, match="alpha"):
         train_char_lm(df.filter("text IS NOT NULL"), alpha=0.0)
+
+
+def test_span_corruption_matches_duckdb_xxh64_twin(spark, sf_dir, duck):
+    """The full span-corruption contract vs its first-principles DuckDB
+    twin: closed-form XXH64 over the (doc_id, block, seed) chain, run
+    numbering, sentinel interleave, ordered reassembly and the closing
+    sentinel."""
+    import __spark_entry__ as entry_mod
+    from selfcheck import compare
+
+    sdf = entry_mod.q_span_corruption(spark, sf_dir).toPandas()
+    odf = duck.execute(entry_mod._span_corruption_oracle_sql()).df()
+    problems = compare("span_corruption", sdf, odf)
+    assert not problems, problems

@@ -133,6 +133,22 @@ def test_matches_reference_on_randomized_dense_corpus(spark):
     _assert_matches(spark, rows, window=5)
 
 
+def test_matches_duckdb_oracle_twin(spark, sf_dir, duck):
+    """Hash-exact cross-engine pin: the DuckDB twin
+    (__spark_entry__._span_dedup_oracle_sql) re-derives window occurrences,
+    the ROW-min winner, gaps-and-islands range merging and the rebuild,
+    here against the library call itself rather than the query wrapper."""
+    import __spark_entry__ as entry_mod
+    from selfcheck import compare
+
+    sdf = repeated_span_dedup(
+        load_table(spark, sf_dir, "documents"), window=8
+    ).toPandas()
+    odf = duck.execute(entry_mod._span_dedup_oracle_sql(window=8)).df()
+    problems = compare("span_dedup", sdf, odf)
+    assert not problems, problems
+
+
 def test_layout_invariance_and_validation(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     a = {

@@ -798,3 +798,20 @@ def test_latest_value_serve_deterministic_ts_tie(spark):
     for _ in range(3):  # stable under repeated evaluation
         row = latest_value_serve(df).collect()[0]
         assert (row.price, row.ts) == (9.0, t)
+
+
+def test_stream_rollup_1d_matches_duckdb_twin(spark, sf_dir, duck):
+    """The daily streamed conagg tier with its policy-derived watermark
+    (CONAGG_POLICIES['1D'] end_offset '1 day'), hash-exact against a
+    DuckDB twin that applies the same publication-lag filter. The daily
+    window spans many micro-batches, so this also pins cross-batch state
+    survival: every replay chunk updates open daily windows and only the
+    final watermark advance publishes them."""
+    import __spark_entry__ as entry_mod
+    from selfcheck import compare
+
+    sdf = entry_mod.q_stream_rollup_1d(spark, sf_dir).toPandas()
+    assert len(sdf) > 0, "daily policy must emit closed buckets on a 30-day replay"
+    odf = duck.execute(entry_mod._stream_rollup_1d_oracle_sql()).df()
+    problems = compare("stream_rollup_1d", sdf, odf)
+    assert not problems, problems

@@ -138,3 +138,18 @@ def test_html_entities_no_double_decode_and_null(spark):
     )
     row = extract_html_text(df).first()
     assert row.n_lines == 0
+
+
+def test_web_preprocess_matches_duckdb_twin(spark, sf_dir, duck):
+    """The full web-preprocessing contract vs its first-principles DuckDB
+    twin: html_text and canonical_url re-derived step for step over a
+    deterministic adversarial HTML/URL wrapping of the documents table.
+    RE2 has no lookahead, so the twin rewrites the second-'?'
+    tracking-param disguise with a capture group."""
+    import __spark_entry__ as entry_mod
+    from selfcheck import compare
+
+    sdf = entry_mod.q_web_preprocess(spark, sf_dir).toPandas()
+    odf = duck.execute(entry_mod._web_preprocess_oracle_sql()).df()
+    problems = compare("web_preprocess", sdf, odf)
+    assert not problems, problems

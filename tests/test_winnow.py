@@ -1,8 +1,9 @@
 """Winnowing fingerprint tier (llmdata/winnow.py) and DSIR selection tier
 (llmdata/dsir.py): the paper contracts — the winnowing detection/noise
 guarantees (Schleimer et al. 2003 §2) and the DSIR selection determinism
-(Xie et al. 2023, deterministic top-k variant). Each row's DuckDB twin
-is checked in test_oracle_parity.py."""
+(Xie et al. 2023, deterministic top-k variant) — plus the winnow_overlap
+DuckDB twin pin. The dsir_select twin is checked in
+test_oracle_parity.py."""
 
 from __future__ import annotations
 
@@ -22,6 +23,19 @@ from coin_for_rich_spark.llmdata.dsir import (
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def test_winnow_overlap_matches_duckdb_twin(spark, sf_dir, duck):
+    """The winnow_overlap row, hash-exact vs its first-principles DuckDB
+    twin, and required to find at least one overlapping pair."""
+    import __spark_entry__ as entry_mod
+    from selfcheck import compare
+
+    sdf = entry_mod.q_winnow_overlap(spark, sf_dir).toPandas()
+    assert len(sdf) > 0
+    odf = duck.execute(entry_mod._winnow_overlap_oracle_sql()).df()
+    problems = compare("winnow_overlap", sdf, odf)
+    assert not problems, problems
 
 
 # ------------------------------------------------- winnowing contracts
